@@ -212,10 +212,12 @@ def graphs_breakdown(only=None):
 
 def cc_breakdown():
     """Time connected_components ALONE on a pre-materialized edge set of
-    the q_canonicalize shape, counting rounds."""
+    the q_canonicalize shape, then time its first rounds step by step
+    (perfbench's traced ``canon.cc_jobs`` reports the CC job count)."""
     from pyspark.sql import functions as F
 
     from case_uco_ontology_map_spark.operators import canonicalize as cz
+    from case_uco_ontology_map_spark.operators.barrier import materialize
 
     spark = make_spark()
     stage_dir, corpus = staged_corpus(spark)
@@ -249,22 +251,15 @@ def cc_breakdown():
             .localCheckpoint(eager=True)
         )
         n_edges = edges.count()
-        rounds = {"n": 0}
-        orig = cz._checkpoint_with_fingerprint
-
-        def counting(pairs, round_no):
-            rounds["n"] = max(rounds["n"], round_no)
-            return orig(pairs, round_no)
-
-        cz._checkpoint_with_fingerprint = counting
         out = {"n_edges": n_edges}
         out["cc"] = timed(
             spark,
             "cc only",
             lambda: cz.connected_components(edges).count(),
         )
-        out["rounds"] = rounds["n"]
-        cz._checkpoint_with_fingerprint = orig
+
+        def barrier(pairs):
+            return materialize(pairs, *cz._fingerprint_metrics())
 
         # inline micro-timing of the CC loop steps (single run, no warmup)
         detail = {}
@@ -285,7 +280,7 @@ def cc_breakdown():
             .where(F.col("a") != F.col("b"))
             .distinct()
         )
-        pairs, fp = orig(pairs, 0)
+        pairs, fp = barrier(pairs)
         detail["pairs_ckpt"] = round(time.perf_counter() - t0, 3)
         for rno in (1, 2, 3):
             t0 = time.perf_counter()
@@ -294,7 +289,7 @@ def cc_breakdown():
             detail[f"r{rno}_large"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             pairs2 = cz._small_star(ls, oriented=True)
-            pairs2, fp2 = orig(pairs2, rno)
+            pairs2, fp2 = barrier(pairs2)
             detail[f"r{rno}_small"] = round(time.perf_counter() - t0, 3)
             pairs = pairs2
             if fp2 == fp:

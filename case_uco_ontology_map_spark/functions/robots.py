@@ -169,8 +169,7 @@ def robots_decisions(
     per host (its groupBy shuffles only the tiny rules frame), gets
     BROADCAST, and the longest-match argmax runs in-row: filter the
     array by ``LIKE``, fold to the (max rlen, allow-wins-ties) winner.
-    The url side never shuffles — plan-asserted in
-    scripts/explain_plans.py."""
+    The url side never shuffles."""
     per_host = rules_df.groupBy(F.col("host").alias("_rhost")).agg(
         F.collect_list(
             F.struct("like_pat", "rlen", "is_allow")

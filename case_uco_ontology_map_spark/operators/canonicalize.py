@@ -29,13 +29,14 @@ Skew handling (explicit, per north_rule):
 
 from __future__ import annotations
 
-import decimal as _decimal
 from typing import Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .barrier import materialize, release
 
 
 def char_shingles(col, n: int = 3, hash_mode: str = "xxhash64"):
@@ -308,12 +309,10 @@ def _small_star(pairs: DataFrame, oriented: bool = False) -> DataFrame:
 
 
 def _fingerprint_metrics():
-    """Order-independent edge-set fingerprint as AGGREGATE EXPRESSIONS:
-    (row count, decimal sum of per-row xxhash64). Decimal accumulator keeps
-    the sum exact under ANSI mode (bigint sum would overflow-error). Used
-    two ways: as observe() metrics riding the per-round checkpoint
-    materialization (zero extra jobs), or as a plain agg when checkpointing
-    is off."""
+    """Order-independent edge-set fingerprint as aggregate expressions:
+    (row count, decimal sum of per-row xxhash64), observed on each CC
+    round's barrier. The decimal accumulator keeps the sum exact under
+    ANSI mode (a bigint sum would overflow-error)."""
     return [
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
@@ -323,82 +322,9 @@ def _fingerprint_metrics():
     ]
 
 
-def _edge_fingerprint(pairs: DataFrame):
-    """Explicit-action form of the fingerprint (checkpoint=False path)."""
-    row = pairs.agg(*_fingerprint_metrics()).first()
-    return (row["n"], row["s"])
-
-
-def _persistent_ids(spark) -> set:
-    """Ids of currently persisted RDDs (localCheckpoint blocks included).
-    Inspection/testing helper — attribution of OUR checkpoints uses
-    _checkpointed_rdd_id, never a global diff (thread-exactness)."""
-    try:
-        return {
-            int(i)
-            for i in spark.sparkContext._jsc.getPersistentRDDs()
-            .keySet()
-            .toArray()
-        }
-    except Exception:
-        return set()
-
-
-def _checkpointed_rdd_id(df: DataFrame):
-    """The localCheckpoint's RDD id, read straight off the DataFrame's
-    LogicalRDD plan node. Exact attribution: unlike diffing the global
-    persistent-RDD set before/after, this can never pick up a checkpoint
-    another thread materialized in the same window (unpersisting a
-    foreign localCheckpoint would CRASH that thread's computation — its
-    lineage is truncated, so the lost blocks cannot be recomputed).
-    None on any introspection failure."""
-    try:
-        return int(df._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:
-        return None
-
-
-def _unpersist_ids(spark, ids) -> None:
-    """Drop the given persisted RDD ids (non-blocking). Best-effort: a
-    miss (already evicted / unknown id) is ignored — unpersisting only
-    affects cache residency, never correctness."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for i in ids:
-            rdd = jmap.get(i)
-            if rdd is not None:
-                rdd.unpersist(False)
-    except Exception:
-        pass
-
-
-def _checkpoint_with_fingerprint(pairs: DataFrame, round_no: int):
-    """Eagerly localCheckpoint ``pairs`` and return (checkpointed, fp) with
-    the fingerprint computed as observed metrics ON the checkpoint's own
-    materialization job — convergence detection costs zero extra actions
-    per round (was: a full count+sum pass over the edge set per round, ~2
-    actions/round; at 100 TB that is an extra full edge scan per round)."""
-    from pyspark.sql import Observation
-
-    obs = Observation(f"cc_fp_{round_no}")
-    observed = pairs.observe(obs, *_fingerprint_metrics())
-    checkpointed = observed.localCheckpoint(eager=True)
-    try:
-        m = obs.get
-        n, s = m["n"], m["s"]
-    except Exception:
-        # AQE empty-relation propagation can prune the CollectMetrics node
-        # when the round's edge set is empty — aggregate the CHECKPOINTED
-        # frame instead (materialized data, a trivially cheap local job)
-        return checkpointed, _edge_fingerprint(checkpointed)
-    # defensive: normalize a NULL sum (empty edge set) to the agg-path value
-    return checkpointed, (n, s if s is not None else _decimal.Decimal(0))
-
-
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(src, dst) edges → (id, component) with component = min reachable id.
 
@@ -409,29 +335,23 @@ def connected_components(
     plain min-label propagation would need 10^6. Each round is two
     groupBy-min aggregates, two AQE-managed joins back, and two output
     distincts (the mins⋈edges joins broadcast when the node-min side is
-    small, skew-split when a partition oversizes — see _large_star);
-    localCheckpoint after each round truncates lineage so round k does not
-    replan k rounds of joins.
+    small, skew-split when a partition oversizes — see _large_star); a
+    barrier after each round truncates lineage so round k does not
+    replan k rounds of joins, and releases the round it superseded.
 
-    Convergence is detected by edge-set fingerprint stability, computed as
-    observe() metrics riding the per-round checkpoint materialization —
-    ONE action per round, no separate fingerprint pass. If the loop
-    exhausts ``max_iterations`` without converging a RuntimeError is raised
-    rather than silently returning split components (the reference's
-    exact-fingerprint dedup, uuid_planner.py:229-241, never under-merges;
-    neither may we).
+    Convergence is detected by edge-set fingerprint stability, observed
+    on each round's barrier — ONE action per round, no separate
+    fingerprint pass. If the loop exhausts ``max_iterations`` without
+    converging a RuntimeError is raised rather than silently returning
+    split components (the reference's exact-fingerprint dedup,
+    uuid_planner.py:229-241, never under-merges; neither may we).
     """
-    spark = edges.sparkSession
-    if checkpoint:
-        # materialize the RAW edge frame ONCE before deriving nodes and
-        # pairs from it: both derivations need a full pass, and without
-        # this the (possibly expensive) upstream chain — in
-        # canonicalize_entities that is the whole signature → LSH →
-        # verify pipeline — executed TWICE, once under the nodes
-        # checkpoint and again under the pairs checkpoint (measured ~5 s
-        # per extra pass at bench scale; guide §1.2: don't recompute what
-        # you already have).
-        edges = edges.localCheckpoint(eager=True)
+    # materialize the RAW edge frame ONCE before deriving nodes and
+    # pairs from it: both derivations need a full pass, and without this
+    # the (possibly expensive) upstream chain — in canonicalize_entities
+    # that is the whole signature → LSH → verify pipeline — executed
+    # TWICE (measured ~5 s per extra pass at bench scale)
+    edges, _ = materialize(edges)
     # canonical undirected pair set, self-loops dropped (they only add
     # nodes, handled below); node universe preserved from the raw input
     nodes = (
@@ -446,65 +366,39 @@ def connected_components(
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    prev_round_ids: set = set()
-    if checkpoint:
-        # nodes and pairs are INDEPENDENT derivations of the materialized
-        # edge frame — overlap their checkpoint jobs from two driver
-        # threads (guide §2.6; the spam_mass pattern) instead of paying
-        # two sequential barriers. Results identical: each job is
-        # untouched, only the scheduling overlaps.
-        from concurrent.futures import ThreadPoolExecutor
+    # nodes and pairs are INDEPENDENT derivations of the materialized edge
+    # frame — overlap their barrier jobs from two driver threads (the
+    # spam_mass pattern) instead of paying two sequential barriers
+    from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+    from pyspark import inheritable_thread_target
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_nodes = pool.submit(
-                inheritable_thread_target(
-                    lambda: nodes.localCheckpoint(eager=True)
-                )
-            )
-            f_pairs = pool.submit(
-                inheritable_thread_target(
-                    lambda: _checkpoint_with_fingerprint(pairs, 0)
-                )
-            )
-            nodes = f_nodes.result()
-            pairs, fp = f_pairs.result()
-        # nodes and pairs are materialized — the raw-edge checkpoint's
-        # blocks are dead weight from here on (same reclamation rule as
-        # the per-round checkpoints below)
-        _unpersist_ids(
-            spark,
-            {i for i in (_checkpointed_rdd_id(edges),) if i is not None},
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_nodes = pool.submit(inheritable_thread_target(materialize), nodes)
+        f_pairs = pool.submit(
+            inheritable_thread_target(materialize),
+            pairs,
+            *_fingerprint_metrics(),
         )
-        prev_round_ids = {
-            i for i in (_checkpointed_rdd_id(pairs),) if i is not None
-        }
-    else:
-        fp = _edge_fingerprint(pairs)
+        nodes, _ = f_nodes.result()
+        pairs, fp = f_pairs.result()
+    release(edges)
     converged = False
-    for round_no in range(1, max_iterations + 1):
+    for _ in range(max_iterations):
         # large-star output is strictly oriented (a > b) and distinct —
         # small-star can skip its defensive re-orientation shuffle
         # large-star skips its distinct (dedup=False): small-star's
         # aggregate is duplicate-insensitive and its output distinct
         # dedupes — saves one full exchange per round
-        pairs = _small_star(_large_star(pairs, dedup=False), oriented=True)
-        if checkpoint:
-            pairs, new_fp = _checkpoint_with_fingerprint(pairs, round_no)
-            # the new round is materialized — the PREVIOUS round's
-            # checkpoint blocks are dead weight; without this, iterative
-            # CC leaks one edge-set copy per round into the block manager
-            # (measured: repeated in-session runs degrade 24s → 50s as
-            # eviction pressure mounts). Ids come straight off our own
-            # checkpointed plan (thread-exact); the final round's blocks
-            # stay live for the star-collapse below.
-            _unpersist_ids(spark, prev_round_ids)
-            prev_round_ids = {
-                i for i in (_checkpointed_rdd_id(pairs),) if i is not None
-            }
-        else:
-            new_fp = _edge_fingerprint(pairs)
+        nxt, new_fp = materialize(
+            _small_star(_large_star(pairs, dedup=False), oriented=True),
+            *_fingerprint_metrics(),
+        )
+        # without the release, iterative CC leaks one edge-set copy per
+        # round into the block manager (measured: repeated in-session runs
+        # degrade 24s → 50s as eviction pressure mounts)
+        release(pairs)
+        pairs = nxt
         if new_fp == fp:
             converged = True
             break
@@ -624,17 +518,13 @@ def canonicalize_entities(
         sigs, id_col, bands, max_bucket=max_bucket, hash_mode=hash_mode,
         observation=observation,
     )
-    cands_ckpt_ids: set = set()
+    cands_ckpt = None
     if estimate_prefilter == "auto":
-        # measure the candidate flood: localCheckpoint so the LSH band
-        # explode runs once (the count below materializes it, the verify
-        # join reuses it) — on a flood shape recomputing the band join
-        # would double the most expensive stage
-        cands = cands.localCheckpoint(eager=True)
-        cands_ckpt_ids = {
-            i for i in (_checkpointed_rdd_id(cands),) if i is not None
-        }
-        n_cands = cands.count()
+        # measure the candidate flood on a barrier so the LSH band explode
+        # runs once (the verify join reuses it) — on a flood shape
+        # recomputing the band join would double the most expensive stage
+        cands, (n_cands,) = materialize(cands, F.count(F.lit(1)))
+        cands_ckpt = cands
         n_entities = entities.select(id_col).count()
         if n_entities > 0 and n_cands / n_entities > auto_prefilter_ratio:
             sigma = (0.25 / num_hashes) ** 0.5
@@ -689,10 +579,9 @@ def canonicalize_entities(
         cached_sigs.unpersist(blocking=False)
     if shingled is not None:
         shingled.unpersist(blocking=False)  # same lifecycle as the sigs
-    # same reclamation for the auto-prefilter candidate checkpoint: CC has
-    # its own checkpoints of everything downstream, so the (possibly huge)
-    # flood-shape candidate blocks are dead weight from here on
-    _unpersist_ids(entities.sparkSession, cands_ckpt_ids)
+    # CC has its own barriers over everything downstream, so the
+    # (possibly huge) flood-shape candidate blocks are dead weight
+    release(cands_ckpt)
     return (
         entities.join(comps, entities[id_col] == comps["id"], "left")
         .select(
@@ -835,10 +724,10 @@ def canonicalize_incremental(
     cands = incremental_candidate_edges(
         flagged, id_col, "_is_new", bands, max_bucket, hash_mode, observation
     )
-    # the candidate set is DELTA-sized — checkpoint it once so it can
+    # the candidate set is DELTA-sized — materialize it once so it can
     # seed the endpoint-id semi-join below without re-running the LSH
     # banding chain
-    cands = cands.localCheckpoint(eager=True)
+    cands, _ = materialize(cands)
     cand_ids = (
         cands.select(F.col("src").alias(id_col))
         .union(cands.select(F.col("dst").alias(id_col)))
@@ -869,9 +758,11 @@ def canonicalize_incremental(
         .filter(jac >= jaccard_threshold)
         .select("src", "dst")
     )
-    # delta-sized edge set feeds every join below — checkpoint once so the
-    # whole LSH+verify chain doesn't replan into each of the three uses
-    edges = edges.localCheckpoint(eager=True)
+    # delta-sized edge set feeds every join below (and the returned frame,
+    # through touched_canons) — materialize once so the whole LSH+verify
+    # chain doesn't replan into each of the three uses
+    edges, _ = materialize(edges)
+    release(cands)
 
     endpoints = (
         edges.select(F.col("src").alias(id_col))

@@ -37,6 +37,8 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .barrier import materialize
+
 Pattern = Tuple[str, str, str]
 
 #: Predicate suffix marking a one-or-more property path (SPARQL ``p+``).
@@ -153,38 +155,56 @@ def join_order(patterns: Sequence[Pattern]) -> List[int]:
     return order
 
 
-def transitive_closure(
+#: Hops each frontier round advances. At bench scale a round's cost is
+#: fixed operation overhead (anti-join 0.84 s + join+distinct 1.19 s on
+#: materialized frames regardless of size), so rounds = depth/stride is
+#: the lever; on a cluster the same stride divides the synchronization
+#: barriers for the same join work. 2→4 cut the 80k-node heap-forest
+#: closure a further ~20%; past 4 the joins dominate.
+FRONTIER_STRIDE = 4
+
+
+def semi_naive_frontier(
     edges: DataFrame,
+    seed,
+    keys: Sequence[str],
+    dist_col: str,
+    start: int,
+    max_hops: Optional[int] = None,
     src: str = "src",
     dst: str = "dst",
-    max_hops: Optional[int] = None,
-    checkpoint_every: int = 1,
-    stride: int = 4,
 ) -> DataFrame:
-    """Reachability with minimal hop count: ``(src, dst, hops)`` for every
-    pair connected by a directed path, ``hops`` = shortest path length.
-    The engine behind SPARQL ``p+`` property paths (``rdfs:subClassOf+``,
-    provenance ``derivedFrom+`` chains).
+    """The one semi-naive frontier kernel behind ``transitive_closure``,
+    ``graphstats.bfs_distances`` and ``graphstats.landmark_distances``.
 
-    Algorithm: semi-naive Datalog iteration (BSP). Round h joins the
-    FRONTIER (pairs first reached at hop h) against the edge frame, then
-    anti-joins the accumulated reach set so only never-seen pairs survive
-    into round h+1 — each pair is derived at its minimal hop count and
-    never re-derived, so the loop terminates on cyclic graphs too.
+    State rows are ``(*keys, dist_col)``: ``keys[-1]`` is the HEAD column
+    a round extends along an edge, the other keys are carried unchanged
+    (the closure's source, the landmark). ``seed(e)`` builds the rows at
+    distance ``start`` from the prepared edge frame ``e`` (``_es``,
+    ``_ed``: distinct, non-null, hash-partitioned on ``_es`` once and
+    persisted, so each round shuffles only the frontier). Returns every
+    key reachable within ``max_hops`` at its minimal distance.
 
-    Scale shape: the edge frame is hash-partitioned on ``src`` ONCE and
-    persisted — every round's frontier join shuffles only the frontier
-    (which shrinks as the closure saturates), never the edges. One driver
-    action per round (``isEmpty`` on the new frontier) is inherent to
-    fixed-point iteration; lineage is truncated with ``localCheckpoint``
-    every ``checkpoint_every`` rounds so plan depth stays O(1) instead of
-    O(diameter). Rounds = graph diameter; for the doubling variant
-    (O(log d) rounds, but joins path×path and re-derives every pair
-    ~d/2 times) see PLANS.md — semi-naive wins when edges ≫ frontier,
-    which is every real provenance/hierarchy graph.
-    """
-    spark = edges.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    Each round advances ``FRONTIER_STRIDE`` hops: level s extends level
+    s-1 by one edge (intermediate levels distinct'd so fan-out never
+    multiplies), a groupBy-min over the levels keeps each key's minimal
+    distance (level s is complete for minimal-distance h+s keys by
+    semi-naive induction), and ONE anti-join against the known set plus
+    ONE barrier close the round — a key is derived at its minimal
+    distance and never again, so cyclic graphs terminate. The barrier
+    observes the round's row count and last-level count: no longer path
+    exists once nothing was first reached at the stride's last hop.
+
+    ``known`` stays a lazy union of the materialized rounds (the
+    union-of-frontiers set of *Joins over UNION ALL Queries in Teradata*,
+    SIGMOD 2018): re-materializing the whole reach set per round would
+    rewrite O(closure) rows per round for data already materialized once.
+    Every round is read by the result, so none is released."""
+    keys = list(keys)
+    head, carried = keys[-1], keys[:-1]
+    shuffle = int(
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
     e = (
         edges.select(F.col(src).alias("_es"), F.col(dst).alias("_ed"))
         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
@@ -192,99 +212,75 @@ def transitive_closure(
         .repartition(shuffle, "_es")
         .persist()
     )
-    known = (
-        e.select(F.col("_es").alias(src), F.col("_ed").alias(dst))
-        .withColumn("hops", F.lit(1))
-        .localCheckpoint(eager=True)
-    )
-    # ``known`` accumulates as a lazy UNION of per-round checkpointed
-    # frontier frames — re-checkpointing the whole accumulated reach set
-    # every round (the old shape) re-materialized O(closure) rows per
-    # round, an O(rounds × pairs) total rewrite for data that was already
-    # materialized once. The anti-join scans the same rows either way.
-    #
-    # Each round advances ``stride`` hops: candidates at h+s come from
-    # extending the previous level once more (each intermediate level is
-    # distinct'd before extending so fan-out never multiplies); an
-    # in-round groupBy-min over the hop column keeps each pair's MINIMAL
-    # hop (level s is complete for minimal-hop h+s pairs by semi-naive
-    # induction, so a pair derived at several levels lands at its true
-    # hop), and ONE anti-join + ONE checkpoint then cover ``stride``
-    # hops. At bench scale the measured per-round cost is FIXED operation
-    # overhead (anti-join 0.84 s + join+distinct 1.19 s on materialized
-    # frames regardless of size), so the round count — diameter/stride —
-    # is the lever; on a cluster the same change divides the number of
-    # global synchronization barriers for the same total join work.
-    # stride=4 measured best at bench scale (2→4 cut the wall a further
-    # ~20% on the 80k-node heap-forest closure); past that the in-round
-    # plan depth buys nothing because the joins dominate.
-    frontier = known.select(src, dst)
-    h = 1
+    known, _ = materialize(seed(e))
+    frontier = known.select(*keys)
+    h = start
     while max_hops is None or h < max_hops:
-        k = (
-            max(1, stride)
-            if max_hops is None
-            else min(max(1, stride), max_hops - h)
+        k = FRONTIER_STRIDE if max_hops is None else min(
+            FRONTIER_STRIDE, max_hops - h
         )
-        cur = frontier
-        levels = []
+        cur, cand = frontier, None
         for s in range(1, k + 1):
-            cur = (
-                cur.join(e, on=cur[dst] == e["_es"])
-                .select(cur[src].alias(src), F.col("_ed").alias(dst))
+            cur = cur.join(e, on=cur[head] == e["_es"]).select(
+                *carried, F.col("_ed").alias(head)
             )
             if s < k:
                 cur = cur.distinct()
-            levels.append(cur.withColumn("hops", F.lit(h + s)))
-        if k > 1:
-            cand = levels[0]
-            for lv in levels[1:]:
-                cand = cand.unionByName(lv)
-            cand = cand.groupBy(src, dst).agg(F.min("hops").alias("hops"))
-        else:
-            cand = levels[0]
-        new = cand.join(known.select(src, dst), on=[src, dst], how="left_anti")
+            level = cur.withColumn(dist_col, F.lit(h + s))
+            cand = level if cand is None else cand.unionByName(level)
+        cand = cand.groupBy(*keys).agg(F.min(dist_col).alias(dist_col))
+        new = cand.join(known.select(*keys), on=keys, how="left_anti")
         h += k
-        if checkpoint_every:
-            # the frontier-exhausted test rides the checkpoint's own
-            # materialization as observed per-hop counts — no separate
-            # isEmpty() job per round (same pattern as canonicalize's
-            # fingerprint-on-checkpoint)
-            from pyspark.sql import Observation
-
-            obs = Observation(f"tc_n_{h}")
-            new = new.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum((F.col("hops") == h).cast("long")), F.lit(0)
-                ).alias("n_last"),
-            ).localCheckpoint(eager=True)
-            try:
-                m = obs.get
-                n_new, n_last = m["n"], m["n_last"]
-            except Exception:
-                # AQE empty-relation propagation can prune the metrics
-                # node when the frontier is empty — fall back to asking
-                # the materialized frame (trivially cheap)
-                n_new = new.count()
-                n_last = new.filter(F.col("hops") == h).count()
-        else:
-            n_new = new.count()
-            n_last = new.filter(F.col("hops") == h).count()
+        new, (n_new, n_last) = materialize(
+            new,
+            F.count(F.lit(1)),
+            F.coalesce(F.sum((F.col(dist_col) == h).cast("long")), F.lit(0)),
+        )
         if n_new == 0:
             break
         known = known.unionByName(new)
         if n_last == 0:
-            # nothing first-reached at the stride's LAST hop — no longer
-            # path can exist (h+stride+1 pairs would extend them)
             break
-        # next round extends only the pairs first reached at this
-        # stride's last hop: earlier-hop pairs were already extended by
-        # c2 within this round
-        frontier = new.filter(F.col("hops") == h).select(src, dst)
+        # only keys first reached at the stride's last hop extend further:
+        # earlier levels were already extended within this round
+        frontier = new.filter(F.col(dist_col) == h).select(*keys)
     e.unpersist()
     return known
+
+
+def transitive_closure(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_hops: Optional[int] = None,
+) -> DataFrame:
+    """Reachability with minimal hop count: ``(src, dst, hops)`` for every
+    pair connected by a directed path, ``hops`` = shortest path length.
+    The engine behind SPARQL ``p+`` property paths (``rdfs:subClassOf+``,
+    provenance ``derivedFrom+`` chains).
+
+    Algorithm: semi-naive Datalog iteration (BSP) on
+    ``semi_naive_frontier``, seeded with the edges at hop 1 and carrying
+    the source: each round joins the FRONTIER (pairs first reached at the
+    previous round's last hop) against the edge frame and anti-joins the
+    accumulated reach set, so each pair is derived at its minimal hop
+    count and the loop terminates on cyclic graphs too. Rounds = graph
+    diameter / stride. The doubling variant (O(log d) rounds) joins
+    path×path and re-derives every pair ~d/2 times; semi-naive wins when
+    edges ≫ frontier, which is every real provenance/hierarchy graph.
+    """
+    return semi_naive_frontier(
+        edges,
+        lambda e: e.select(
+            F.col("_es").alias(src), F.col("_ed").alias(dst), F.lit(1).alias("hops")
+        ),
+        [src, dst],
+        "hops",
+        1,
+        max_hops,
+        src,
+        dst,
+    )
 
 
 def _is_path(term: str) -> bool:

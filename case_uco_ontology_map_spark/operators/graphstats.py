@@ -7,19 +7,22 @@ natively on the Spark edge frames.)
 Scale shape: degree is one map-side-combined groupBy per direction joined
 on node id. PageRank is the canonical BSP iteration — the edge frame is
 hash-partitioned on ``src`` once and persisted, each round shuffles only
-the (node, rank) frame (N rows, not E), dangling mass is folded in via a
-1-row cross join (stays lazy — no per-round driver collect), and lineage
-is truncated per round with ``localCheckpoint`` so plan depth stays O(1)
-over any iteration count. Rounds are fixed (power iteration), so the
-whole loop is ~2 shuffles x iterations over N-row frames.
+the (node, rank) frame (N rows, not E), and every iterative operator
+here closes each round on the ``barrier`` primitive, which truncates
+lineage (plan depth stays O(1) over any iteration count), observes the
+round's scalars on the same job, and releases the round it superseded.
+Rounds are fixed (power iteration), so the whole loop is ~2 shuffles x
+iterations over N-row frames.
 """
 
 from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .barrier import materialize, release
 
 
 def degree_stats(
@@ -61,15 +64,47 @@ ON o.node = i.node
 """
 
 
-def _observed_scalar(obs):
-    """Value of a single-metric Observation, or None when the metrics
-    node was pruned (AQE empty-relation propagation) — callers fall back
-    to the lazy in-plan aggregate."""
-    try:
-        vals = obs.get
-        return next(iter(vals.values()))
-    except Exception:
-        return None
+def _power_iteration(
+    edges: DataFrame,
+    with_deg: DataFrame,
+    state: DataFrame,
+    col: str,
+    share: Column,
+    update,
+    iterations: int,
+) -> DataFrame:
+    """The one power iteration behind ``pagerank`` and ``trustrank`` (and
+    so ``spam_mass``). ``state`` is ``with_deg``'s columns (``node``,
+    the static out-degree ``_deg``, any per-node constants) plus the
+    iterated score ``col``. Each round every node's score splits over its
+    out-edges by ``share`` (``edges`` are ``(_s, _d[, _w])``), and
+    ``update(recv, dangling_mass)`` gives the new score from the received
+    sum and the dangling mass: the score held by nodes with no
+    out-edges, observed on the previous round's barrier so it enters as
+    a literal (no per-round aggregate subtree). Each caller keeps its
+    exact per-row arithmetic. The state carries ``_deg``, so each round
+    pays exactly two joins (state ⋈ edges, with_deg ⋈ contrib)."""
+    dm_metric = F.coalesce(
+        F.sum(F.when(F.col("_deg").isNull(), F.col(col))), F.lit(0.0)
+    )
+    state, (dm,) = materialize(state, dm_metric)
+    for _ in range(iterations):
+        contrib = (
+            state.join(edges, on=state["node"] == edges["_s"])
+            .select(F.col("_d").alias("node"), share.alias("_c"))
+            .groupBy("node")
+            .agg(F.sum("_c").alias("_recv"))
+        )
+        nxt = with_deg.join(contrib, on="node", how="left").select(
+            *with_deg.columns,
+            update(
+                F.coalesce(F.col("_recv"), F.lit(0.0)), F.lit(float(dm))
+            ).alias(col),
+        )
+        nxt, (dm,) = materialize(nxt, dm_metric)
+        release(state)
+        state = nxt
+    return state
 
 
 def pagerank(
@@ -78,7 +113,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     init_ranks: Optional[DataFrame] = None,
     weight_col: Optional[str] = None,
 ) -> DataFrame:
@@ -109,11 +143,8 @@ def pagerank(
     a warm start near the answer needs a small fraction of the cold
     iteration count — the rank-maintenance loop at web scale.
 
-    The dangling term rides along as a lazy 1-row aggregate cross-joined
-    onto the update — no driver action per round; the only per-round
-    action is the eager ``localCheckpoint`` that truncates lineage
-    (every ``checkpoint_every`` rounds; 0 disables, leaving the full
-    lazy join tree — used by plan assertions, not for deep iteration).
+    Rounds run on ``_power_iteration``: one barrier per round (which
+    also observes the dangling mass), no other per-round action.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
@@ -144,14 +175,6 @@ def pagerank(
         (F.sum("_w") if weighted else F.count("*")).alias("_deg")
     )
     with_deg = nodes.join(out_deg, on="node", how="left").persist()
-    # The iterated state CARRIES the (static) out-degree: the old shape
-    # re-joined ranks ⋈ with_deg every round to attach ``_deg``, and that
-    # joined subtree fed BOTH the contribution aggregate and the dangling
-    # sum — evaluated twice per round (guide §7.2 duplicated subtrees;
-    # §2.4 remove shuffles outright). With ``_deg`` riding the checkpointed
-    # state, the dangling term is a plain aggregate over the state and each
-    # round pays exactly two joins (state ⋈ edges, with_deg ⋈ contrib)
-    # instead of four evaluated ones. Per-row arithmetic is untouched.
     if init_ranks is not None:
         prior = init_ranks.select(
             F.col("node").alias("node"), F.col("rank").alias("_ir")
@@ -167,59 +190,21 @@ def pagerank(
         ranks = with_deg.select(
             "node", "_deg", F.lit(1.0 / n_nodes).alias("rank")
         )
-    # The dangling mass rides each checkpoint materialization as an
-    # observed metric (same value as the in-plan aggregate — a sum over
-    # exactly the materialized rank frame), so checkpointed rounds feed
-    # the NEXT round a driver-side literal instead of paying a separate
-    # broadcast-aggregate subtree per round (one fewer job per round at
-    # any scale). Un-checkpointed rounds keep the lazy broadcast
-    # aggregate — values identical either way.
-    _dm_metric = F.coalesce(
-        F.sum(F.when(F.col("_deg").isNull(), F.col("rank"))), F.lit(0.0)
-    ).alias("_dm")
-    dangling_lit = None
-    if checkpoint_every:
-        obs = Observation()
-        ranks = ranks.observe(obs, _dm_metric).localCheckpoint(eager=True)
-        dangling_lit = _observed_scalar(obs)
-    for it in range(iterations):
-        share = (
-            (F.col("rank") * F.col("_w") / F.col("_deg"))
-            if weighted
-            else (F.col("rank") / F.col("_deg"))
-        )
-        contrib = (
-            ranks.join(e, on=ranks["node"] == e["_s"])
-            .select(F.col("_d").alias("node"), share.alias("_c"))
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_recv"))
-        )
-        updated = with_deg.join(contrib, on="node", how="left")
-        if dangling_lit is None:
-            dangling = ranks.agg(_dm_metric)
-            updated = updated.crossJoin(F.broadcast(dangling))
-            dm_col = F.col("_dm")
-        else:
-            dm_col = F.lit(float(dangling_lit))
-        ranks = updated.select(
-            "node",
-            "_deg",
-            (
-                F.lit((1.0 - damping) / n_nodes)
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("_recv"), F.lit(0.0))
-                    + dm_col / F.lit(float(n_nodes))
-                )
-            ).alias("rank"),
-        )
-        dangling_lit = None
-        if checkpoint_every and ((it + 1) % checkpoint_every) == 0:
-            obs = Observation()
-            ranks = ranks.observe(obs, _dm_metric).localCheckpoint(
-                eager=True
-            )
-            dangling_lit = _observed_scalar(obs)
+    share = (
+        (F.col("rank") * F.col("_w") / F.col("_deg"))
+        if weighted
+        else (F.col("rank") / F.col("_deg"))
+    )
+    ranks = _power_iteration(
+        e,
+        with_deg,
+        ranks,
+        "rank",
+        share,
+        lambda recv, dm: F.lit((1.0 - damping) / n_nodes)
+        + F.lit(damping) * (recv + dm / F.lit(float(n_nodes))),
+        iterations,
+    )
     e.unpersist()
     nodes.unpersist()
     with_deg.unpersist()
@@ -546,7 +531,6 @@ def label_propagation(
     iterations: int = 5,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Synchronous label-propagation community detection →
     ``(node, label)`` after a FIXED number of rounds.
@@ -568,7 +552,7 @@ def label_propagation(
     groupBy-min — NO window function, so a hub node's votes partial-
     aggregate map-side instead of sorting into one task (same skew
     rationale as connected components). Per-round shuffles touch N-row
-    frames; lineage is truncated with ``localCheckpoint``.
+    frames; each round closes on a barrier.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
@@ -588,10 +572,8 @@ def label_propagation(
         .persist()
     )
     nodes = e.select(F.col("_a").alias("node")).distinct().persist()
-    labels = nodes.select("node", F.col("node").alias("label"))
-    if checkpoint_every:
-        labels = labels.localCheckpoint(eager=True)
-    for it in range(iterations):
+    labels, _ = materialize(nodes.select("node", F.col("node").alias("label")))
+    for _ in range(iterations):
         nbr = e.join(labels, on=e["_b"] == labels["node"]).select(
             F.col("_a").alias("node"), "label"
         )
@@ -600,11 +582,10 @@ def label_propagation(
             .groupBy("node", "label")
             .agg(F.count("*").alias("_c"))
         )
-        if checkpoint_every:
-            # votes (the expensive edge-join + groupBy) feeds BOTH the
-            # per-node max and the pick join — materialize once instead
-            # of evaluating the subtree twice (same fix as hits())
-            votes = votes.localCheckpoint(eager=True)
+        # votes (the expensive edge-join + groupBy) feeds BOTH the
+        # per-node max and the pick join — materialize once instead of
+        # evaluating the subtree twice (same fix as hits())
+        votes, _ = materialize(votes)
         top = votes.groupBy("node").agg(F.max("_c").alias("_mc"))
         picked = (
             votes.join(top, on="node")
@@ -615,15 +596,15 @@ def label_propagation(
         # isolated nodes cannot exist here (nodes come from the edge
         # frame), but a COALESCE keeps the invariant explicit if the
         # caller ever unions extra nodes in
-        labels = (
+        nxt, _ = materialize(
             labels.select("node", F.col("label").alias("_prev"))
             .join(picked, on="node", how="left")
             .select(
                 "node", F.coalesce("label", F.col("_prev")).alias("label")
             )
         )
-        if checkpoint_every and ((it + 1) % checkpoint_every) == 0:
-            labels = labels.localCheckpoint(eager=True)
+        release(labels, votes)
+        labels = nxt
     e.unpersist()
     nodes.unpersist()
     return labels
@@ -678,7 +659,6 @@ def random_walks(
     hash_mode: str = "xxhash64",
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """DeepWalk-style random-walk corpus generation for KG/graph-embedding
     training — hash-driven, not RNG-driven, for the same reason the
@@ -699,7 +679,8 @@ def random_walks(
     persisted; each of the ``length`` rounds is ONE equi-join of the
     (N·walks_per_node)-row frontier against it, with the pick an in-row
     ``element_at`` (no per-neighbor explosion, no shuffle of neighbor
-    lists); lineage truncates via ``localCheckpoint``. A hub's array is
+    lists); each step closes on a barrier, and every step is part of the
+    returned corpus, so none is released. A hub's array is
     as long as its out-degree — the same bound its adjacency already
     costs anywhere else; cap out-degree upstream if hubs are degenerate.
     """
@@ -752,7 +733,7 @@ def random_walks(
             ),
             hash_mode,
         )
-        nxt = (
+        frontier, _ = materialize(
             frontier.join(adj, on=frontier["node"] == adj["_anode"])
             .select(
                 "start",
@@ -764,10 +745,9 @@ def random_walks(
                 ).alias("node"),
             )
         )
-        if checkpoint_every and (s % checkpoint_every) == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-        parts.append(nxt)
-        frontier = nxt
+        parts.append(frontier)
+    # every step is materialized: nothing reads the adjacency any more
+    adj.unpersist()
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -956,7 +936,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 100,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """K-core decomposition (fixed ``k``): the maximal subgraph in which
     every node keeps undirected degree ≥ ``k`` — the standard "dense
@@ -975,10 +954,9 @@ def k_core(
 
     Scale shape: the undirected edge frame is built once; each round is
     one map-side-combined degree count over the surviving edge set and
-    two semi-joins that shrink it. One driver action per round
-    (the survivor count) is inherent to fixed-point iteration; lineage
-    truncates via ``localCheckpoint``. Rounds = peel depth (≤ graph
-    degeneracy ladder, typically ≪ 10 on web graphs).
+    two semi-joins that shrink it. Two barriers per round (the survivor
+    list, observing its count, and the shrunk edge set); rounds = peel
+    depth (≤ graph degeneracy ladder, typically ≪ 10 on web graphs).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -998,35 +976,32 @@ def k_core(
         .persist()
     )
     cur = e
-    n_prev = None
+    alive = n_prev = None
     for _ in range(int(max_rounds)):
-        deg = cur.groupBy(F.col("_a").alias("node")).agg(
-            F.count("*").alias("core_deg")
+        prev_alive = alive
+        # alive feeds both semi-join sides — materialize the (small) node
+        # list once instead of re-running the degree aggregation per use
+        alive, (n_alive,) = materialize(
+            cur.groupBy(F.col("_a").alias("node"))
+            .agg(F.count("*").alias("core_deg"))
+            .filter(F.col("core_deg") >= k),
+            F.count(F.lit(1)),
         )
-        alive = deg.filter(F.col("core_deg") >= k)
-        if checkpoint_every:
-            # alive feeds the survivor count AND both semi-join sides —
-            # materialize the (small) node list once instead of
-            # re-running the degree aggregation per use
-            alive = alive.localCheckpoint(eager=True)
-        n_alive = alive.count()
-        if n_alive == n_prev:
+        release(prev_alive)
+        if n_alive == n_prev or n_alive == 0:
+            release(cur)
             e.unpersist()
             return alive
         n_prev = n_alive
-        if n_alive == 0:
-            e.unpersist()
-            return alive
         keep = alive.select("node")
-        cur = (
-            cur.join(keep, on=cur["_a"] == keep["node"], how="left_semi")
-        )
         keep2 = alive.select(F.col("node").alias("_n2"))
-        cur = cur.join(
-            keep2, on=cur["_b"] == keep2["_n2"], how="left_semi"
+        nxt, _ = materialize(
+            cur.join(keep, on=cur["_a"] == keep["node"], how="left_semi")
+            .join(keep2, on=F.col("_b") == keep2["_n2"], how="left_semi")
         )
-        if checkpoint_every:
-            cur = cur.localCheckpoint(eager=True)
+        release(cur)
+        cur = nxt
+    release(alive, cur)
     e.unpersist()
     raise RuntimeError(
         f"k_core did not converge in {max_rounds} rounds"
@@ -1081,7 +1056,6 @@ def hits(
     iterations: int = 10,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Kleinberg HITS → ``(node, hub, auth)``, L1-normalized after each
     half-step (sum of hubs = sum of auths = 1 once the graph has any
@@ -1094,9 +1068,10 @@ def hits(
 
     Scale shape mirrors ``pagerank``: the edge frame persists once;
     each round shuffles only the two N-row score frames (groupBy dst
-    then groupBy src, both map-side combined); the L1 norm rides along
-    as a lazy 1-row aggregate cross-joined broadcast — no per-round
-    driver action except the lineage-truncating ``localCheckpoint``.
+    then groupBy src, both map-side combined). Each half-step's raw
+    aggregate closes on a barrier that also observes its L1 total, so
+    normalization is a literal — no per-round action besides the
+    barriers.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
@@ -1111,45 +1086,24 @@ def hits(
         .distinct()
         .persist()
     )
-    hubs = nodes.withColumn("hub", F.lit(1.0))
+    hubs, _ = materialize(nodes.withColumn("hub", F.lit(1.0)))
     auths = nodes.withColumn("auth", F.lit(0.0))
-    if checkpoint_every:
-        hubs = hubs.localCheckpoint(eager=True)
 
     def _half_step(scores: DataFrame, col: str, join_on: str,
-                   group_to: str, out: str,
-                   materialize: bool) -> DataFrame:
-        raw = (
+                   group_to: str, out: str):
+        # ``raw`` (the expensive e⋈scores + groupBy) feeds BOTH the
+        # normalization total and the outer join below; unmaterialized,
+        # the plan evaluates the whole join+aggregate subtree twice per
+        # half-step. The barrier computes it once, and the L1 total rides
+        # the same job.
+        raw, (tot,) = materialize(
             e.join(scores, on=e[join_on] == scores["node"])
             .groupBy(F.col(group_to).alias("node"))
-            .agg(F.sum(col).alias("_v"))
+            .agg(F.sum(col).alias("_v")),
+            F.coalesce(F.sum("_v"), F.lit(0.0)),
         )
-        tot_lit = None
-        if materialize:
-            # ``raw`` (the expensive e⋈scores + groupBy) feeds BOTH the
-            # normalization total and the outer join below; unmaterialized,
-            # the plan evaluates the whole join+aggregate subtree twice per
-            # half-step (guide §7.2: duplicated subtrees). One eager
-            # localCheckpoint makes it compute once — and the L1 total
-            # rides that same materialization as an observed metric, so the
-            # normalization becomes a literal instead of a separate
-            # broadcast-aggregate job per half-step. Values untouched
-            # (same aggregation over the same data either way).
-            obs = Observation()
-            raw = raw.observe(
-                obs, F.coalesce(F.sum("_v"), F.lit(0.0)).alias("_tot")
-            ).localCheckpoint(eager=True)
-            tot_lit = _observed_scalar(obs)
-        normalized = nodes.join(raw, on="node", how="left")
-        if tot_lit is None:
-            total = raw.agg(
-                F.coalesce(F.sum("_v"), F.lit(0.0)).alias("_tot")
-            )
-            normalized = normalized.crossJoin(F.broadcast(total))
-            tot_col = F.col("_tot")
-        else:
-            tot_col = F.lit(float(tot_lit))
-        return normalized.select(
+        tot_col = F.lit(float(tot))
+        scored = nodes.join(raw, on="node", how="left").select(
             "node",
             F.when(
                 tot_col != 0.0,
@@ -1158,18 +1112,19 @@ def hits(
             .otherwise(F.lit(0.0))
             .alias(out),
         )
+        return scored, raw
 
-    mat = bool(checkpoint_every)
-    for it in range(iterations):
-        # With ``mat`` the per-half-step raw checkpoint already truncates
-        # lineage every half-round (each output is a cheap N-row join over
-        # materialized data), so no separate round-end checkpoint is
-        # needed — the old shape (checkpoint hubs, then auths, at round
-        # end) additionally re-executed the ENTIRE auth half-step inside
-        # the hub checkpoint's plan, because hubs' captured plan still
-        # referenced the un-checkpointed auths.
-        auths = _half_step(hubs, "hub", "_s", "_d", "auth", mat)
-        hubs = _half_step(auths, "auth", "_d", "_s", "hub", mat)
+    # hubs/auths are cheap N-row joins over the half-steps' barriers; a
+    # half-step's raw frame is superseded once the next round's half-step
+    # of the same kind has materialized
+    hubs_raw, auths_raw = hubs, None
+    for _ in range(iterations):
+        auths, nxt_auths_raw = _half_step(hubs, "hub", "_s", "_d", "auth")
+        release(auths_raw)
+        auths_raw = nxt_auths_raw
+        hubs, nxt_hubs_raw = _half_step(auths, "auth", "_d", "_s", "hub")
+        release(hubs_raw)
+        hubs_raw = nxt_hubs_raw
     result = hubs.join(auths, on="node")
     e.unpersist()
     nodes.unpersist()
@@ -1243,7 +1198,6 @@ def trustrank(
     src: str = "src",
     dst: str = "dst",
     seed_col: str = "node",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """TrustRank (Gyöngyi/Garcia-Molina/Pedersen 2004) →
     ``(node, trust)``; trust sums to 1.
@@ -1261,10 +1215,9 @@ def trustrank(
     convention), not uniformly, so trust mass can never leak to
     unreachable spam.
 
-    Scale shape is ``pagerank``'s: the seed flag is a broadcast join
-    decided once, each round shuffles only the N-row trust frame, the
-    dangling term rides as a lazy broadcast 1-row aggregate, and the
-    only per-round action is the lineage-truncating localCheckpoint.
+    Scale shape is ``pagerank``'s (the same ``_power_iteration``): the
+    seed flag is a broadcast join decided once, each round shuffles only
+    the N-row trust frame, and the only per-round action is the barrier.
     Raises if no seed appears in the graph (an all-zero teleport would
     silently drain all mass)."""
     if iterations < 0:
@@ -1297,60 +1250,16 @@ def trustrank(
         F.count("*").alias("_deg")
     )
     with_deg = nodes.join(out_deg, on="node", how="left").persist()
-    # State carries the static out-degree (and seed flag), exactly as in
-    # ``pagerank``: the old per-round trust ⋈ with_deg join fed both the
-    # contribution aggregate and the dangling sum (evaluated twice); now
-    # the dangling term is a plain aggregate over the checkpointed state
-    # and each round pays two joins instead of four evaluated ones.
-    # Per-row arithmetic is untouched.
-    trust = with_deg.select("node", "_seed", "_deg", teleport.alias("trust"))
-    # dangling mass rides the checkpoint as an observed metric — same
-    # pattern (and same value guarantee) as pagerank above
-    _dm_metric = F.coalesce(
-        F.sum(F.when(F.col("_deg").isNull(), F.col("trust"))), F.lit(0.0)
-    ).alias("_dm")
-    dangling_lit = None
-    if checkpoint_every:
-        obs = Observation()
-        trust = trust.observe(obs, _dm_metric).localCheckpoint(eager=True)
-        dangling_lit = _observed_scalar(obs)
-    for it in range(iterations):
-        contrib = (
-            trust.join(e, on=trust["node"] == e["_s"])
-            .select(
-                F.col("_d").alias("node"),
-                (F.col("trust") / F.col("_deg")).alias("_c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_recv"))
-        )
-        updated = with_deg.join(contrib, on="node", how="left")
-        if dangling_lit is None:
-            dangling = trust.agg(_dm_metric)
-            updated = updated.crossJoin(F.broadcast(dangling))
-            dm_col = F.col("_dm")
-        else:
-            dm_col = F.lit(float(dangling_lit))
-        trust = updated.select(
-            "node",
-            "_seed",
-            "_deg",
-            (
-                F.lit(1.0 - damping) * teleport
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("_recv"), F.lit(0.0))
-                    + dm_col * teleport
-                )
-            ).alias("trust"),
-        )
-        dangling_lit = None
-        if checkpoint_every and ((it + 1) % checkpoint_every) == 0:
-            obs = Observation()
-            trust = trust.observe(obs, _dm_metric).localCheckpoint(
-                eager=True
-            )
-            dangling_lit = _observed_scalar(obs)
+    trust = _power_iteration(
+        e,
+        with_deg,
+        with_deg.select("node", "_seed", "_deg", teleport.alias("trust")),
+        "trust",
+        F.col("trust") / F.col("_deg"),
+        lambda recv, dm: F.lit(1.0 - damping) * teleport
+        + F.lit(damping) * (recv + dm * teleport),
+        iterations,
+    )
     e.unpersist()
     nodes.unpersist()
     with_deg.unpersist()
@@ -1421,8 +1330,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     source_col: str = "node",
-    checkpoint_every: int = 1,
-    stride: int = 4,
 ) -> DataFrame:
     """Multi-source BFS → ``(node, dist)``: minimal hop count from ANY
     source node (sources themselves at 0). The landmark-distance
@@ -1438,97 +1345,26 @@ def bfs_distances(
     coalesce to their own infinity — emitting every node would force a
     full node-set join the caller may not want).
 
-    Scale shape mirrors ``transitive_closure``'s semi-naive loop, but
-    state is O(N) (node, dist) rather than O(N²) pairs: edges are
-    hash-partitioned on ``src`` once and persisted; each round joins
-    only the FRONTIER (nodes first reached that round) against the
-    edges and anti-joins the known set, so a node is never re-derived
-    and cycles terminate naturally. One ``isEmpty`` action per round is
-    inherent to fixed-point iteration; ``localCheckpoint`` truncates
-    lineage so plan depth stays O(1) over any diameter."""
-    spark = edges.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = (
-        edges.select(F.col(src).alias("_es"), F.col(dst).alias("_ed"))
-        .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .distinct()
-        .repartition(shuffle, "_es")
-        .persist()
-    )
-    known = (
-        sources.select(F.col(source_col).alias("node"))
+    Runs on ``graphquery.semi_naive_frontier`` (the kernel behind
+    ``transitive_closure``), with state O(N) (node, dist) rather than
+    O(N²) pairs: each round joins only the FRONTIER against the edges
+    and anti-joins the known set, so a node is never re-derived and
+    cycles terminate naturally."""
+    from .graphquery import semi_naive_frontier
+
+    return semi_naive_frontier(
+        edges,
+        lambda e: sources.select(F.col(source_col).alias("node"))
         .where(F.col(source_col).isNotNull())
         .distinct()
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
+        .withColumn("dist", F.lit(0)),
+        ["node"],
+        "dist",
+        0,
+        max_hops,
+        src,
+        dst,
     )
-    # ``known`` accumulates as a lazy union of per-round checkpointed
-    # frontiers (no per-round re-checkpoint of the whole reach set); each
-    # round advances ``stride`` hops with an in-round min-dist dedup and
-    # ONE anti-join + checkpoint, and the frontier-exhausted test rides
-    # the checkpoint as observed counts — the same stride + job-structure
-    # shape as transitive_closure (per-round cost at bench scale is fixed
-    # operation overhead, so rounds = depth/stride is the lever; on a
-    # cluster the same change divides the synchronization barriers for
-    # the same total join work). Intermediate levels are distinct'd
-    # before extending so fan-out never multiplies; level s is complete
-    # for minimal-dist h+s nodes (shortest-path prefixes are shortest
-    # paths), so the groupBy-min lands every node at its true distance.
-    frontier = known.select("node")
-    h = 0
-    while max_hops is None or h < max_hops:
-        k = (
-            max(1, stride)
-            if max_hops is None
-            else min(max(1, stride), max_hops - h)
-        )
-        cur = frontier
-        levels = []
-        for s in range(1, k + 1):
-            cur = (
-                cur.join(e, on=cur["node"] == e["_es"])
-                .select(F.col("_ed").alias("node"))
-            )
-            if s < k:
-                cur = cur.distinct()
-            levels.append(cur.withColumn("dist", F.lit(h + s)))
-        if k > 1:
-            cand = levels[0]
-            for lv in levels[1:]:
-                cand = cand.unionByName(lv)
-            cand = cand.groupBy("node").agg(F.min("dist").alias("dist"))
-        else:
-            cand = levels[0]
-        new = cand.join(known.select("node"), on="node", how="left_anti")
-        h += k
-        if checkpoint_every:
-            from pyspark.sql import Observation
-
-            obs = Observation(f"bfs_n_{h}")
-            new = new.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum((F.col("dist") == h).cast("long")), F.lit(0)
-                ).alias("n_last"),
-            ).localCheckpoint(eager=True)
-            try:
-                m = obs.get
-                n_new, n_last = m["n"], m["n_last"]
-            except Exception:  # AQE pruned the metrics node
-                n_new = new.count()
-                n_last = new.filter(F.col("dist") == h).count()
-        else:
-            n_new = new.count()
-            n_last = new.filter(F.col("dist") == h).count()
-        if n_new == 0:
-            break
-        known = known.unionByName(new)
-        if n_last == 0:
-            break  # nothing first-reached at the stride's last hop
-        frontier = new.filter(F.col("dist") == h).select("node")
-    e.unpersist()
-    return known
 
 
 def bfs_distances_sql(
@@ -1570,7 +1406,6 @@ def spam_mass(
     src: str = "src",
     dst: str = "dst",
     seed_col: str = "node",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Relative spam mass (Gyöngyi/Berkhin/Garcia-Molina/Pedersen 2005,
     "Link Spam Detection Based on Mass Estimation") →
@@ -1601,14 +1436,13 @@ def spam_mass(
     def _pr():
         return pagerank(
             edges, iterations=iterations, damping=damping,
-            src=src, dst=dst, checkpoint_every=checkpoint_every,
+            src=src, dst=dst,
         )
 
     def _tr():
         return trustrank(
             edges, seeds, iterations=iterations, damping=damping,
             src=src, dst=dst, seed_col=seed_col,
-            checkpoint_every=checkpoint_every,
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -1663,7 +1497,6 @@ def landmark_distances(
     src: str = "src",
     dst: str = "dst",
     landmark_col: str = "node",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Per-landmark BFS → ``(node, landmark, dist)``: minimal hop count
     from EACH landmark separately (``bfs_distances`` collapses the seed
@@ -1677,67 +1510,30 @@ def landmark_distances(
     unreachable pairs are ABSENT. State is O(N × L) — landmark sets are
     deliberately small (16–64) by design; for |L| = 1..k wavefronts the
     loop runs ALL landmarks simultaneously (one frontier frame carries
-    the landmark column), so rounds = max eccentricity, not L × rounds.
+    the landmark column), so rounds = max eccentricity / stride, not
+    L × rounds.
 
-    Scale shape: edges hash-partitioned on ``src`` once and persisted;
-    each round equi-joins the (node, landmark) frontier against the
+    Runs on ``graphquery.semi_naive_frontier`` keyed by (landmark,
+    node): each round advances the (node, landmark) frontier over the
     edges and anti-joins the known pair set — per-pair derivation
-    happens exactly once, cycles terminate naturally, lineage is
-    truncated per round."""
-    spark = edges.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = (
-        edges.select(F.col(src).alias("_es"), F.col(dst).alias("_ed"))
-        .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .distinct()
-        .repartition(shuffle, "_es")
-        .persist()
-    )
-    known = (
-        landmarks.select(F.col(landmark_col).alias("landmark"))
+    happens exactly once and cycles terminate naturally."""
+    from .graphquery import semi_naive_frontier
+
+    return semi_naive_frontier(
+        edges,
+        lambda e: landmarks.select(F.col(landmark_col).alias("landmark"))
         .where(F.col(landmark_col).isNotNull())
         .distinct()
         .select(
             F.col("landmark").alias("node"), "landmark", F.lit(0).alias("dist")
-        )
-        .localCheckpoint(eager=True)
+        ),
+        ["landmark", "node"],
+        "dist",
+        0,
+        max_hops,
+        src,
+        dst,
     )
-    # known accumulates as a lazy union of checkpointed frontiers; the
-    # frontier-exhausted test rides the checkpoint as an observed count
-    # (same per-round job-structure fix as transitive_closure/bfs)
-    frontier = known.select("node", "landmark")
-    h = 0
-    while max_hops is None or h < max_hops:
-        nxt = (
-            frontier.join(e, on=frontier["node"] == e["_es"])
-            .select(F.col("_ed").alias("node"), "landmark")
-            .distinct()
-        )
-        new = nxt.join(
-            known.select("node", "landmark"),
-            on=["node", "landmark"],
-            how="left_anti",
-        )
-        h += 1
-        if checkpoint_every and (h % checkpoint_every) == 0:
-            from pyspark.sql import Observation
-
-            obs = Observation(f"lm_n_{h}")
-            new = new.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-                eager=True
-            )
-            try:
-                empty = obs.get["n"] == 0
-            except Exception:
-                empty = new.isEmpty()  # AQE pruned the metrics node
-            if empty:
-                break
-        elif new.isEmpty():
-            break
-        known = known.unionByName(new.withColumn("dist", F.lit(h)))
-        frontier = new
-    e.unpersist()
-    return known
 
 
 def landmark_distances_sql(
@@ -1820,9 +1616,9 @@ def strongly_connected_components(
 
     Scale shape: every step is an equi-join on node keys over the
     shrinking active subgraph (no pair materialization, no window);
-    per-iteration actions are the convergence counts inherent to
-    fixed-point iteration; lineage truncates via ``localCheckpoint``.
-    Self-loops drop up front (a self-loop never changes an SCC).
+    the convergence counts inherent to fixed-point iteration ride the
+    barriers that truncate lineage, and each superseded round is
+    released. Self-loops drop up front (a self-loop never changes an SCC).
     """
     spark = edges.sparkSession
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -1842,29 +1638,24 @@ def strongly_connected_components(
         .where(F.col("node").isNotNull())
         .distinct()
     )
-    # independent derivations of the same input — overlap their
-    # checkpoint jobs (guide §2.6, the connected_components init pattern)
+    n_active = F.count(F.lit(1))
+    # independent derivations of the same input — overlap their barrier
+    # jobs (the connected_components init pattern)
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fe = _pool.submit(
-            inheritable_thread_target(
-                lambda: e_lazy.localCheckpoint(eager=True)
-            )
-        )
+        _fe = _pool.submit(inheritable_thread_target(materialize), e_lazy)
         _fn = _pool.submit(
-            inheritable_thread_target(
-                lambda: nodes_lazy.localCheckpoint(eager=True)
-            )
+            inheritable_thread_target(materialize), nodes_lazy, n_active
         )
-        e = _fe.result()
-        nodes = _fn.result()
+        e, _ = _fe.result()
+        nodes, (n_nodes,) = _fn.result()
     assigned = None
     iters = 0
 
-    def _min_label_fixpoint(labels, lbl, edge_frame, tag):
+    def _min_label_fixpoint(labels, lbl, edge_frame):
         """Min-label propagation WITH POINTER JUMPING to the unique
         fixpoint: per iteration, relax ``lbl`` along ``edge_frame``
         (label(dst) folds into src's candidates... direction is encoded
@@ -1876,12 +1667,11 @@ def strongly_connected_components(
         halves the effective label-tree depth per round, so rounds drop
         from O(diameter) to O(log diameter) (VERDICT r5 #6). Carries any
         extra columns of ``labels`` through unchanged. The
-        changed-label test rides the per-iteration checkpoint as an
-        observed metric — no separate action."""
+        changed-label count rides the iteration's barrier. Returns
+        ``(labels, barrier)``: the fixpoint and the checkpoint it reads,
+        for the caller to release."""
         nonlocal iters
-        from pyspark.sql import Observation
-
-        f = labels
+        f, ckpt = labels, None
         while True:
             iters += 1
             if iters > max_iterations:
@@ -1897,9 +1687,11 @@ def strongly_connected_components(
                 .groupBy(F.col("dst").alias("node"))
                 .agg(F.min(lbl).alias("_lin"))
             )
-            relaxed = (
-                f.join(incoming, "node", "left")
-                .select(
+            # materialize before the self-join below — otherwise the
+            # expensive edge-join/groupBy subtree evaluates once per join
+            # side
+            relaxed, _ = materialize(
+                f.join(incoming, "node", "left").select(
                     "node",
                     *extra,
                     F.col(lbl).alias("_l0"),
@@ -1907,48 +1699,28 @@ def strongly_connected_components(
                         F.col(lbl), F.coalesce("_lin", F.col(lbl))
                     ).alias("_l1"),
                 )
-                # materialize before the self-join below — otherwise the
-                # expensive edge-join/groupBy subtree evaluates once per
-                # join side
-                .localCheckpoint(eager=True)
             )
             jump = relaxed.select(
                 F.col("node").alias("_jn"), F.col("_l1").alias("_jl")
             )
             l2 = F.least(F.col("_l1"), F.coalesce("_jl", F.col("_l1")))
-            obs = Observation(f"scc_{tag}_{iters}")
-            nxt = (
+            nxt, (changed,) = materialize(
                 relaxed.join(jump, relaxed["_l1"] == jump["_jn"], "left")
-                .select(
-                    "node",
-                    *extra,
-                    l2.alias(lbl),
-                    (l2 < F.col("_l0")).alias("_chg"),
-                )
-                .observe(
-                    obs,
-                    F.coalesce(
-                        F.sum(F.col("_chg").cast("long")), F.lit(0)
-                    ).alias("n"),
-                )
-                .localCheckpoint(eager=True)
+                .select("node", *extra, l2.alias(lbl), (l2 < F.col("_l0")).alias("_chg")),
+                F.coalesce(F.sum(F.col("_chg").cast("long")), F.lit(0)),
             )
-            try:
-                changed = (obs.get["n"] or 0) > 0
-            except Exception:
-                # AQE empty-relation propagation pruned the metrics node
-                changed = not nxt.filter(F.col("_chg")).isEmpty()
-            f = nxt.drop("_chg")
+            release(relaxed, ckpt)
+            f, ckpt = nxt.drop("_chg"), nxt
             if not changed:
-                return f
+                return f, ckpt
 
     for _ in range(int(max_rounds)):
-        if nodes.isEmpty():
+        if n_nodes == 0:
             break
         # (1) forward min-label fixpoint on the active subgraph:
         # f(v) = min active id that reaches v (contributions flow src→dst)
-        f = _min_label_fixpoint(
-            nodes.select("node", F.col("node").alias("f")), "f", e, "f"
+        f, f_ckpt = _min_label_fixpoint(
+            nodes.select("node", F.col("node").alias("f")), "f", e
         )
         # (2)+(3) backward mark within color classes, reformulated as a
         # second min-label fixpoint instead of the old one-hop-per-round
@@ -1959,7 +1731,7 @@ def strongly_connected_components(
         # root r (r is the min reacher of each member, and v reaches v),
         # so b(v) == f(v) ⟺ v reaches its root through same-color paths —
         # exactly the old marked set.
-        ec = (
+        ec, _ = materialize(
             e.join(
                 f.select(F.col("node").alias("src"), F.col("f").alias("_fs")),
                 "src",
@@ -1971,42 +1743,46 @@ def strongly_connected_components(
             .where(F.col("_fs") == F.col("_fd"))
             # reversed orientation: the fixpoint helper propagates src→dst
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            .localCheckpoint(eager=True)
         )
-        b = _min_label_fixpoint(
-            f.select("node", "f", F.col("node").alias("b")), "b", ec, "b"
+        b, b_ckpt = _min_label_fixpoint(
+            f.select("node", "f", F.col("node").alias("b")), "b", ec
         )
-        marked = (
-            b.where(F.col("b") == F.col("f"))
-            .select("node", "f")
-            .localCheckpoint(eager=True)
+        marked, _ = materialize(
+            b.where(F.col("b") == F.col("f")).select("node", "f")
         )
+        release(f_ckpt, ec, b_ckpt)
         part = marked.select("node", F.col("f").alias("scc_id"))
-        assigned = (
-            part
-            if assigned is None
-            else assigned.unionByName(part).localCheckpoint(eager=True)
-        )
+        if assigned is None:
+            assigned, assigned_ckpt = part, marked
+        else:
+            nxt_assigned, _ = materialize(assigned.unionByName(part))
+            release(assigned_ckpt)
+            assigned = assigned_ckpt = nxt_assigned
         # (4) shrink the active subgraph
-        nodes = nodes.join(marked, "node", "left_anti").localCheckpoint(
-            eager=True
+        nxt_nodes, (n_nodes,) = materialize(
+            nodes.join(marked, "node", "left_anti"), n_active
         )
-        e = (
-            e.join(nodes, e["src"] == nodes["node"], "left_semi")
+        nxt_e, _ = materialize(
+            e.join(nxt_nodes, e["src"] == nxt_nodes["node"], "left_semi")
             .join(
-                nodes.select(F.col("node").alias("_n2")),
+                nxt_nodes.select(F.col("node").alias("_n2")),
                 F.col("dst") == F.col("_n2"),
                 "left_semi",
             )
-            .localCheckpoint(eager=True)
         )
-    if not nodes.isEmpty():
+        release(nodes, e)
+        if marked is not assigned_ckpt:
+            release(marked)
+        nodes, e = nxt_nodes, nxt_e
+    if n_nodes:
         raise RuntimeError(
             f"strongly_connected_components did not converge in "
             f"{max_rounds} rounds"
         )
+    release(e)
     if assigned is None:  # edgeless input
         return nodes.select("node", F.col("node").alias("scc_id"))
+    release(nodes)
     return assigned
 
 
@@ -2015,14 +1791,17 @@ def strongly_connected_components_sql(
 ) -> str:
     """ANSI replay via pairwise reachability (recursive CTE) — fully
     independent of the coloring algorithm: ``scc_id(u)`` = min ``w``
-    with ``u→w`` and ``w→u`` (identity pairs included)."""
+    with ``u→w`` and ``w→u`` (identity pairs included). The node set
+    comes from the raw non-null ids, so a node whose only edge is a
+    self-loop is its own SCC, as in the operator."""
     return f"""
 WITH RECURSIVE ed AS (
   SELECT DISTINCT {src} AS s, {dst} AS d FROM {table}
   WHERE {src} IS NOT NULL AND {dst} IS NOT NULL AND {src} <> {dst}
 ),
 nd AS (
-  SELECT s AS node FROM ed UNION SELECT d FROM ed
+  SELECT {src} AS node FROM {table} WHERE {src} IS NOT NULL
+  UNION SELECT {dst} FROM {table} WHERE {dst} IS NOT NULL
 ),
 reach AS (
   SELECT s, d FROM ed
@@ -2090,46 +1869,40 @@ def dag_layers(
     raise doubles as a not-a-DAG detector rather than looping silently.
 
     Scale shape: one node-keyed join + grouped max per round over the
-    edge frame; lineage truncates via localCheckpoint; one convergence
-    count per round (inherent to fixed-point iteration)."""
-    e = (
+    edge frame, closed by a barrier that also observes the round's
+    changed-layer count (the convergence test)."""
+    e, _ = materialize(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
         .distinct()
-        .localCheckpoint(eager=True)
     )
     nodes = (
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("d").alias("node")))
         .distinct()
     )
-    lvl = nodes.select("node", F.lit(0).alias("layer")).localCheckpoint(
-        eager=True
-    )
+    lvl, _ = materialize(nodes.select("node", F.lit(0).alias("layer")))
     for _ in range(int(max_rounds)):
         incoming = (
             e.join(lvl, e["s"] == lvl["node"])
             .groupBy(F.col("d").alias("node"))
             .agg((F.max("layer") + 1).alias("_cand"))
         )
-        nxt = (
-            lvl.join(incoming, "node", "left")
-            .select(
+        cand = F.coalesce("_cand", F.col("layer"))
+        nxt, (changed,) = materialize(
+            lvl.join(incoming, "node", "left").select(
                 "node",
-                F.greatest(
-                    F.col("layer"), F.coalesce("_cand", F.col("layer"))
-                ).alias("layer"),
-                (
-                    F.coalesce("_cand", F.col("layer"))
-                    > F.col("layer")
-                ).alias("_chg"),
-            )
-            .localCheckpoint(eager=True)
+                F.greatest(F.col("layer"), cand).alias("layer"),
+                (cand > F.col("layer")).alias("_chg"),
+            ),
+            F.coalesce(F.sum(F.col("_chg").cast("long")), F.lit(0)),
         )
-        done = nxt.filter(F.col("_chg")).isEmpty()
-        lvl = nxt.drop("_chg")
-        if done:
-            return lvl
+        release(lvl)
+        lvl = nxt
+        if not changed:
+            release(e)
+            return lvl.drop("_chg")
+    release(e, lvl)
     raise RuntimeError(
         f"dag_layers did not converge in {max_rounds} rounds — "
         "cyclic input or depth beyond the cap (condense first)"

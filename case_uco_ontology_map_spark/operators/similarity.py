@@ -21,6 +21,7 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .barrier import materialize, release
 from .dedup import _cosine
 
 
@@ -314,10 +315,8 @@ def centroids_kmeans(
         # Lloyd iteration's assignment pass (3-4 full-corpus selections
         # for one 16k frame) — and a single materialization also pins
         # ONE sample across iterations instead of re-drawing it
-        vectors = (
-            vectors.orderBy(F.xxhash64(F.col(id_col)))
-            .limit(sample)
-            .localCheckpoint(eager=True)
+        vectors, _ = materialize(
+            vectors.orderBy(F.xxhash64(F.col(id_col))).limit(sample)
         )
     seeds = [
         [float(x) for x in r[vec_col]]
@@ -337,10 +336,7 @@ def centroids_kmeans(
         new = {r["cell"]: [float(p["m"]) for p in r["dm"]] for r in rows}
         centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
     if sample is not None:
-        try:  # reclaim the sample checkpoint's blocks (best-effort)
-            vectors._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
+        release(vectors)
     return centroids
 
 

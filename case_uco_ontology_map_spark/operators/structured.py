@@ -16,7 +16,7 @@ Scale stance (the 100 TB lens):
 * every extractor is a ``regexp_extract_all`` / ``get_json_object`` /
   ``json_object_keys`` projection — whole-stage-codegen JVM, zero
   shuffle, zero Python crossing (plan-asserted in
-  scripts/explain_plans.py);
+  tests/test_structured.py);
 * regexes are written in the Java ∩ RE2 subset (no backrefs, no
   lookaround) so the DuckDB contract oracles replay them verbatim;
 * JSON handling uses Spark's JSONPath built-ins, whose value normal

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .barrier import materialize, release
 from .sampling import hash_bucket
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype"]
@@ -224,7 +225,7 @@ def compact_triple_store(
     keys = [f"{p}\x1f{b}" for p, b in todo]
     # materialize BEFORE writing: Spark refuses to overwrite a path its
     # plan still reads, and the rewrite must not observe its own output
-    affected = store.filter(key.isin(keys)).localCheckpoint(eager=True)
+    affected, _ = materialize(store.filter(key.isin(keys)))
     prev_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )
@@ -240,6 +241,7 @@ def compact_triple_store(
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", prev_mode
         )
+        release(affected)
     files_after = sum(
         1
         for root, _dirs, files in os.walk(path)

@@ -66,19 +66,95 @@ def test_connected_components_self_loops_and_dups(spark):
     assert out == {1: 1, 2: 1, 5: 5, 7: 7}
 
 
-def test_connected_components_reclaims_round_blocks(spark):
-    """Iterative CC must not leak one checkpointed edge-set copy per round
-    into the block manager: after a run, only the blocks the RETURNED
-    frame still depends on (node set + final round) may remain — a
-    ~9-round chain leaves 2 persistent RDDs, not ~10."""
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(150)], "src long, dst long"
+def _chain(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], "src long, dst long"
     )
-    before = len(canonicalize._persistent_ids(spark))
-    out = canonicalize.connected_components(edges)
-    assert out.count() == 151
-    after = len(canonicalize._persistent_ids(spark))
-    assert after - before <= 2
+
+
+def _small_graph(spark):
+    # a cycle, a dangling node (3) and a pure source (4)
+    return spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (4, 2)], "src long, dst long"
+    )
+
+
+def _seeds(spark):
+    return spark.createDataFrame([(0,)], "node long")
+
+
+def _graphstats(name):
+    from case_uco_ontology_map_spark.operators import graphstats
+
+    return getattr(graphstats, name)
+
+
+# name → (run(spark, size), short size, long size): iteration counts for
+# the fixed-round operators, chain lengths for the fixpoint ones
+_ITERATIVE_OPERATORS = {
+    "connected_components": (
+        lambda spark, n: canonicalize.connected_components(_chain(spark, n)),
+        6, 40,
+    ),
+    "pagerank": (
+        lambda spark, n: _graphstats("pagerank")(_small_graph(spark), n),
+        2, 6,
+    ),
+    "trustrank": (
+        lambda spark, n: _graphstats("trustrank")(
+            _small_graph(spark), _seeds(spark), n
+        ),
+        2, 6,
+    ),
+    "hits": (
+        lambda spark, n: _graphstats("hits")(_small_graph(spark), n),
+        2, 6,
+    ),
+    "label_propagation": (
+        lambda spark, n: _graphstats("label_propagation")(
+            _small_graph(spark), n
+        ),
+        2, 6,
+    ),
+    "k_core": (
+        lambda spark, n: _graphstats("k_core")(_chain(spark, n), k=2),
+        4, 12,
+    ),
+    "strongly_connected_components": (
+        # an id-increasing chain resolves one SCC per outer round
+        lambda spark, n: _graphstats("strongly_connected_components")(
+            _chain(spark, n)
+        ),
+        2, 4,
+    ),
+    "dag_layers": (
+        lambda spark, n: _graphstats("dag_layers")(_chain(spark, n)),
+        3, 6,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ITERATIVE_OPERATORS))
+def test_iterative_operators_reclaim_round_blocks(spark, name):
+    """An iterative operator must not leak one materialized copy per
+    round into the block manager: after a call and a collect, only the
+    blocks the RETURNED frame still reads may remain (at most two: CC's
+    node set and final round, HITS's two half-steps), so a short and a
+    long run leave the same number of persisted RDDs behind. Nor may it
+    release a block the result still reads: the result collects again
+    after a JVM garbage collection."""
+    from case_uco_ontology_map_spark.operators.barrier import _persistent_ids
+
+    run, short, long = _ITERATIVE_OPERATORS[name]
+    left = []
+    for size in (short, long):
+        before = _persistent_ids(spark)
+        out = run(spark, size)
+        rows = sorted(map(tuple, out.collect()))
+        left.append(len(_persistent_ids(spark) - before))
+        spark.sparkContext._jvm.System.gc()
+        assert sorted(map(tuple, out.collect())) == rows
+    assert left[0] == left[1] <= 2, left
 
 
 def test_canonicalize_entities(spark):

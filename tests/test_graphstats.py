@@ -400,12 +400,10 @@ class TestLabelPropagation:
         out2 = sorted(
             map(
                 tuple,
-                label_propagation(
-                    g.repartition(7), 3, checkpoint_every=0
-                ).collect(),
+                label_propagation(g.repartition(7), 3).collect(),
             )
         )
-        assert out1 == out2  # partitioning/checkpoint-invariant
+        assert out1 == out2  # partitioning-invariant
         labels = dict(out1)
         # the self-vote breaks the 2-node synchronous oscillation: both
         # pairs converge on their minimal member
@@ -521,12 +519,10 @@ class TestRandomWalks:
         b = sorted(
             map(
                 tuple,
-                random_walks(
-                    edges.repartition(5), 1, 2, checkpoint_every=0
-                ).collect(),
+                random_walks(edges.repartition(5), 1, 2).collect(),
             )
         )
-        assert a == b  # partitioning/checkpoint invariant
+        assert a == b  # partitioning invariant
         # independent salts draw different walks somewhere
         c = sorted(map(tuple, random_walks(edges, 1, 2, salt="w2").collect()))
         assert a != c
@@ -1107,8 +1103,9 @@ class TestStronglyConnectedComponents:
         n = 40
         edges = [(i, (i * 7 + 3) % n) for i in range(n)] + [
             (i, (i - 1) // 2) for i in range(1, n)
-        ]
+        ] + [(99, 99)]  # a node whose only edge is a self-loop
         got = self._run(spark, edges)
+        assert (99, 99) in got
         con = duckdb.connect()
         con.register("e", pd.DataFrame(edges, columns=["src", "dst"]))
         want = sorted(

@@ -1,8 +1,9 @@
-"""Two-hop-stride frontier loops (r6 optimization) ≡ single-hop
-semantics: transitive_closure and bfs_distances must produce the exact
-(pair, minimal-hop) / (node, minimal-dist) sets for every max_hops
-parity, on multi-path graphs where a pair is reachable at several
-distances (the in-round min-dedup's job)."""
+"""Stride frontier loops ≡ single-hop semantics: transitive_closure,
+bfs_distances and landmark_distances (one shared kernel) must produce
+the exact (pair, minimal-hop) / (node, minimal-dist) /
+(node, landmark, minimal-dist) sets for every max_hops parity, on
+multi-path graphs where a key is reachable at several distances (the
+in-round min-dedup's job), with each key emitted exactly once."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,10 +54,9 @@ def test_transitive_closure_stride_exact(spark, max_hops):
     )
 
     df = spark.createDataFrame(EDGES, "src long, dst long")
-    got = {
-        (r["src"], r["dst"]): r["hops"]
-        for r in transitive_closure(df, max_hops=max_hops).collect()
-    }
+    rows = transitive_closure(df, max_hops=max_hops).collect()
+    got = {(r["src"], r["dst"]): r["hops"] for r in rows}
+    assert len(rows) == len(got)
     assert got == _closure_ref(EDGES, max_hops)
 
 
@@ -68,10 +68,9 @@ def test_bfs_distances_stride_exact(spark, max_hops):
 
     df = spark.createDataFrame(EDGES, "src long, dst long")
     sources = spark.createDataFrame([(1,), (99,)], "node long")  # 99 = ghost
-    got = {
-        (r["node"]): r["dist"]
-        for r in bfs_distances(df, sources, max_hops=max_hops).collect()
-    }
+    rows = bfs_distances(df, sources, max_hops=max_hops).collect()
+    got = {r["node"]: r["dist"] for r in rows}
+    assert len(rows) == len(got)
     ref = {1: 0, 99: 0}
     for (s, v), d in _closure_ref(EDGES, max_hops).items():
         if s == 1 and (v not in ref or d < ref[v]):
@@ -79,3 +78,42 @@ def test_bfs_distances_stride_exact(spark, max_hops):
     # node 1 reachable from itself around the cycle at 4 hops — but
     # sources sit at 0, which wins the min
     assert got == ref
+
+
+def _landmark_ref(edges, landmarks, max_hops=None):
+    """Driver-side per-landmark BFS: {(node, landmark): minimal dist},
+    each landmark at 0 of itself."""
+    from collections import defaultdict
+
+    adj = defaultdict(set)
+    for s, d in edges:
+        adj[s].add(d)
+    out = {}
+    for lm in landmarks:
+        dist = {lm: 0}
+        frontier = [lm]
+        while frontier and (max_hops is None or dist[frontier[0]] < max_hops):
+            nxt = []
+            for u in frontier:
+                for v in sorted(adj[u]):
+                    if v not in dist:
+                        dist[v] = dist[u] + 1
+                        nxt.append(v)
+            frontier = nxt
+        out.update({(v, lm): d for v, d in dist.items()})
+    return out
+
+
+@pytest.mark.parametrize("max_hops", [None, 1, 2, 3, 4, 5, 16])
+def test_landmark_distances_stride_exact(spark, max_hops):
+    from case_uco_ontology_map_spark.operators.graphstats import (
+        landmark_distances,
+    )
+
+    df = spark.createDataFrame(EDGES, "src long, dst long")
+    landmarks = [1, 4, 99]  # 99 = ghost
+    lms = spark.createDataFrame([(x,) for x in landmarks], "node long")
+    rows = landmark_distances(df, lms, max_hops=max_hops).collect()
+    got = {(r["node"], r["landmark"]): r["dist"] for r in rows}
+    assert len(rows) == len(got)
+    assert got == _landmark_ref(EDGES, landmarks, max_hops)
