@@ -8816,7 +8816,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     known positive (here: the true top-1) anti-joined out, every row
     below it moves up exactly one rank — arithmetic, not a re-rank.
     DuckDB replays tokenize → postings → score → rank → anti-join →
-    rank-gap end to end from the same parquet text."""
+    re-rank end to end from the same parquet text."""
     from case_uco_ontology_map_spark.operators.serving import (
         bm25_topk,
         build_postings,

@@ -1507,7 +1507,7 @@ def bench_queries(spark, sf_dir: str):
         for root, _dirs, files in os.walk(out):
             n_parq = sum(1 for f in files if f.endswith(".parquet"))
             files_total += n_parq
-            if f"sbkt={b}" in os.path.basename(root):
+            if os.path.basename(root) == f"sbkt={b}":
                 files_opened += n_parq
         n_preds = store.select("pred").distinct().count()
         if files_opened > n_preds:

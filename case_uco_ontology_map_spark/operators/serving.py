@@ -282,23 +282,22 @@ def hard_negatives(
 ) -> DataFrame:
     """BM25 hard-negative mining for retrieval training (the DPR-style
     generator): batch top-``k+1`` per query, drop each query's known
-    positive doc, close the rank gap in place, keep ``rank <= k`` →
+    positive docs, close the rank gaps in place, keep ``rank <= k`` →
     ``(query_id, doc_id, score, rank)``.
 
-    ``positives`` is ``(query_id, doc_id)`` — ONE known-relevant doc
-    per query (extra rows collapse via distinct; only the one that
-    ranked matters). Rank adjustment is arithmetic, not a re-rank: at
-    most one positive row leaves each query's top list, so every row
-    that ranked BELOW it moves up exactly one — no re-sort. A positive
+    ``positives`` is ``(query_id, doc_id)`` — any number of
+    known-relevant docs per query (duplicate rows collapse via
+    distinct). Rank adjustment is arithmetic, not a re-rank: every row
+    moves up by the number of positives ranked above it. A positive
     outside the top-(k+1) removes nothing and the ``rank <= k`` cut
-    restores the contract.
+    restores the contract; with p positives inside it, k+1-p rows
+    remain.
 
     Scale shape: the expensive BM25 scoring pipeline is evaluated
-    ONCE — the positive's rank comes from a windowed ``min`` over the
-    already-query-partitioned top-(k+1) frame (unbounded frame, no
-    ORDER BY, so no sort; same partitioning as the rank window ⇒ no
-    extra Exchange), never from a self-join that would duplicate the
-    scoring subplan."""
+    ONCE — the positives-above count is a running windowed ``count``
+    over the already-query-partitioned top-(k+1) frame (it orders at
+    most k+1 rows per query), never from a self-join that would
+    duplicate the scoring subplan."""
     from pyspark.sql import Window
 
     topk = bm25_topk(
@@ -310,12 +309,11 @@ def hard_negatives(
         pos.withColumn("_is_pos", F.lit(True)),
         ["query_id", "doc_id"], "left",
     )
-    pos_rank = F.min(
-        F.when(F.col("_is_pos"), F.col("rank"))
-    ).over(Window.partitionBy("query_id"))
-    shift = F.when(
-        pos_rank.isNotNull() & (F.col("rank") > pos_rank), F.lit(1)
-    ).otherwise(F.lit(0))
+    # running count up to and including this row: for a non-positive
+    # row, exactly the positives ranked above it
+    shift = F.count(F.when(F.col("_is_pos"), F.lit(1))).over(
+        Window.partitionBy("query_id").orderBy("rank")
+    )
     return (
         marked.withColumn("rank", (F.col("rank") - shift).cast("int"))
         .where(F.col("_is_pos").isNull() & (F.col("rank") <= k))
@@ -331,34 +329,28 @@ def hard_negatives_sql(
     max_df: Optional[int] = None,
     round_to: int = 6,
 ) -> str:
-    """ANSI replay of ``hard_negatives`` — ``bm25_topk_sql`` at k+1
-    with the positive marked by a left join and the rank gap closed by
-    the same windowed-min arithmetic (independently written, mirrors
-    the engine's single-evaluation shape)."""
+    """ANSI replay of ``hard_negatives`` — ``bm25_topk_sql`` at k+1,
+    the positives anti-joined out, and the survivors re-ranked with
+    ``ROW_NUMBER()`` (a re-rank, independent of the engine's
+    positives-above arithmetic)."""
     inner = bm25_topk_sql(
         postings, queries, k=k + 1, max_df=max_df, round_to=round_to
     )
     return f"""
 WITH topk AS ({inner}),
 pos AS (SELECT DISTINCT query_id, doc_id FROM {positives}),
-marked AS (
-  SELECT t.query_id, t.doc_id, t.score, t.rank,
-         p.doc_id IS NOT NULL AS is_pos,
-         MIN(CASE WHEN p.doc_id IS NOT NULL THEN t.rank END)
-           OVER (PARTITION BY t.query_id) AS pos_rank
+neg AS (
+  SELECT t.query_id, t.doc_id, t.score,
+         CAST(ROW_NUMBER() OVER (
+           PARTITION BY t.query_id ORDER BY t.rank
+         ) AS INT) AS rank
   FROM topk t
-  LEFT JOIN pos p
-    ON t.query_id = p.query_id AND t.doc_id = p.doc_id
+  WHERE NOT EXISTS (
+    SELECT 1 FROM pos p
+    WHERE p.query_id = t.query_id AND p.doc_id = t.doc_id
+  )
 )
-SELECT query_id, doc_id, score,
-       CAST(rank - CASE
-         WHEN pos_rank IS NOT NULL AND rank > pos_rank
-         THEN 1 ELSE 0 END AS INT) AS rank
-FROM marked
-WHERE NOT is_pos
-  AND rank - CASE
-        WHEN pos_rank IS NOT NULL AND rank > pos_rank
-        THEN 1 ELSE 0 END <= {k}
+SELECT query_id, doc_id, score, rank FROM neg WHERE rank <= {k}
 """
 
 

@@ -444,15 +444,29 @@ def run_pipeline(
     that builds the candidate pairs. With ``out_dir`` the metrics ride the
     entities write and land in ``out["canonicalize_drops"]`` AND in
     ``out_dir/run_report.json`` next to the lineage rows; without
-    ``out_dir`` the pipeline stays lazy, so ``out["drop_observation"]``
+    ``out_dir`` nothing is written, so ``out["drop_observation"]``
     carries the Observation — read ``dedup.drop_metrics(obs)`` after your
     own first action on ``out["entities"]``. None (never a fake zero)
     means the metrics node was pruned (see dedup.drop_metrics).
     """
+    from ..operators.mentions import build_gazetteer
+
     corpus = web_corpus(spark, sf_dir)
     pages = extracted_pages(corpus, lang=lang)
     records = page_records(pages)
-    triples = fused_page_triples(corpus, lang=lang, per_record_meta=per_record_meta)
+    # page triples [+ mention triples + per-surface audit markers] from ONE
+    # fused kernel, built once — one corpus scan, zero shuffles. The markers
+    # (operators/mentions.mention_marker_row) make the 5-col mention stream
+    # derivable from the triple stream, so out["mentions"] is a filter +
+    # from_json over the triples (once materialized, a pred-filtered pruned
+    # scan of the written sink), never a second kernel. Markers carry
+    # fingerprint NULL so resume manifests exclude them by construction;
+    # render/validation consumers drop them via strip_mention_markers.
+    gaz = build_gazetteer() if with_mentions else None
+    triples = fused_page_triples(
+        corpus, lang=lang, mentions=with_mentions, gazetteer=gaz,
+        per_record_meta=per_record_meta, surface_markers=with_mentions,
+    )
     out: Dict[str, DataFrame] = {
         "corpus": corpus,
         "pages": pages,
@@ -460,113 +474,71 @@ def run_pipeline(
         "triples": triples,
     }
 
+    if out_dir:
+        from ..streaming.resume import lineage, write_manifest
+
+        triples_path = os.path.join(out_dir, "triples")
+        (
+            triples
+            .withColumn("bucket", F.pmod(F.xxhash64("record_uuid"), F.lit(64)))
+            # hash-partition on the partition column before partitionBy:
+            # each bucket lands in exactly one task → one file per bucket
+            # (without it every kernel task writes into every bucket)
+            .repartition("bucket")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(triples_path)
+        )
+        # from here on `triples` is the WRITTEN parquet: mentions, entities,
+        # manifest and lineage scan it, not the logical plan — otherwise the
+        # extraction kernel runs once per consumer. One kernel pass total;
+        # every derived job reads back pruned columns from columnar storage.
+        triples = spark.read.parquet(triples_path)
+
     canon_kw = dict(canonicalize_opts or {})
     if with_mentions:
         from ..operators.canonicalize import canonicalize_entities
         from ..operators.dedup import drop_metrics, drop_observation
         from ..operators.mentions import (
-            build_gazetteer,
             class_centroids,
             gazetteer_classes,
             link_mentions,
             mentions_from_triples,
         )
 
-        gaz = build_gazetteer()
-        # page + mention triples + per-surface audit markers from ONE fused
-        # kernel — one corpus scan, zero shuffles. The markers
-        # (operators/mentions.mention_marker_row) make the 5-col mention
-        # stream derivable from the triple stream, so the with_mentions
-        # graph runs ONE extraction pass total: out["mentions"] is a
-        # filter + from_json over out["triples"] (and, once materialized,
-        # a pred-filtered pruned scan of the written sink — see below),
-        # never a second kernel. Markers carry fingerprint NULL so resume
-        # manifests exclude them by construction; render/validation
-        # consumers drop them via strip_mention_markers.
-        out["triples"] = fused_page_triples(
-            corpus, lang=lang, mentions=True, gazetteer=gaz,
-            per_record_meta=per_record_meta, surface_markers=True,
-        )
         # embedding link-scoring (north_star: gazetteer + embedding). The
         # class universe is STATIC (gazetteer values) — no data-dependent
         # collect; centroids come from class-labeled embedding vectors where
         # the table has them, else the deterministic class-name trigram
         # embedding (operators/mentions.class_centroids).
-        classes = gazetteer_classes(gaz)
         emb_path = os.path.join(sf_dir, "embeddings.parquet")
         emb = spark.read.parquet(emb_path) if os.path.exists(emb_path) else None
-        centroids = class_centroids(emb, classes)
-        found = link_mentions(mentions_from_triples(out["triples"]), centroids)
-        out["mentions"] = found
-        entities = found.select(
+        centroids = class_centroids(emb, gazetteer_classes(gaz))
+        mentions = mentions_from_triples(triples)
+        out["mentions"] = link_mentions(mentions, centroids)
+        # link scoring is 1:1 and adds columns only, so entities read the
+        # unlinked stream: canonicalize scans its input several times and
+        # none of them need the scoring kernel's JVM↔Python crossing
+        entities = mentions.select(
             F.xxhash64("surface", "entity_class").alias("entity_id"),
             F.concat_ws("|", "entity_class", "surface").alias("entity_key"),
         ).distinct()
-        # an Observation binds to ONE plan; this one serves the lazy
-        # entities frame (no-out_dir callers act on it themselves)
-        lazy_obs = drop_observation("canonicalize_drops")
+        obs = drop_observation("canonicalize_drops")
         out["entities"] = canonicalize_entities(
-            entities, observation=lazy_obs, **canon_kw
+            entities, observation=obs, **canon_kw
         )
-        out["drop_observation"] = lazy_obs
+        out["drop_observation"] = obs
 
     if out_dir:
-        from ..streaming.resume import lineage, write_manifest
-
-        triples_path = os.path.join(out_dir, "triples")
-        (
-            out["triples"]
-            .withColumn("bucket", F.pmod(F.xxhash64("record_uuid"), F.lit(64)))
-            # repartition on the partition column before partitionBy —
-            # otherwise every kernel task writes into every bucket
-            # directory (tasks × 64 small files); one shuffle buys one
-            # right-sized file per bucket
-            .repartition(64, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(triples_path)
-        )
-        # manifest + lineage + mentions scan the WRITTEN parquet, not the
-        # logical plan — otherwise the extraction kernel runs once per
-        # consumer (write, manifest distinct, lineage agg, mention derive).
-        # One kernel pass total; every derived job reads back pruned
-        # columns from columnar storage.
-        written = spark.read.parquet(triples_path)
-        if with_mentions:
-            from ..operators.canonicalize import (
-                canonicalize_entities as _canon,
-            )
-            from ..operators.mentions import (
-                link_mentions as _link,
-                mentions_from_triples as _mft,
-            )
-
-            out["mentions"] = _link(_mft(written), centroids)
-            # fresh Observation for the materialized plan — the lazy one
-            # above is superseded (its plan never runs under out_dir)
-            written_obs = drop_observation("canonicalize_drops_written")
-            out["entities"] = _canon(
-                _mft(written)
-                .select(
-                    F.xxhash64("surface", "entity_class").alias("entity_id"),
-                    F.concat_ws("|", "entity_class", "surface").alias(
-                        "entity_key"
-                    ),
-                )
-                .distinct(),
-                observation=written_obs,
-                **canon_kw,
-            )
-            out["drop_observation"] = written_obs
         write_manifest(
             # isNotNull: no-op in "all" mode, selects the one meta-carrying
             # row per record in "first" mode (same manifest either way)
-            written.filter(F.col("fingerprint").isNotNull())
+            triples.filter(F.col("fingerprint").isNotNull())
             .select("fingerprint", "record_uuid")
             .distinct(),
             os.path.join(checkpoint_dir or out_dir, "manifest"),
         )
-        out["lineage"] = lineage(written)
+        out["lineage"] = lineage(triples)
         if "entities" in out:
             # north_rule: partitioned TRIPLE AND ENTITY tables. Entities
             # bucket on the canonical id so all members of one canonical
@@ -577,7 +549,7 @@ def run_pipeline(
                 .withColumn(
                     "bucket", F.pmod(F.xxhash64("canonical_id"), F.lit(16))
                 )
-                .repartition(16, "bucket")  # one file per bucket (see above)
+                .repartition("bucket")  # one file per bucket (see above)
                 .write.mode("overwrite")
                 .partitionBy("bucket")
                 .parquet(os.path.join(out_dir, "entities"))
@@ -587,7 +559,7 @@ def run_pipeline(
             # belong in the run's audit trail next to the lineage rows
             # (no silent caps: a 100 TB operator reads dropped_buckets in
             # the run report, not in a test harness)
-            out["canonicalize_drops"] = drop_metrics(written_obs)
+            out["canonicalize_drops"] = drop_metrics(obs)
             import json as _json
 
             with open(os.path.join(out_dir, "run_report.json"), "w") as fh:

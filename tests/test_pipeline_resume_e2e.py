@@ -252,3 +252,42 @@ def test_first_meta_materialization_same_manifest(spark, sf_dir, tmp_path):
         .first()
     )
     assert per_rec == (1, 1)
+
+
+def test_run_pipeline_canonicalizes_once(spark, sf_dir, tmp_path, monkeypatch):
+    """with_mentions + out_dir runs ONE canonicalize — over the written
+    triple table — and its entity table equals, row for row, the entities
+    of the same call without out_dir. Both bucket tables hold exactly one
+    parquet file per bucket directory."""
+    from case_uco_ontology_map_spark.operators import canonicalize
+    from case_uco_ontology_map_spark.plans.pipeline import run_pipeline
+
+    calls = []
+    real_cc = canonicalize.connected_components
+
+    def counting_cc(*args, **kwargs):
+        calls.append(1)
+        return real_cc(*args, **kwargs)
+
+    monkeypatch.setattr(canonicalize, "connected_components", counting_cc)
+    out_dir = str(tmp_path / "kg")
+    run_pipeline(spark, sf_dir, with_mentions=True, out_dir=out_dir)
+    assert len(calls) == 1
+
+    cols = ["entity_id", "entity_key", "canonical_id"]
+    lazy = run_pipeline(spark, sf_dir, with_mentions=True)["entities"]
+    want = sorted(tuple(r) for r in lazy.select(*cols).collect())
+    written = spark.read.parquet(os.path.join(out_dir, "entities"))
+    got = sorted(tuple(r) for r in written.select(*cols).collect())
+    assert got == want and got
+
+    for table, n_buckets in (("triples", 64), ("entities", 16)):
+        root = os.path.join(out_dir, table)
+        buckets = [d for d in os.listdir(root) if d.startswith("bucket=")]
+        assert 0 < len(buckets) <= n_buckets
+        for d in buckets:
+            files = [
+                f for f in os.listdir(os.path.join(root, d))
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == 1, (table, d, files)

@@ -186,6 +186,53 @@ def test_hard_negatives_rank_gap_closes(spark):
     assert [r.rank for r in sorted(got, key=lambda r: r.rank)] == [1, 2]
 
 
+def test_hard_negatives_two_positives_ranked(spark):
+    """Positives at ranks 1 and 3 of the top-(k+1): each row moves up by
+    the number of positives ranked above it (old rank 4 → 2, not 3), and
+    the ROW_NUMBER oracle over the same postings agrees."""
+    import duckdb
+
+    from case_uco_ontology_map_spark.operators.serving import (
+        hard_negatives,
+        hard_negatives_sql,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "x x x x x"), (2, "x x x x"), (3, "x x x"), (4, "x x"),
+         (5, "x"), (6, "y")],
+        "doc_id long, text string",
+    )
+    postings = build_postings(docs)
+    stats = posting_stats(postings)
+    queries = spark.createDataFrame(
+        [("q", "x")], "query_id string, term string"
+    )
+    base = bm25_topk(postings, stats, queries, k=4).collect()
+    order = [r.doc_id for r in sorted(base, key=lambda r: r.rank)]
+    positives = spark.createDataFrame(
+        [("q", order[0]), ("q", order[2])], "query_id string, doc_id long"
+    )
+    got = sorted(
+        (r.rank, r.doc_id)
+        for r in hard_negatives(
+            postings, stats, queries, positives, k=3
+        ).collect()
+    )
+    assert got == [(1, order[1]), (2, order[3])]
+
+    con = duckdb.connect()
+    con.register("postings_t", postings.toPandas())
+    con.register("queries_t", queries.toPandas())
+    con.register("positives_t", positives.toPandas())
+    oracle = sorted(
+        (int(rank), int(doc))
+        for _, doc, _, rank in con.execute(
+            hard_negatives_sql("postings_t", "queries_t", "positives_t", k=3)
+        ).fetchall()
+    )
+    assert oracle == got
+
+
 def test_hard_negatives_positive_outside_topk(spark):
     """A positive that never ranked removes nothing and shifts nothing."""
     from case_uco_ontology_map_spark.operators.serving import (
