@@ -23,12 +23,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 AMPLIFY = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "16"))
 
 
 def make_spark(cores: int):
     from pyspark.sql import SparkSession
+
+    from perfbench.host import driver_memory_mb
 
     return (
         SparkSession.builder.master(f"local[{cores}]")
@@ -36,7 +38,7 @@ def make_spark(cores: int):
         .config("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{driver_memory_mb()}m")
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
@@ -1584,6 +1586,7 @@ def bench_queries(spark, sf_dir: str):
             qterms, "query_id string, term string"
         )
         n = bm25_topk(postings, stats, queries, k=10).count()
+        postings.unpersist()
         if n != 8 * 10:
             raise RuntimeError(f"bm25 returned {n} != 80 rows")
         return n

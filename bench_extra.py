@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 AMPLIFY = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "16"))
 
 
@@ -397,7 +397,9 @@ def text_index_breakdown():
         def run():
             postings = build_postings(corpus, id_col="url", text_col="text")
             stats = posting_stats(postings)
-            return bm25_topk(postings, stats, queries, k=10).count()
+            n = bm25_topk(postings, stats, queries, k=10).count()
+            postings.unpersist()
+            return n
 
         out = {"text_index": timed(spark, "text_index", run, repeats=2)}
         print(json.dumps({"text_index": out}))

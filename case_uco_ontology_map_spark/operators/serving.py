@@ -114,8 +114,9 @@ def build_postings(
     single action (guide §7.2 duplicated subtrees; measured 3 evaluations
     in the bench's text_index stage). At 100 TB the build is written to
     term-bucketed parquet instead (the layout above) and reuse is a
-    storage read — persist is the in-session equivalent. Blocks are
-    released when the frame is garbage-collected (ContextCleaner)."""
+    storage read — persist is the in-session equivalent. The caller owns
+    those blocks: ``unpersist()`` the frame after the last action that
+    reads it (nothing else releases them while the session lives)."""
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), r"\s+"),
         lambda x: x != F.lit(""),

@@ -30,7 +30,9 @@ import hashlib
 import json
 import os
 import re
+import threading
 import uuid
+from collections import OrderedDict
 from datetime import datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Dict, Iterator, Optional, Sequence, Tuple
@@ -478,6 +480,67 @@ def list_sessions(sessions_dir: str) -> Dict[str, Any]:
     return {"sessions": sessions, "in_progress": in_progress}
 
 
+class TableResolver:
+    """Path → parquet ``DataFrame``, read once per table snapshot.
+
+    ``spark.read.parquet`` lists every file under the table and infers
+    its schema: two Spark jobs (a parallel listing job once the table has
+    more than 32 partition directories) before a query's own jobs run.
+    The resolver keeps the resolved relation (file index plus schema) per
+    path and reuses it while the snapshot token is unchanged. The token
+    is one Hadoop ``FileSystem.listStatus`` of the table root — name,
+    modification time and length of each entry — so it works the same on
+    ``file:``, ``hdfs:`` and ``s3a:`` paths. A Spark commit rewrites
+    ``_SUCCESS``, an overwrite recreates every partition directory, and
+    adding or removing a file inside a partition directory changes that
+    directory's modification time; each changes the token.
+
+    Depth limit: the token reads only the root, so a non-Spark edit two
+    partition levels deep (``a=1/b=2/part-*``) is not seen until something
+    at the root changes.
+
+    Only plans are held (no ``cache()``/``persist``, so no blocks), for at
+    most ``MAX_TABLES`` paths, the oldest resolved first out. When the
+    listing fails (say, a missing path), the resolver falls through to a
+    plain read, which raises Spark's own error, and caches nothing. Safe
+    to call from concurrent handler threads."""
+
+    MAX_TABLES = 8
+
+    def __init__(self, spark):
+        self._spark = spark
+        self._lock = threading.Lock()
+        self._tables: "OrderedDict[str, Tuple[list, Any]]" = OrderedDict()
+
+    def _snapshot(self, path: str) -> list:
+        sc = self._spark.sparkContext
+        root = sc._jvm.org.apache.hadoop.fs.Path(path)
+        fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+        return sorted(
+            (st.getPath().getName(), st.getModificationTime(), st.getLen())
+            for st in fs.listStatus(root)
+        )
+
+    def __call__(self, path: str):
+        try:
+            token = self._snapshot(path)
+        except Exception:  # noqa: BLE001 — let the read raise Spark's error
+            with self._lock:
+                self._tables.pop(path, None)
+            return self._spark.read.parquet(path)
+        with self._lock:
+            hit = self._tables.get(path)
+        if hit is not None and hit[0] == token:
+            return hit[1]
+        df = self._spark.read.parquet(path)
+        with self._lock:
+            self._tables.pop(path, None)
+            self._tables[path] = (token, df)
+            while len(self._tables) > self.MAX_TABLES:
+                self._tables.popitem(last=False)
+        return df
+
+
 class _Handler(BaseHTTPRequestHandler):
     """Routes mirror the reference app: GET /health, GET /,
     POST /invoke-streaming — plus the read-only status surface
@@ -710,9 +773,7 @@ class _Handler(BaseHTTPRequestHandler):
             from .operators.sparql import SparqlSyntaxError, sparql_query
 
             try:
-                df = sparql_query(
-                    self.server.spark.read.parquet(path), body["query"]
-                )
+                df = sparql_query(self.server.tables(path), body["query"])
             except SparqlSyntaxError as exc:
                 self._json(422, {"detail": f"SPARQL syntax: {exc}"})
                 return
@@ -747,7 +808,8 @@ def serve(
     (``server.server_address[1]``). Requests with bodies over
     ``max_body_bytes`` are rejected 413 before the body is read.
     ``triples_path``: default parquet table for POST /sparql;
-    ``max_query_rows`` bounds what /sparql will collect to the driver."""
+    ``max_query_rows`` bounds what /sparql will collect to the driver;
+    /sparql reads each table once per snapshot (``TableResolver``)."""
     server = ThreadingHTTPServer((host, port), _Handler)
     server.spark = spark
     server.sessions_dir = sessions_dir or os.path.join(
@@ -756,4 +818,5 @@ def serve(
     server.max_body_bytes = max_body_bytes
     server.triples_path = triples_path
     server.max_query_rows = max_query_rows
+    server.tables = TableResolver(spark)
     return server

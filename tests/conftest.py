@@ -37,7 +37,6 @@ def sf_dir():
 # (/root/reference/test.json:1-35); the FIXTURES.md §3b golden fingerprints/
 # IRIs were replayed from exactly these record values.
 _MFT_FIXTURE_PATH = "/root/reference/test.json"
-_PREFETCH_FIXTURE_PATH = "/root/reference/tests/fixtures/windows_prefetch.json"
 
 
 def _load_json(path, fallback):

@@ -1,8 +1,10 @@
-"""Golden end-to-end on the REFERENCE's own fixtures through the Spark
-kernel: MFT records (test.json) and Windows Prefetch (array-valued field) —
-the triple P/R ≥ 0.95 gate of BASELINE.md, measured exactly."""
+"""Golden end-to-end through the Spark kernel: MFT records (test.json) and
+Windows Prefetch (array-valued field, a committed synthetic fixture of the
+FIXTURES.md §2b schema) — the triple P/R ≥ 0.95 gate of BASELINE.md,
+measured exactly."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +17,8 @@ from case_uco_ontology_map_spark.refmap.graph import (
     nodes_to_triples,
 )
 from case_uco_ontology_map_spark.refmap.planner import OntologyContext, plan_record
+
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 def _oracle_triples(records, omap):
@@ -69,7 +73,7 @@ def test_mft_golden_pr(spark, mft_payload, mft_ontology_map):
 def test_prefetch_golden_with_array_field(spark):
     """Prefetch fixture: array-valued ReferencedPaths must survive the
     Arrow round-trip and fingerprint identically to the pure-Python path."""
-    with open("/root/reference/tests/fixtures/windows_prefetch.json") as fh:
+    with open(os.path.join(FIXTURES, "windows_prefetch.json")) as fh:
         prefetch = json.load(fh)
     payload = {
         "artifact_type": "Windows Prefetch",

@@ -1,6 +1,11 @@
 """Ontology dictionary compile regression tests (S3/A6/SET2)."""
 
+import os
+
+import pytest
+
 from case_uco_ontology_map_spark.refmap.ontology import (
+    DEFAULT_TTL_DIR,
     compile_dictionary,
     load_dictionary,
     ontology_map_for_classes,
@@ -8,6 +13,11 @@ from case_uco_ontology_map_spark.refmap.ontology import (
 
 
 def test_compile_matches_committed_dictionary():
+    if not os.path.isdir(DEFAULT_TTL_DIR):
+        pytest.skip(
+            f"TTL ontology directory {DEFAULT_TTL_DIR} is absent; the "
+            "committed ontology_dictionary.json is the artifact"
+        )
     fresh = compile_dictionary()
     committed = load_dictionary()
     assert fresh["classes"].keys() == committed["classes"].keys()

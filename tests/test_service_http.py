@@ -7,6 +7,7 @@ stream_complete terminator, stream_error in-band) and services.py:67-72
 (session-id shape)."""
 
 import json
+import shutil
 import threading
 from http.client import HTTPConnection
 
@@ -505,3 +506,75 @@ def test_graph_view_model_and_svg_shapes():
     page = render_graph_page("s_1", doc)
     assert page.startswith("<!doctype html>")
     assert "4 nodes, 3 edges" in page
+
+
+def _count_parquet_reads(monkeypatch):
+    """Wrap DataFrameReader.parquet and return the list its calls land in."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    real = DataFrameReader.parquet
+
+    def counted(self, *paths, **kw):
+        calls.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    return calls
+
+
+def _sparql(server, path):
+    query = "SELECT ?s ?o WHERE { ?s kb:p ?o . }"
+    status, data = _request(
+        server,
+        "POST",
+        "/sparql",
+        body=json.dumps({"query": query, "triples_path": path}),
+    )
+    return status, json.loads(data)
+
+
+def _write_bucketed(spark, path, n, mode="errorifexists"):
+    rows = [(f"kb:s{i}", "kb:p", f"o{i}", i % 4) for i in range(n)]
+    spark.createDataFrame(
+        rows, "subj string, pred string, obj string, bucket int"
+    ).write.mode(mode).partitionBy("bucket").parquet(path)
+
+
+def test_sparql_reads_each_table_snapshot_once(
+    server, spark, tmp_path, monkeypatch
+):
+    path = str(tmp_path / "triples")
+    _write_bucketed(spark, path, 6)
+    calls = _count_parquet_reads(monkeypatch)
+    first = _sparql(server, path)
+    again = _sparql(server, path)
+    assert first == again and first[0] == 200
+    assert sorted(first[1]["rows"]) == [[f"kb:s{i}", f"o{i}"] for i in range(6)]
+    assert len(calls) == 1
+
+    # an overwrite is a new snapshot: read again, serve the new rows
+    _write_bucketed(spark, path, 3, mode="overwrite")
+    status, out = _sparql(server, path)
+    assert status == 200 and len(calls) == 2
+    assert sorted(out["rows"]) == [[f"kb:s{i}", f"o{i}"] for i in range(3)]
+
+    # a deleted table is Spark's PATH_NOT_FOUND, never the stale rows
+    shutil.rmtree(path)
+    status, out = _sparql(server, path)
+    assert status == 500 and "PATH_NOT_FOUND" in out["detail"]
+    assert not server.tables._tables
+
+
+def test_sparql_table_map_is_bounded(server, spark, tmp_path):
+    seed = str(tmp_path / "t0")
+    _write_bucketed(spark, seed, 2)
+    bound = server.tables.MAX_TABLES
+    paths = [seed]
+    for i in range(1, bound + 2):
+        paths.append(str(tmp_path / f"t{i}"))
+        shutil.copytree(seed, paths[-1])
+    for p in paths:
+        status, out = _sparql(server, p)
+        assert status == 200 and out["row_count"] == 2
+    assert len(server.tables._tables) == bound

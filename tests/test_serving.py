@@ -90,6 +90,25 @@ def test_bm25_hand_computed(spark):
     }
 
 
+def test_postings_unpersist_leaves_no_blocks(spark):
+    """build_postings persists its result for its consumers; the caller's
+    unpersist after the last action is the release, and it leaves no
+    persisted RDD behind."""
+    from case_uco_ontology_map_spark.operators.barrier import _persistent_ids
+
+    before = _persistent_ids(spark)
+    docs = spark.createDataFrame(
+        [(1, "apple banana"), (2, "banana cherry")], "doc_id long, text string"
+    )
+    postings = build_postings(docs)
+    queries = spark.createDataFrame([("q", "banana")], "query_id string, term string")
+    rows = bm25_topk(postings, posting_stats(postings), queries, k=2).collect()
+    assert len(rows) == 2
+    assert _persistent_ids(spark) - before
+    postings.unpersist()
+    assert _persistent_ids(spark) - before == set()
+
+
 def test_bm25_max_df_prunes_stopwords(spark):
     docs = spark.createDataFrame(
         [(1, "the apple"), (2, "the pear"), (3, "the fig")],
