@@ -2,10 +2,9 @@
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line
 {"metric", "value", "unit": "sec", "queries": {...}, "sf", ...extras}.
 
---scaling runs the same job at two parallelism levels (local[8] vs
-local[32]) on the same input and reports throughput at both plus the
-N→4N scaling efficiency (the sandbox proxy for two cluster sizes —
-BASELINE.md row 3), writing BENCH/BASELINE.md.
+--slopes runs the stages at two amplification tiers, each in a fresh
+``bench.py`` subprocess, and reports the per-stage data-scaling slope
+(BENCH/tier2_slopes.json).
 
 The corpus is amplified deterministically (copies with distinct urls →
 distinct fingerprints) so throughput is steady-state, not session-startup.
@@ -62,7 +61,7 @@ def make_spark(cores: int):
             os.environ.get("SPARK_GRAFT_SPLIT_BYTES", "8m"),
         )
         # Throughput-batch GC: this job allocates UnsafeRows/Arrow buffers at
-        # a rate proportional to core count; tunable so the scaling protocol
+        # a rate proportional to core count; tunable so a timing
         # measures dataflow, not collector choice.
         .config(
             "spark.driver.extraJavaOptions",
@@ -114,10 +113,9 @@ def bench_queries(spark, sf_dir: str):
     # parquet decode is per-task CPU work that scales with cores).
     shared = os.environ.get("SPARK_GRAFT_SHARED_STAGE")
     if shared:
-        # pre-staged corpus reuse (the scaling harness): many concurrent
-        # measurement jobs read ONE staged parquet corpus instead of each
-        # writing its own copy — stage it once up front (bench.py
-        # --stage-corpus) so the concurrent readers never race a writer
+        # pre-staged corpus reuse (scripts/tier3_slopes.py): its batches
+        # read ONE staged parquet corpus instead of each writing its own
+        # copy — staged once up front by bench.py --stage-corpus
         stage_dir = os.path.join(shared, f"amp{AMPLIFY}")
         if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
             corpus.write.mode("overwrite").parquet(stage_dir)
@@ -929,7 +927,7 @@ def bench_queries(spark, sf_dir: str):
     ann_state = {}
 
     def _ann_stage():
-        """Lazy (the --scaling mode never touches ANN): amplify + stage the
+        """Lazy (BENCH_ONLY may skip every ANN stage): amplify + stage the
         embeddings and fix the query batch. The queries are the 8
         lowest-id base vectors — driver-small, as in any top-k serving
         path — fixed so brute and IVF score the same batch."""
@@ -979,9 +977,9 @@ def bench_queries(spark, sf_dir: str):
         subsample (≈256 points/cell — the mean estimate stops improving
         long before the full corpus, while each extra point costs k dot
         products/iteration), then ONE vectorized full-corpus assignment
-        pass (impl='arrow': Arrow-batched numpy matmul — the expr kernel
-        is the oracle-replayable reference, ~100× slower at k=64) into
-        the cell-partitioned parquet write."""
+        pass (Arrow-batched numpy matmul — the Catalyst assign_cells the
+        contract oracle replays is ~100× slower at k=64) into the
+        cell-partitioned parquet write."""
         from case_uco_ontology_map_spark.operators.similarity import (
             centroids_kmeans,
             write_ivf_index,
@@ -989,11 +987,9 @@ def bench_queries(spark, sf_dir: str):
 
         _ann_stage()
         ann_state["centroids"] = centroids_kmeans(
-            ann_state["emb"], k=64, iterations=3, impl="arrow", sample=16384
+            ann_state["emb"], k=64, iterations=3, sample=16384
         )
-        write_ivf_index(
-            ann_state["emb"], ann_state["centroids"], ivf_path, impl="arrow"
-        )
+        write_ivf_index(ann_state["emb"], ann_state["centroids"], ivf_path)
         return len(ann_state["centroids"])
 
     def q_ann_index_build():
@@ -1051,7 +1047,6 @@ def bench_queries(spark, sf_dir: str):
             k=5,
             overfetch=4,
             full_vectors=ann_state["emb"],
-            impl="arrow",
         ).count()
 
     def q_link_extract():
@@ -1319,7 +1314,6 @@ def bench_queries(spark, sf_dir: str):
                 k=5,
                 overfetch=4,
                 full_vectors=ann_state["emb"],
-                impl="arrow",
             )
             d = brute_q.count()
             extras["sq8_recall_at5"] = (
@@ -1344,7 +1338,6 @@ def bench_queries(spark, sf_dir: str):
                 k=5,
                 overfetch=16,
                 full_vectors=ann_state["emb"],
-                impl="arrow",
             )
             extras["sq8_recall_at5_of16"] = (
                 round(
@@ -1377,7 +1370,6 @@ def bench_queries(spark, sf_dir: str):
                 k=5,
                 overfetch=4,
                 full_vectors=emb_base,
-                impl="arrow",
             )
             db = brute_b.count()
             extras["sq8_recall_at5_base"] = (
@@ -1708,8 +1700,8 @@ HEADLINE_STAGES = (
 def run_once(cores: int, sf_dir: str, repeats: int = None):
     """Best-of-N steady-state timing per query (cold JVM/codegen effects and
     GC pauses otherwise dominate a seconds-scale job). SPARK_GRAFT_BENCH_ONLY
-    (comma list) restricts the query set — the scaling mode uses it to time
-    just the headline kg_triples job."""
+    (comma list) restricts the query set — the slopes mode uses it to time
+    a batch of stages per tier."""
     if repeats is None:
         repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
@@ -1759,8 +1751,8 @@ def run_once(cores: int, sf_dir: str, repeats: int = None):
 def main():
     if "--stage-corpus" in sys.argv:
         # pre-stage the amplified corpus into SPARK_GRAFT_SHARED_STAGE so
-        # the scaling harness's concurrent jobs read one staged copy
-        # (run with the SAME SPARK_GRAFT_AMPLIFY the scaling jobs use)
+        # scripts/tier3_slopes.py's batches read one staged copy (run
+        # with the SAME SPARK_GRAFT_AMPLIFY the batches use)
         spark = make_spark(CPUS)
         try:
             _, n_docs, _, _ = bench_queries(spark, SF_DIR)
@@ -1768,28 +1760,8 @@ def main():
         finally:
             spark.stop()
         return
-    if "--scaling" in sys.argv:
-        report_scaling()
-        return
     if "--slopes" in sys.argv:
         report_slopes()
-        return
-    if "--once" in sys.argv:
-        cores = int(sys.argv[sys.argv.index("--once") + 1])
-        n_docs, timings, counts, _ = run_once(cores, SF_DIR)
-        print(
-            json.dumps(
-                {
-                    "cores": cores,
-                    "docs": n_docs,
-                    "sec": timings["kg_triples"],
-                    "docs_per_sec": round(n_docs / timings["kg_triples"], 1),
-                    "triples_per_sec": round(
-                        counts["kg_triples"] / timings["kg_triples"], 1
-                    ),
-                }
-            )
-        )
         return
     n_docs, timings, counts, extras = run_once(CPUS, SF_DIR)
     headline = {k: timings[k] for k in HEADLINE_STAGES if k in timings}
@@ -1962,160 +1934,6 @@ def report_slopes():
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/tier2_slopes.json", "w") as fh:
         json.dump(out, fh, indent=1)
-
-
-def report_scaling():
-    """Two-cluster-size proxy (north_rule): N vs 4N cores on the same
-    input, saturated-socket protocol.
-
-    A real N-node vs 4N-node comparison runs FULLY LOADED machines at both
-    sizes. On one shared 32-core box, a lone taskset-pinned local[8] job
-    leaves 24 cores idle, so its 8 cores run at idle-socket turbo clocks
-    and uncontended memory bandwidth — measured ~50k docs/s isolated vs
-    ~27k docs/s when the whole socket is busy, a 1.8× hardware (not
-    software) asymmetry that makes any single-job 8-vs-32 ratio measure
-    the CPU's frequency governor, not the engine.
-
-    Protocol therefore saturates the socket at BOTH sizes:
-      - N level: FOUR concurrent local[8] jobs taskset-pinned to disjoint
-        core quartets (0-7, 8-15, 16-23, 24-31), each running the full
-        job on the same input — the proxy for four independent 8-core
-        nodes. Aggregate throughput = sum of the four jobs' docs/sec.
-      - 4N level: ONE local[32] job pinned 0-31 — the same 32 cores
-        coordinated as a single cluster.
-    Efficiency = T(1×32) / T(4×8-concurrent), computed WITHIN each trial
-    (the phases run back-to-back, limiting shared-VM drift), median over
-    trials. This isolates what the rule is about — the coordination cost
-    of running one 4N-size job instead of four N-size jobs — from
-    single-box hardware saturation, which hits both phases equally.
-
-    Each job runs in its OWN subprocess (fresh JVM): a stopped local
-    SparkSession leaves JVM memory settings behind and contaminates a
-    second in-process session. Input amplified to ≥1.28M docs so each
-    timed run is tens of seconds of real work and fixed costs (scheduling,
-    Arrow warm paths) amortize; warmup + best-of-N repeats per job because
-    JVM JIT keeps improving over the first ~3 executions — steady-state is
-    what a long-running 100 TB job actually sees."""
-    import subprocess
-
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_AMPLIFY=str(max(AMPLIFY * 4, 256)),
-        SPARK_GRAFT_BENCH_ONLY="kg_triples",
-        SPARK_GRAFT_BENCH_REPEATS=os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"),
-    )
-    n_trials = int(os.environ.get("SPARK_GRAFT_SCALING_TRIALS", "3"))
-    quartets = ["0-7", "8-15", "16-23", "24-31"]
-
-    def launch(pin: str, cores: int):
-        return subprocess.Popen(
-            ["taskset", "-c", pin, sys.executable,
-             os.path.abspath(__file__), "--once", str(cores)],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            text=True,
-            env=env,
-        )
-
-    def result(proc) -> dict:
-        stdout, _ = proc.communicate()
-        if proc.returncode != 0:
-            raise RuntimeError(f"scaling subprocess failed rc={proc.returncode}")
-        return json.loads(
-            [l for l in stdout.splitlines() if l.startswith("{")][-1]
-        )
-
-    trials = []
-    for _ in range(n_trials):
-        # phase 1: four concurrent pinned local[8] jobs (the "N cluster")
-        procs = [launch(pin, 8) for pin in quartets]
-        small = [result(p) for p in procs]
-        agg8 = round(sum(r["docs_per_sec"] for r in small), 1)
-        # phase 2: one local[32] job on the same 32 cores (the "4N cluster")
-        big = result(launch("0-31", 32))
-        trials.append(
-            {
-                "agg_4x8_docs_per_sec": agg8,
-                "per_job_8_docs_per_sec": [r["docs_per_sec"] for r in small],
-                "local32_docs_per_sec": big["docs_per_sec"],
-                "local32_triples_per_sec": big["triples_per_sec"],
-                "local32_sec": big["sec"],
-                "efficiency": round(big["docs_per_sec"] / agg8, 3),
-            }
-        )
-    effs = sorted(t["efficiency"] for t in trials)
-    eff = effs[len(effs) // 2]  # median
-    best32 = max(t["local32_docs_per_sec"] for t in trials)
-    best8 = max(t["agg_4x8_docs_per_sec"] for t in trials)
-    docs = max(AMPLIFY * 4, 256) * 5000
-    out = {
-        "metric": "scaling_efficiency_8_to_32",
-        "value": eff,
-        "unit": "ratio",
-        "queries": {
-            "agg_4x8_docs_per_sec": best8,
-            "local32_docs_per_sec": best32,
-        },
-        "sf": SF_DIR,
-        "trials": trials,
-    }
-    print(json.dumps(out))
-    os.makedirs("BENCH", exist_ok=True)
-    # preserve manually-maintained sections (e.g. the hot-domain skew
-    # study) that live after the two generated sections
-    extra = ""
-    try:
-        with open("BENCH/BASELINE.md") as fh:
-            prev = fh.read()
-        for marker in ("\n## Hot-domain", "\n## "):
-            idx = prev.find(marker, prev.find("## Single-node"))
-            if idx != -1 and "Single-node" not in prev[idx : idx + 40]:
-                extra = prev[idx:]
-                break
-    except OSError:
-        pass
-    with open("BENCH/BASELINE.md", "w") as fh:
-        fh.write(
-            "# BENCH — measured baseline\n\n"
-            "## Scaling (two-cluster-size proxy, north_rule)\n\n"
-            f"Input: {SF_DIR} amplified to {docs} docs; job: full KG "
-            "construction (scan → extract → map → triples), count action; "
-            "every job in its own JVM, taskset-pinned, steady-state "
-            "(warmup + best-of-repeats).\n\n"
-            "**Protocol — saturated socket at both sizes.** A lone pinned "
-            "local[8] job leaves 24 of 32 cores idle, so its cores run at "
-            "idle-socket turbo clocks / uncontended memory bandwidth "
-            "(~50k docs/s isolated vs ~27k saturated — 1.8× pure-hardware "
-            "asymmetry). Real N- vs 4N-node clusters run loaded machines "
-            "at both sizes, so the proxy does too: the N level is FOUR "
-            "concurrent local[8] jobs on disjoint core quartets (four "
-            "independent 8-core nodes; aggregate = sum of docs/sec), the "
-            "4N level is ONE local[32] job on the same 32 cores. "
-            "Efficiency = T(1x32) / T(4x8), within-trial, median over "
-            f"{n_trials} trials — isolating one-big-job coordination cost "
-            "from single-box hardware saturation.\n\n"
-            "| trial | 4x local[8] agg docs/s | local[32] docs/s | efficiency |\n"
-            "|---|---|---|---|\n"
-            + "".join(
-                f"| {i + 1} | {t['agg_4x8_docs_per_sec']} | "
-                f"{t['local32_docs_per_sec']} | {t['efficiency']} |\n"
-                for i, t in enumerate(trials)
-            )
-            + f"\nScaling efficiency (8→32 cores, N→4N proxy): **{eff}** "
-            "(median; target ≥ 0.8 per BASELINE.json north_rule).\n\n"
-            f"Best local[32] triples/sec: "
-            f"{max(t['local32_triples_per_sec'] for t in trials)}.\n\n"
-            "## Single-node throughput (local[32], sf0.1 ×16 = 80k docs)\n\n"
-            "Latest `python bench.py` line (driver records per-round "
-            "BENCH_r{N}.json): headline stage timings in the `queries` "
-            "field (extract_text, kg_triples, minhash_dedup, "
-            "mention_detect, quality_score). The corpus is staged to "
-            "parquet and re-read (what a 100 TB job does), not JVM-heap "
-            "cached. The reference publishes no comparable numbers "
-            "(LLM-bound, minutes per 2-record session — BASELINE.md); our "
-            "single-node floor exceeds it by >10^6×.\n"
-            + extra
-        )
 
 
 if __name__ == "__main__":

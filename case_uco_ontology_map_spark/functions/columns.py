@@ -47,18 +47,3 @@ def local_name_col(col: Column) -> Column:
     return F.when(
         col.contains("#"), F.substring_index(col, "#", -1)
     ).otherwise(F.substring_index(col, "/", -1))
-
-
-def xsd_datatype_col(type_tag: Column) -> Column:
-    """Type-tag column ('bool'|'int'|'float'|other) → xsd datatype.
-    Bool branch first, mirroring the reference's isinstance order."""
-    return (
-        F.when(type_tag == "bool", F.lit("xsd:boolean"))
-        .when(type_tag == "int", F.lit("xsd:integer"))
-        .when(type_tag == "float", F.lit("xsd:decimal"))
-        .otherwise(F.lit("xsd:string"))
-    )
-
-
-def kb_id_col(slug: Column, slot_uuid: Column) -> Column:
-    return F.concat(F.lit("kb:"), slug, F.lit("-"), slot_uuid)

@@ -477,44 +477,6 @@ def alias_priors(
     )
 
 
-def alias_priors_sql(
-    links: str = "l",
-    page_entity: str = "pe",
-    top_k: int = 3,
-    max_entities: int = 256,
-    url_col: str = "url",
-    entity_col: str = "entity",
-) -> str:
-    """ANSI replay of ``alias_priors``."""
-    return f"""
-WITH votes AS (
-  SELECT lower(trim(anchor)) AS surface, dst,
-         CAST(count(*) AS BIGINT) AS n
-  FROM {links} WHERE anchor IS NOT NULL AND lower(trim(anchor)) <> ''
-  GROUP BY 1, 2
-), counts AS (
-  SELECT v.surface, pe.{entity_col} AS entity,
-         CAST(SUM(v.n) AS BIGINT) AS n_links
-  FROM votes v
-  JOIN (SELECT DISTINCT {url_col}, {entity_col} FROM {page_entity}) pe
-    ON v.dst = pe.{url_col}
-  GROUP BY 1, 2
-), totals AS (
-  SELECT surface, CAST(SUM(n_links) AS BIGINT) AS n_surface,
-         count(*) AS n_entities
-  FROM counts GROUP BY surface
-)
-SELECT surface, entity, n_links, n_surface, rank FROM (
-  SELECT c.surface, c.entity, c.n_links, t.n_surface,
-         ROW_NUMBER() OVER (
-           PARTITION BY c.surface ORDER BY c.n_links DESC, c.entity ASC
-         ) AS rank
-  FROM counts c JOIN totals t ON c.surface = t.surface
-  WHERE t.n_entities <= {max_entities}
-) WHERE rank <= {top_k}
-"""
-
-
 def link_by_prior(
     mentions: DataFrame,
     priors: DataFrame,

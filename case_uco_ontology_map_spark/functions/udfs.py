@@ -9,16 +9,12 @@ Python" = no RDD map, no F.udf).
 from __future__ import annotations
 
 import hashlib
-import json
-import uuid as _uuid
-from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..refmap.extract import extract_text, render_html
-from ..refmap.identity import NS_RECORD, fingerprint_record, pyify
 
 
 @F.pandas_udf(T.StringType())
@@ -49,32 +45,3 @@ def sha256_utf8_udf(s: pd.Series) -> pd.Series:
         lambda v: hashlib.sha256(v.encode("utf-8")).hexdigest() if v is not None else None
     )
 
-
-def make_uuid5_udf(namespace: _uuid.UUID):
-    """uuid5(namespace, name) as a vectorized column function."""
-
-    @F.pandas_udf(T.StringType())
-    def uuid5_udf(name: pd.Series) -> pd.Series:
-        return name.map(
-            lambda v: str(_uuid.uuid5(namespace, v)) if v is not None else None
-        )
-
-    return uuid5_udf
-
-
-record_uuid_udf = make_uuid5_udf(NS_RECORD)
-
-
-@F.pandas_udf(T.StringType())
-def fingerprint_json_udf(record_json: pd.Series) -> pd.Series:
-    """Canonical fingerprint of a record given as a JSON string: parse with
-    Python json (exact type round-trip) then sha256 canonical dumps —
-    reproduces tools.py:67-70 byte-for-byte. Spark's to_json is NOT
-    canonical-compatible; never use it for fingerprints."""
-
-    def fp(v: Optional[str]) -> Optional[str]:
-        if v is None:
-            return None
-        return fingerprint_record(json.loads(v))
-
-    return record_json.map(fp)

@@ -104,10 +104,10 @@ def entity_minhash(
     num_hashes: int = 32,
     hash_mode: str = "xxhash64",
     exclude=None,
-    impl: str = "arrow",
     shingled: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Minhash signatures over char-3-gram shingles of the entity key.
+    """Minhash signatures over char-3-gram shingles of the entity key,
+    folded by the Arrow-batched numpy kernel (dedup.minhash_fold_arrow).
 
     ``exclude``: shingle hashes dropped before signing (see
     common_shingles — the hot-domain shared-prefix defuse). Signatures of
@@ -125,7 +125,7 @@ def entity_minhash(
     so the interpreted shingle hashing runs once per job instead of once
     per consumer. Exclusion is applied here either way; values identical
     (``array_except`` after staging ≡ composed before staging)."""
-    from .dedup import _MERSENNE_P, _hash_params
+    from .dedup import _hash_params, minhash_fold_arrow
 
     params = _hash_params(num_hashes, seed=17)
     ex_list = sorted({int(x) for x in exclude}) if exclude else []
@@ -137,9 +137,6 @@ def entity_minhash(
                 F.array_except("_sh", F.lit(ex_list).cast("array<long>")),
             )
     else:
-        # shingles staged in their own projection — inlined, they'd be
-        # folded into (and re-evaluated by) every one of the k lambdas
-        # below (dedup.minhash_signatures' 36× lesson)
         sh = char_shingles(F.col(key_col), hash_mode=hash_mode)
         if ex_list and len(ex_list) <= _EXCLUDE_INLINE_MAX:
             sh = F.array_except(sh, F.lit(ex_list).cast("array<long>"))
@@ -150,34 +147,9 @@ def entity_minhash(
         )
     if len(ex_list) > _EXCLUDE_INLINE_MAX:
         staged = _excluded_shingles(staged, ex_list)
-    if impl == "arrow":
-        # numpy multiply-mod fold, bit-identical to the expr fold below —
-        # see dedup.minhash_fold_arrow (the k·|sh| interpreted lambda ops
-        # were the dominant per-row cost of signing)
-        from .dedup import minhash_fold_arrow
-
-        return minhash_fold_arrow(staged, params).select(
-            F.col(id_col), F.col(key_col), F.col("minhash")
-        )
-    if impl != "expr":
-        raise ValueError(f"unknown minhash impl {impl!r}")
-
-    def _min_hash(a: int, b: int):
-        # closure factory — see dedup.minhash_signatures for why not
-        # default-arg lambda capture
-        return F.coalesce(
-            F.array_min(
-                F.transform(
-                    F.col("_sh"),
-                    lambda s: ((F.abs(s) % F.lit(_MERSENNE_P)) * F.lit(a) + F.lit(b))
-                    % F.lit(_MERSENNE_P),
-                )
-            ),
-            F.lit(_MERSENNE_P),
-        )
-
-    sig = F.array(*[_min_hash(a, b) for a, b in params])
-    return staged.select(F.col(id_col), F.col(key_col), sig.alias("minhash"))
+    return minhash_fold_arrow(staged, params).select(
+        F.col(id_col), F.col(key_col), F.col("minhash")
+    )
 
 
 def common_shingles(
@@ -422,6 +394,25 @@ def connected_components(
     )
 
 
+def _exact_jaccard_edges(
+    cands: DataFrame, keys: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Candidate ``(src, dst)`` pairs whose exact Jaccard over the
+    ``(id_col, sh)`` shingle sets in ``keys`` reaches ``threshold`` (0.0
+    for two empty sets). ``keys`` feeds both aliased join sides, so
+    callers pass it cached."""
+    a, b = keys.alias("a"), keys.alias("b")
+    inter = F.size(F.array_intersect("a.sh", "b.sh"))
+    union = F.size(F.array_union("a.sh", "b.sh"))
+    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+    return (
+        cands.join(a, cands["src"] == F.col(f"a.{id_col}"))
+        .join(b, cands["dst"] == F.col(f"b.{id_col}"))
+        .filter(jac >= threshold)
+        .select("src", "dst")
+    )
+
+
 def canonicalize_entities(
     entities: DataFrame,
     key_col: str = "entity_key",
@@ -430,37 +421,14 @@ def canonicalize_entities(
     bands: int = 8,
     jaccard_threshold: float = 0.5,
     hash_mode: str = "xxhash64",
-    estimate_prefilter=None,
     verify: str = "exact",
     max_bucket: int = 500,
     observation=None,
-    auto_prefilter_ratio: float = 20.0,
     drop_common_df: Optional[float] = None,
 ) -> DataFrame:
     """Full canonicalization: LSH candidates → exact-Jaccard edge filter →
     connected components → (entity_id, entity_key, canonical_id).
     Singletons keep themselves as canonical.
-
-    ``estimate_prefilter`` (a float bound, e.g. ``jaccard_threshold - 0.3``,
-    or the string ``"auto"``): drop candidate pairs whose MINHASH-ESTIMATE
-    Jaccard falls below the bound BEFORE the exact shingle verify — the
-    signatures are already in hand (k ints/entity, broadcast-size for 10^5
-    entities, partition-joinable beyond), so on hot-domain key
-    distributions where LSH buckets flood (millions of candidates from
-    near-uniform keys) the expensive exact verify join shrinks ~20× for the
-    cost of one cheap join. Estimator std is √(j(1-j)/k); the bound must
-    sit ≥3σ below the threshold so true pairs pass.
-
-    ``"auto"`` measures the flood before paying for it: candidates and
-    entities are counted (one cheap count over the already-built candidate
-    frame), and the prefilter — at bound = threshold − 3·√(0.25/k), the
-    worst-case 3σ margin — engages only when candidates/entities exceeds
-    ``auto_prefilter_ratio``. On well-distributed keys the ratio stays
-    small, the prefilter never activates, and results are bit-identical to
-    the plain exact path (which is why the contract oracle is unchanged);
-    on a hot-domain flood the exact verify join shrinks by the prefilter's
-    selectivity. Default off (None): the exact path is the oracle-checked
-    semantics.
 
     ``verify="estimate"`` replaces the exact char-shingle verify with the
     minhash-estimate Jaccard (fraction of agreeing signature positions) —
@@ -505,11 +473,10 @@ def canonicalize_entities(
         shingled=shingled,
     )
     cached_sigs = None
-    if verify == "estimate" or estimate_prefilter is not None:
-        # the estimate paths reference sigs from THREE joins (band
+    if verify == "estimate":
+        # the estimate path references sigs from THREE joins (band
         # candidates + both aliased sides of the agree-count) — without a
-        # cache the tokenize→shingle→k-hash chain re-executes per
-        # reference (the same recompute the k-lambda staging above kills);
+        # cache the shingle→fold chain re-executes per reference;
         # mirrors dedup.minhash_estimate_pairs' cache. Unpersisted after
         # the CC edge set is checkpointed (blocking=False — safe because
         # connected_components materializes every round eagerly).
@@ -518,21 +485,7 @@ def canonicalize_entities(
         sigs, id_col, bands, max_bucket=max_bucket, hash_mode=hash_mode,
         observation=observation,
     )
-    cands_ckpt = None
-    if estimate_prefilter == "auto":
-        # measure the candidate flood on a barrier so the LSH band explode
-        # runs once (the verify join reuses it) — on a flood shape
-        # recomputing the band join would double the most expensive stage
-        cands, (n_cands,) = materialize(cands, F.count(F.lit(1)))
-        cands_ckpt = cands
-        n_entities = entities.select(id_col).count()
-        if n_entities > 0 and n_cands / n_entities > auto_prefilter_ratio:
-            sigma = (0.25 / num_hashes) ** 0.5
-            estimate_prefilter = jaccard_threshold - 3.0 * sigma
-        else:
-            estimate_prefilter = None
-
-    def _estimate_filtered(pairs: DataFrame, bound: float) -> DataFrame:
+    if verify == "estimate":
         sa, sb = sigs.alias("sa"), sigs.alias("sb")
         agree = F.size(
             F.filter(
@@ -543,33 +496,19 @@ def canonicalize_entities(
             )
         )
         est = agree.cast("double") / F.size(F.col("sa.minhash"))
-        return (
-            pairs.join(sa, pairs["src"] == F.col(f"sa.{id_col}"))
-            .join(sb, pairs["dst"] == F.col(f"sb.{id_col}"))
-            .filter(est >= bound)
+        edges = (
+            cands.join(sa, cands["src"] == F.col(f"sa.{id_col}"))
+            .join(sb, cands["dst"] == F.col(f"sb.{id_col}"))
+            .filter(est >= jaccard_threshold)
             .select("src", "dst")
         )
-
-    if verify == "estimate":
-        edges = _estimate_filtered(cands, jaccard_threshold)
     else:
-        if estimate_prefilter is not None:
-            cands = _estimate_filtered(cands, estimate_prefilter)
         # verify candidates with exact char-shingle Jaccard before
         # clustering — on the FULL (pre-exclusion) shingle sets, read from
         # the SHARED cached shingle frame (it feeds both aliased join
         # sides and was already filled by the census/signature jobs).
         keys = shingled.select(F.col(id_col), F.col("_sh").alias("sh"))
-        a, b = keys.alias("a"), keys.alias("b")
-        inter = F.size(F.array_intersect("a.sh", "b.sh"))
-        union = F.size(F.array_union("a.sh", "b.sh"))
-        jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-        edges = (
-            cands.join(a, cands["src"] == F.col(f"a.{id_col}"))
-            .join(b, cands["dst"] == F.col(f"b.{id_col}"))
-            .filter(jac >= jaccard_threshold)
-            .select("src", "dst")
-        )
+        edges = _exact_jaccard_edges(cands, keys, id_col, jaccard_threshold)
 
     comps = connected_components(edges)
     if cached_sigs is not None:
@@ -579,9 +518,6 @@ def canonicalize_entities(
         cached_sigs.unpersist(blocking=False)
     if shingled is not None:
         shingled.unpersist(blocking=False)  # same lifecycle as the sigs
-    # CC has its own barriers over everything downstream, so the
-    # (possibly huge) flood-shape candidate blocks are dead weight
-    release(cands_ckpt)
     return (
         entities.join(comps, entities[id_col] == comps["id"], "left")
         .select(
@@ -748,16 +684,7 @@ def canonicalize_incremental(
         )
         .cache()
     )
-    a, b = keys.alias("a"), keys.alias("b")
-    inter = F.size(F.array_intersect("a.sh", "b.sh"))
-    union = F.size(F.array_union("a.sh", "b.sh"))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    edges = (
-        cands.join(a, cands["src"] == F.col(f"a.{id_col}"))
-        .join(b, cands["dst"] == F.col(f"b.{id_col}"))
-        .filter(jac >= jaccard_threshold)
-        .select("src", "dst")
-    )
+    edges = _exact_jaccard_edges(cands, keys, id_col, jaccard_threshold)
     # delta-sized edge set feeds every join below (and the returned frame,
     # through touched_canons) — materialize once so the whole LSH+verify
     # chain doesn't replan into each of the three uses

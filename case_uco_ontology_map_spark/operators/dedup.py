@@ -7,7 +7,8 @@ Five dedup families, each a DataFrame→DataFrame transform over the
                        uniformly-distributed 64/256-bit key (no skew by
                        construction).
   minhash_signatures   k independent minhashes over token shingles —
-                       JVM-only (xxhash64 + aggregate), no Python.
+                       shingle hashing in the JVM (xxhash64), the integer
+                       fold one Arrow-batched numpy pass.
   lsh_candidate_pairs  band the signatures, self-join on (band, band_hash) —
                        the standard shingle→minhash→band→bucket-join;
                        bucket key is a hash, so AQE skew-join plus an
@@ -97,13 +98,6 @@ def shingles_from_tokens(
             ),
         )
     )
-
-
-def shingles_col(text: Column, n: int = 3, hash_mode: str = "xxhash64") -> Column:
-    """Text → token n-gram shingle hashes in one Column expression.
-    Convenience form; hot paths should stage tokens first (see
-    shingles_from_tokens)."""
-    return shingles_from_tokens(tokens_lower_col(text), n, hash_mode)
 
 
 def exact_dedup(
@@ -201,16 +195,16 @@ def high_df_hashes(
 
 def minhash_fold_arrow(staged: DataFrame, params, sh_col: str = "_sh"):
     """Arrow-batched minhash fold over a staged shingle-hash array column →
-    an ``array<bigint>`` signature Column-producing transform, BIT-IDENTICAL
-    to the expr fold (pure int64 arithmetic: ``abs(s) % p`` stays < 2^31,
-    ``a < p``, so every intermediate fits int64 exactly in numpy as in the
-    JVM; pinned equal by test). The k per-hash higher-order transforms are
-    interpreted expressions in Catalyst (no whole-stage codegen inside
-    lambdas) costing ~k·|sh| interpreted ops per row; one numpy
-    (|sh| × k) broadcasted multiply-mod per row replaces them (guide §4.2:
-    hand batches to vectorized native code). Shingle HASHING stays in the
-    JVM (xxhash64/md5 exactness is the engine's), only the integer fold
-    crosses — and only the ``_sh`` column ships (guide §4.1).
+    an ``array<bigint>`` signature: ``min(((|s| mod p)·a + b) mod p)`` per
+    hash, ``p`` for an empty or null set. Pure int64 arithmetic
+    (``abs(s) % p`` stays < 2^31, ``a < p``, so every intermediate fits
+    int64 exactly; pinned against a plain-Python reference by test). The
+    Catalyst form of this fold — k higher-order transforms, interpreted
+    (no whole-stage codegen inside lambdas) at ~k·|sh| ops per row — is
+    what one numpy (|sh| × k) broadcasted multiply-mod per row replaced.
+    Shingle HASHING stays in the JVM (xxhash64/md5 exactness is the
+    engine's), only the integer fold crosses — and only the ``_sh``
+    column ships.
 
     Returns ``staged`` with a ``minhash`` column appended."""
     import numpy as np
@@ -232,7 +226,7 @@ def minhash_fold_arrow(staged: DataFrame, params, sh_col: str = "_sh"):
             if s.size == 0:
                 return sentinel
             if (s == i64min).any():
-                # mirror the expr path: ANSI abs(int64 min) errors
+                # as ANSI abs(int64 min) does in the JVM: no silent wrap
                 raise ArithmeticError("abs overflow in minhash fold")
             sm = np.abs(s) % P
             return ((sm[:, None] * A[None, :] + B[None, :]) % P).min(axis=0)
@@ -250,29 +244,22 @@ def minhash_signatures(
     shingle_n: int = 3,
     hash_mode: str = "xxhash64",
     exclude: Optional[Sequence[int]] = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """k minhashes per doc: sig_i = min over shingles of ((a_i*s + b_i) mod p).
-    All JVM (transform + array_min) — no Python, no shuffle. Empty shingle
-    sets get p (sentinel) so they never collide with real signatures.
+    Shingles hash in the JVM; the fold is one Arrow-batched numpy pass
+    (minhash_fold_arrow). No shuffle. Empty shingle sets get p (sentinel)
+    so they never collide with real signatures.
 
     ``exclude``: shingle hashes removed before signing (see
     common_shingle_hashes — the boilerplate defuse). A doc whose every
     shingle is excluded degrades to the sentinel signature (never
     collides).
 
-    The shingle array is materialized in its OWN projection before the k
-    per-hash transforms reference it: inlined, CollapseProject folds the
-    shingle expression (tokenize → slide → concat → hash → distinct) into
-    every one of the k lambdas and subexpression elimination does not reach
-    inside higher-order functions, so the shingles were recomputed k times
-    per row — measured 36× slower (44s → 1.2s for 5k docs × 64 hashes).
-    Same fix as simhash's `_votes` staging below.
-
-    ``impl``: ``'arrow'`` (default — the k·|sh| interpreted fold replaced
-    by one numpy multiply-mod per row, bit-identical, see
-    minhash_fold_arrow) or ``'expr'`` (the pure-Catalyst reference fold,
-    replayable in ANSI SQL; pinned equal by test)."""
+    The tokens are materialized in their OWN projection before the
+    shingle lambda references them: CollapseProject folds an inlined
+    expression into every lambda that references it, and subexpression
+    elimination does not reach inside higher-order functions (see
+    shingles_from_tokens). Same fix as simhash's `_votes` staging below."""
     params = _hash_params(num_hashes)
     sh = shingles_from_tokens(F.col("_toks"), shingle_n, hash_mode)
     if exclude:
@@ -285,29 +272,9 @@ def minhash_signatures(
         F.col(id_col),
         sh.alias("_sh"),
     )
-    if impl == "arrow":
-        return minhash_fold_arrow(staged, params).select(
-            F.col(id_col), F.col("minhash")
-        )
-    if impl != "expr":
-        raise ValueError(f"unknown minhash impl {impl!r}")
-
-    def _min_hash(a: int, b: int) -> Column:
-        # closure factory: pyspark introspects lambda arity, so default-arg
-        # capture (lambda s, a=a: ...) breaks higher-order functions
-        return F.coalesce(
-            F.array_min(
-                F.transform(
-                    F.col("_sh"),
-                    lambda s: ((F.abs(s) % F.lit(_MERSENNE_P)) * F.lit(a) + F.lit(b))
-                    % F.lit(_MERSENNE_P),
-                )
-            ),
-            F.lit(_MERSENNE_P),
-        )
-
-    sig = F.array(*[_min_hash(a, b) for a, b in params]).alias("minhash")
-    return staged.select(F.col(id_col), sig)
+    return minhash_fold_arrow(staged, params).select(
+        F.col(id_col), F.col("minhash")
+    )
 
 
 def drop_observation(name: str = "bucket_drops") -> Observation:

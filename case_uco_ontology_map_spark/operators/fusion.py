@@ -325,26 +325,6 @@ def functional_violations(
     )
 
 
-def functional_violations_sql(
-    functional_preds: Sequence[str],
-    sample_k: int = 3,
-    table: str = "t",
-) -> str:
-    """ANSI replay of ``functional_violations`` (DuckDB: list_sort +
-    list_slice + array_to_string mirror sort_array/slice/concat_ws)."""
-    preds = ", ".join("'" + p.replace("'", "''") + "'"
-                      for p in functional_preds)
-    return f"""
-SELECT pred, subj, CAST(count(*) AS BIGINT) AS n_objects,
-       array_to_string(
-         list_slice(list_sort(list(obj)), 1, {sample_k}), '|'
-       ) AS objects
-FROM (SELECT DISTINCT pred, subj, obj FROM {table}
-      WHERE pred IN ({preds}))
-GROUP BY pred, subj HAVING count(*) > 1
-"""
-
-
 def ifp_sameas_candidates(
     triples: DataFrame,
     ifp_preds: Sequence[str],
@@ -393,29 +373,6 @@ def ifp_sameas_candidates(
     return pairs.join(groups, ["pred", "key"]).select(
         "pred", "key", "subj", "canonical", "group_size"
     )
-
-
-def ifp_sameas_candidates_sql(
-    ifp_preds: Sequence[str],
-    max_group: int = 64,
-    table: str = "t",
-) -> str:
-    """ANSI replay of ``ifp_sameas_candidates``."""
-    preds = ", ".join("'" + p.replace("'", "''") + "'"
-                      for p in ifp_preds)
-    return f"""
-WITH pairs AS (
-  SELECT DISTINCT pred, obj AS key, subj FROM {table}
-  WHERE pred IN ({preds})
-), groups AS (
-  SELECT pred, key, MIN(subj) AS canonical,
-         CAST(count(*) AS BIGINT) AS group_size
-  FROM pairs GROUP BY pred, key
-  HAVING count(*) > 1 AND count(*) <= {max_group}
-)
-SELECT p.pred, p.key, p.subj, g.canonical, g.group_size
-FROM pairs p JOIN groups g ON p.pred = g.pred AND p.key = g.key
-"""
 
 
 def induce_shapes(

@@ -70,25 +70,6 @@ def entity_summary(
     )
 
 
-def entity_summary_sql(k: int = 5, table: str = "t") -> str:
-    """ANSI replay of ``entity_summary``."""
-    return f"""
-WITH facts AS (SELECT DISTINCT subj, pred, obj FROM {table}),
-freq AS (
-  SELECT pred, CAST(count(*) AS BIGINT) AS pred_freq
-  FROM facts GROUP BY pred
-)
-SELECT subj, pred, obj, pred_freq, rank FROM (
-  SELECT f.subj, f.pred, f.obj, q.pred_freq,
-         ROW_NUMBER() OVER (
-           PARTITION BY f.subj
-           ORDER BY q.pred_freq ASC, f.pred ASC, f.obj ASC
-         ) AS rank
-  FROM facts f JOIN freq q ON f.pred = q.pred
-) WHERE rank <= {k}
-"""
-
-
 def build_postings(
     docs: DataFrame,
     id_col: str = "doc_id",

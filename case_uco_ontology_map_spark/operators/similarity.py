@@ -1,8 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
-  brute_force_topk   exact cosine top-k per query — broadcast the (small)
-                     query set, JVM zip_with/aggregate dot products, Window
-                     top-k. One shuffle (the window partition by query).
+  brute_force_topk   exact cosine top-k per query — the driver-small query
+                     batch is broadcast and ONE mapInArrow pass scores every
+                     vector against it, then Window top-k. One shuffle (the
+                     window partition by query).
   ivf_topk           IVF-style scale path: assign every vector to its
                      nearest centroid (broadcast centroids, map-side),
                      search only the query's nprobe nearest cells.
@@ -59,7 +60,8 @@ def _staged_cosine(vec: Column, qvec: Column, vn: Column, qn: Column) -> Column:
 
 
 #: brute_force_topk collects the query batch driver-side for the Arrow
-#: kernel; a "batch" past this is not a serving call — fall back to expr.
+#: kernel; a "batch" past this is not a serving call — the Catalyst plan
+#: scores it instead.
 _BRUTE_ARROW_MAX_QUERIES = 4096
 
 
@@ -83,6 +85,20 @@ def _seq_dots_norms(mat, q64, nq):
     return dots, np.sqrt(sq)
 
 
+def _top_k(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str,
+    score_col: str = "cosine",
+) -> DataFrame:
+    """The ``k`` best rows per query by ``score_col`` (descending), ties
+    to the smaller id, with a 1-based ``rank`` column appended."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.desc(score_col), F.asc(id_col)
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -91,199 +107,61 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Exact cosine top-k → ``(query_id, vec_id, cosine, rank)``.
+    """Exact cosine top-k → ``(query_id, vec_id, cosine, rank)``, ranked by
+    cosine rounded to 6 decimals with ties to the smaller id.
 
-    ``impl="expr"`` (the oracle-replayable reference): crossJoin
-    (broadcast(queries)) → staged-norm cosine → window top-k. The cosine
-    HOF folds are interpreted per (vector, query) pair — never codegen'd.
-
-    ``impl="arrow"`` (default, guide §4.2): ONE mapInArrow pass over the
-    vector table computes every query's dot product with a per-dimension
-    numpy loop whose accumulation order is the exact left fold the
-    Catalyst ``aggregate`` uses (see _seq_dots_norms) — cosines are
-    bit-identical to the expr path (pinned by test_brute_impl_parity),
-    the window/round/tie rules are shared verbatim, and the kernel
-    pre-filters each batch to the rows that can still reach the global
-    top k: keeping every row with raw cosine ≥ (batch k-th best − 1.1e-6)
-    is provably lossless under 6-decimal rounding, because a row below
-    that cutoff rounds strictly below the k-th row's rounded score and
-    loses regardless of id ties. Queries are a driver-small serving
-    batch by construction; past _BRUTE_ARROW_MAX_QUERIES the call falls
-    back to the expr plan rather than collecting unbounded data."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"unknown brute_force_topk impl {impl!r}")
-    q_rows = None
-    if impl == "arrow":
-        q_rows = (
-            queries.select(F.col(query_id_col), F.col(query_vec_col))
-            .limit(_BRUTE_ARROW_MAX_QUERIES + 1)
-            .collect()
-        )
-        if len(q_rows) > _BRUTE_ARROW_MAX_QUERIES:
-            q_rows = None  # not a serving batch — keep the expr plan
-    if q_rows is not None and len(q_rows) == 0:
-        q_rows = None  # no queries: the expr crossJoin is already empty
-    if q_rows is not None:
-        import numpy as np
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        spark = vectors.sparkSession
-        qid_at = to_arrow_type(queries.schema[query_id_col].dataType)
-        id_at = to_arrow_type(vectors.schema[id_col].dataType)
-        q64 = []
-        q_ids = []
-        q_norms = []
-        for r in q_rows:
-            vec = [float(x) for x in (r[query_vec_col] or [])]
-            q_ids.append(r[query_id_col])
-            q64.append(np.asarray(vec, dtype=np.float64))
-            # query norm: same sequential fold as _norm_col
-            acc = 0.0
-            for x in vec:
-                acc += x * x
-            q_norms.append(acc ** 0.5)
-        bc = spark.sparkContext.broadcast(
-            (q_ids, q64, q_norms, k, qid_at, id_at)
-        )
-
-        id_field = vectors.schema[id_col].dataType.simpleString()
-        qid_field = queries.schema[query_id_col].dataType.simpleString()
-        out_schema = (
-            f"{query_id_col} {qid_field}, {id_col} {id_field}, "
-            "_rawcos double"
-        )
-
-        def kernel(batches):
-            import numpy as _np
-            import pyarrow as _pa
-
-            q_ids_l, q64_l, q_norms_l, kk, qid_t, id_t = bc.value
-            nq = len(q_ids_l)
-            d = q64_l[0].shape[0] if nq else 0
-            for rb in batches:
-                ids = rb.column(0)
-                emb = rb.column(1)
-                if isinstance(emb, _pa.ChunkedArray):  # defensive
-                    emb = emb.combine_chunks()
-                n = len(emb)
-                if n == 0:
-                    continue
-                offs = emb.offsets.to_numpy()
-                lens = offs[1:] - offs[:-1]
-                out_q, out_i, out_c = [], [], []
-                uniform = (
-                    d > 0
-                    and bool((lens == d).all())
-                    and emb.null_count == 0
-                    and emb.values.null_count == 0
-                )
-                if uniform:
-                    vals = emb.values.to_numpy(zero_copy_only=False)
-                    # offsets of a sliced array need not start at 0
-                    mat = (
-                        vals[offs[0]:offs[-1]]
-                        .astype(_np.float64)
-                        .reshape(n, d)
-                    )
-                    dots, vn = _seq_dots_norms(mat, q64_l, nq)
-                    ids_np = ids.to_numpy(zero_copy_only=False)
-                    for qi in range(nq):
-                        qn = q_norms_l[qi]
-                        if qn > 0:
-                            cos = _np.where(
-                                vn > 0, dots[qi] / (vn * qn), 0.0
-                            )
-                        else:
-                            cos = _np.zeros(n, dtype=_np.float64)
-                        if n > kk:
-                            kth = _np.partition(cos, n - kk)[n - kk]
-                            keep = cos >= kth - 1.1e-6
-                        else:
-                            keep = _np.ones(n, dtype=bool)
-                        sel = _np.nonzero(keep)[0]
-                        out_q.extend([q_ids_l[qi]] * sel.size)
-                        out_i.extend(ids_np[sel].tolist())
-                        out_c.extend(cos[sel].tolist())
-                else:
-                    # ragged/malformed rows: mirror the expr path's zip
-                    # semantics per row (length mismatch ⇒ NULL cosine
-                    # unless a zero norm short-circuits the guard to 0.0)
-                    py_ids = ids.to_pylist()
-                    py_emb = emb.to_pylist()
-                    for r_i in range(n):
-                        vec = [
-                            float(x) for x in (py_emb[r_i] or [])
-                        ]
-                        acc = 0.0
-                        for x in vec:
-                            acc += x * x
-                        vnr = acc ** 0.5
-                        for qi in range(nq):
-                            qn = q_norms_l[qi]
-                            if not (vnr > 0 and qn > 0):
-                                cos = 0.0
-                            elif len(vec) != q64_l[qi].shape[0]:
-                                cos = None
-                            else:
-                                dot = 0.0
-                                for xj, yj in zip(vec, q64_l[qi]):
-                                    dot += xj * yj
-                                cos = dot / (vnr * qn)
-                            out_q.append(q_ids_l[qi])
-                            out_i.append(py_ids[r_i])
-                            out_c.append(cos)
-                if not out_q:
-                    continue
-                yield _pa.RecordBatch.from_arrays(
-                    [
-                        _pa.array(out_q, qid_t),
-                        _pa.array(out_i, id_t),
-                        _pa.array(out_c, _pa.float64()),
-                    ],
-                    names=[query_id_col, id_col, "_rawcos"],
-                )
-
-        scored = (
-            vectors.select(F.col(id_col), F.col(vec_col))
-            .mapInArrow(kernel, out_schema)
-            .select(
-                F.col(query_id_col),
-                F.col(id_col),
-                F.round(F.col("_rawcos"), 6).alias("cosine"),
-            )
-        )
-    else:
-        vn = vectors.select(
-            F.col(id_col),
-            F.col(vec_col),
-            _norm_col(F.col(vec_col)).alias("_vn"),
-        )
-        qn = queries.select(
-            F.col(query_id_col),
-            F.col(query_vec_col),
-            _norm_col(F.col(query_vec_col)).alias("_qn"),
-        )
-        joined = vn.crossJoin(F.broadcast(qn))
-        scored = joined.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                _staged_cosine(
-                    F.col(vec_col), F.col(query_vec_col),
-                    F.col("_vn"), F.col("_qn"),
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col)
+    The query batch is collected and scored in ONE mapInArrow pass over
+    the vector table (_arrow_cell_scores with every vector in one cell),
+    bit-identical to the Catalyst plan. Queries are a
+    driver-small serving batch by construction; an empty batch or one
+    past _BRUTE_ARROW_MAX_QUERIES runs the Catalyst plan instead
+    (_brute_force_topk_catalyst) rather than collecting unbounded data."""
+    q_rows = (
+        queries.select(F.col(query_id_col), F.col(query_vec_col))
+        .limit(_BRUTE_ARROW_MAX_QUERIES + 1)
+        .collect()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+    if not 0 < len(q_rows) <= _BRUTE_ARROW_MAX_QUERIES:
+        return _brute_force_topk_catalyst(
+            vectors, queries, k, id_col, vec_col, query_id_col, query_vec_col
+        )
+    scored = _arrow_cell_scores(
+        vectors.select(F.lit(0).alias("cell"), F.col(id_col), F.col(vec_col)),
+        queries, q_rows, {0: list(range(len(q_rows)))}, k,
+        id_col, vec_col, query_id_col, query_vec_col,
+    )
+    return _top_k(scored, k, query_id_col, id_col).select(
+        query_id_col, id_col, "cosine", "rank"
+    )
+
+
+def _brute_force_topk_catalyst(
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """brute_force_topk as one Catalyst plan: crossJoin(broadcast(queries))
+    → staged-norm cosine → window top-k. The cosine folds are interpreted
+    per (vector, query) pair, never codegen'd; brute_force_topk runs this
+    only for a query batch its Arrow kernel does not take."""
+    vn = vectors.select(
+        F.col(id_col),
+        F.col(vec_col),
+        _norm_col(F.col(vec_col)).alias("_vn"),
+    )
+    qn = queries.select(
+        F.col(query_id_col),
+        F.col(query_vec_col),
+        _norm_col(F.col(query_vec_col)).alias("_qn"),
+    )
+    return _rank_topk(
+        vn.crossJoin(F.broadcast(qn)), k, id_col, vec_col,
+        query_id_col, query_vec_col, vn_col="_vn", qn_col="_qn",
     )
 
 
@@ -293,13 +171,13 @@ def centroids_kmeans(
     iterations: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    impl: str = "expr",
     sample: Optional[int] = None,
 ) -> List[List[float]]:
     """Deterministic k-means: seeds = the k vectors with smallest ids
     (stable), then `iterations` Lloyd steps. Each step: broadcast centroids,
-    map-side assignment, ONE groupBy(cell) aggregation of per-dimension
-    sums (posexplode → groupBy(cell, dim) avg). Driver holds only k×d.
+    map-side assignment (_assign_cells_arrow), ONE groupBy(cell)
+    aggregation of per-dimension sums (posexplode → groupBy(cell, dim)
+    avg). Driver holds only k×d.
 
     ``sample``: train on a deterministic subsample (the ``sample`` vectors
     with smallest xxhash64(id) — a seedless uniform draw, stable across
@@ -308,7 +186,7 @@ def centroids_kmeans(
     stops improving long before 100 TB of terms, while each extra training
     point costs k dot products per iteration. TakeOrderedAndProject keeps
     the sample selection a per-partition top-N + driver merge — no sort
-    shuffle. ``impl`` selects the assignment kernel (see assign_cells)."""
+    shuffle."""
     if sample is not None:
         # materialize the sample ONCE: the TakeOrdered over the full
         # corpus otherwise re-executes for the seed collect AND every
@@ -324,7 +202,7 @@ def centroids_kmeans(
     ]
     centroids = seeds
     for _ in range(iterations):
-        assigned = assign_cells(vectors, centroids, vec_col=vec_col, impl=impl)
+        assigned = _assign_cells_arrow(vectors, centroids, vec_col)
         rows = (
             assigned.select("cell", F.posexplode(vec_col).alias("dim", "v"))
             .groupBy("cell", "dim")
@@ -344,28 +222,14 @@ def assign_cells(
     vectors: DataFrame,
     centroids: List[List[float]],
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
-    """Map-side nearest-centroid assignment. Narrow — no shuffle. Two
-    kernels, same argmax-by-cosine / ties-to-smaller-cell semantics:
-
-    ``impl='expr'`` (default): centroids broadcast as array literals,
-    argmax over k cosine folds — pure Catalyst, replayable in ANSI SQL,
-    which is why the contract oracle pins THIS path. But higher-order
-    folds are interpreted (no whole-stage codegen inside the lambda), so
-    cost per row is ~k x 3 x d interpreted ops — fine for the oracle's
-    k<=16, quadratic pain at index-build scale.
-
-    ``impl='arrow'``: Arrow-batched numpy — one (batch x d)@(d x k)
-    matmul per batch over L2-normalized rows, argmax per row. ~100x the
-    expr kernel's throughput at k=64; the 100 TB index-build path.
-    np.argmax takes the FIRST max, matching expr's ties-to-smaller-cell
-    rule; scores differ from expr only by BLAS summation order (no
-    round-9 snap), so a vector within ~1e-12 of a two-cell boundary may
-    land in its other near-equidistant cell — immaterial for an index
-    whose recall is measured, not assumed."""
-    if impl == "arrow":
-        return _assign_cells_arrow(vectors, centroids, vec_col)
+    """Map-side nearest-centroid assignment. Narrow — no shuffle.
+    Centroids broadcast as array literals, argmax over k cosine folds
+    rounded to 9 decimals, ties to the smaller cell — pure Catalyst, so
+    the ``ivf_topk`` contract oracle replays it in DuckDB. The folds are
+    interpreted (no whole-stage codegen inside the lambda), ~k x 3 x d
+    ops per row: fine for queries and the oracle's k<=16; the index build
+    and k-means use _assign_cells_arrow."""
     cent_arr = F.array(
         *[
             F.struct(
@@ -389,7 +253,15 @@ def assign_cells(
 def _assign_cells_arrow(
     vectors: DataFrame, centroids: List[List[float]], vec_col: str
 ) -> DataFrame:
-    """Vectorized assignment kernel: see assign_cells(impl='arrow')."""
+    """Index-build assignment kernel: Arrow-batched numpy, one
+    (batch x d)@(d x k) matmul over L2-normalized rows and an argmax per
+    row — ~100x the Catalyst assign_cells at k=64, where the interpreted
+    cosine folds cost ~k x 3 x d ops per row. np.argmax takes the FIRST
+    max, matching assign_cells' ties-to-smaller-cell rule; scores differ
+    from it only by BLAS summation order (no round-9 snap), so a vector
+    within ~1e-12 of a two-cell boundary may land in its other
+    near-equidistant cell — immaterial for an index whose recall is
+    measured, not assumed (pinned equal on real vectors by test)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -494,29 +366,21 @@ def _probe_cells(
 
 
 def _rank_topk(
-    cands, k, id_col, vec_col, query_id_col, query_vec_col,
-    vn_col=None, qn_col=None,
+    cands, k, id_col, vec_col, query_id_col, query_vec_col, vn_col, qn_col,
 ):
     """``vn_col``/``qn_col``: precomputed per-side L2 norm columns (see
     _staged_cosine — staged below the join by callers so the norm folds
     run per vector/query, not per candidate pair; values bit-identical)."""
-    if vn_col and qn_col:
-        cos = _staged_cosine(
-            F.col(vec_col), F.col(query_vec_col),
-            F.col(vn_col), F.col(qn_col),
-        )
-    else:
-        cos = _cosine(F.col(vec_col), F.col(query_vec_col))
+    cos = _staged_cosine(
+        F.col(vec_col), F.col(query_vec_col), F.col(vn_col), F.col(qn_col)
+    )
     scored = cands.select(
         F.col(query_id_col),
         F.col(id_col),
         F.round(cos, 6).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+    return _top_k(scored, k, query_id_col, id_col).select(
+        query_id_col, id_col, "cosine", "rank"
     )
 
 
@@ -526,7 +390,6 @@ def write_ivf_index(
     path: str,
     vec_col: str = "embedding",
     files_per_cell: int = 1,
-    impl: str = "arrow",
 ) -> str:
     """Materialize the IVF index: vectors written PARTITIONED BY cell.
     This is the 100 TB serving layout — a probe for nprobe cells becomes
@@ -537,12 +400,9 @@ def write_ivf_index(
     rule as the triple/entity writes): without it every upstream task
     writes a sliver into every cell directory (tasks × cells tiny files);
     with it, ``files_per_cell`` right-sized files per cell. At 100 TB set
-    files_per_cell so each file is ~128 MB-1 GB. ``impl`` defaults to
-    'arrow' (the vectorized assignment kernel, ~100x the expr kernel at
-    k=64 — this is the full-corpus pass); pass 'expr' for the
-    oracle-replayable Catalyst kernel, pinned equivalent by
-    test_assign_cells_arrow_matches_expr."""
-    assigned = assign_cells(vectors, centroids, vec_col, impl=impl)
+    files_per_cell so each file is ~128 MB-1 GB. Cells come from the
+    vectorized _assign_cells_arrow (this is the full-corpus pass)."""
+    assigned = _assign_cells_arrow(vectors, centroids, vec_col)
     n_parts = max(len(centroids) * files_per_cell, 1)
     assigned.repartition(n_parts, "cell").write.mode(
         "overwrite"
@@ -556,17 +416,17 @@ def append_to_ivf_index(
     path: str,
     vec_col: str = "embedding",
     files_per_cell: int = 1,
-    impl: str = "arrow",
 ) -> str:
     """Incremental IVF maintenance: assign ONLY the delta batch to the
     existing centroids and append its rows into the cell-partitioned
     index — no retrain, no rewrite of the standing corpus (the daily
     ingest path at 10^12 scale; retrain is a separate scheduled rebuild
     when cell-occupancy drift warrants it). Same repartition-before-
-    partitionBy sink rule as the initial write; dynamic partition
-    overwrite is NOT used — append adds files inside each cell directory,
-    so probes see old + new vectors atomically per file listing."""
-    assigned = assign_cells(new_vectors, centroids, vec_col, impl=impl)
+    partitionBy sink rule and assignment kernel as the initial write;
+    dynamic partition overwrite is NOT used — append adds files inside
+    each cell directory, so probes see old + new vectors atomically per
+    file listing."""
+    assigned = _assign_cells_arrow(new_vectors, centroids, vec_col)
     n_parts = max(len(centroids) * files_per_cell, 1)
     assigned.repartition(n_parts, "cell").write.mode("append").partitionBy(
         "cell"
@@ -578,21 +438,29 @@ def _arrow_cell_scores(
     index_scan: DataFrame,
     queries: DataFrame,
     q_rows,
-    cell_q,
+    cell_qi,
     k: int,
     id_col: str,
     vec_col: str,
     query_id_col: str,
     query_vec_col: str,
 ) -> DataFrame:
-    """Score a cell-partitioned pruned scan against the (driver-small)
-    query batch in ONE mapInArrow pass → rounded ``cosine`` candidates.
-    Each batch's rows are grouped by cell and scored only against the
-    queries probing that cell, with the same bit-identical sequential
-    fold and lossless per-(query, group) top-k pre-filter as
-    ``brute_force_topk``'s kernel (see _seq_dots_norms and the epsilon
-    band proof there). Ragged/null embedding rows mirror the expr path's
-    zip/guard semantics row by row."""
+    """Score a ``(cell, id, vector)`` scan against the (driver-small)
+    query batch ``q_rows`` in ONE mapInArrow pass → rounded ``cosine``
+    candidates. ``cell_qi`` maps each cell to the positions in ``q_rows``
+    of the queries that score it; each batch's rows are grouped by cell
+    and scored only against those queries.
+
+    Cosines are bit-identical to the Catalyst ``_staged_cosine``: the
+    per-dimension numpy loop accumulates in the exact left-fold order of
+    the ``aggregate`` in ``_dot``/``_norm_col`` (see _seq_dots_norms).
+    Each (query, cell group) keeps only the rows that can still reach the
+    global top k: every row with raw cosine ≥ (group k-th best − 1.1e-6).
+    That is lossless under 6-decimal rounding, because a row below the
+    cutoff rounds strictly below the k-th row's rounded score and loses
+    regardless of id ties. Ragged/null embedding rows follow the Catalyst
+    zip/guard semantics row by row: a zero norm gives 0.0, a length
+    mismatch NULL."""
     import numpy as np
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -600,20 +468,15 @@ def _arrow_cell_scores(
     qid_at = to_arrow_type(queries.schema[query_id_col].dataType)
     id_at = to_arrow_type(index_scan.schema[id_col].dataType)
     q_ids, q64, q_norms = [], [], []
-    qidx = {}
     for r in q_rows:
         vec = [float(x) for x in (r[query_vec_col] or [])]
-        qidx[r[query_id_col]] = len(q_ids)
         q_ids.append(r[query_id_col])
         q64.append(np.asarray(vec, dtype=np.float64))
+        # query norm: same sequential fold as _norm_col
         acc = 0.0
         for x in vec:
             acc += x * x
         q_norms.append(acc ** 0.5)
-    cell_qi = {
-        int(c): sorted(qidx[q] for q in qs if q in qidx)
-        for c, qs in cell_q.items()
-    }
     bc = spark.sparkContext.broadcast(
         (q_ids, q64, q_norms, cell_qi, k, qid_at, id_at)
     )
@@ -741,84 +604,43 @@ def ivf_topk_from_index(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k against a cell-partitioned index written by
     ``write_ivf_index``. The probed cell set is computed from the QUERY
     batch (driver-small by definition in a top-k serving path) and pushed
     into the scan as a LITERAL ``cell IN (...)`` predicate, so parquet
     partition pruning skips every unprobed cell's files — verified by the
-    plan's PartitionFilters in tests. Results are identical to
-    ``ivf_topk`` at the same (centroids, nprobe): the probe cells come
-    from collecting the SAME Spark expression ivf_topk joins
-    (_probe_cells), so no numpy-vs-Spark rounding or tie divergence can
-    creep in."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"unknown ivf_topk_from_index impl {impl!r}")
+    plan's PartitionFilters in tests. The pruned scan is scored by the
+    same Arrow kernel as brute_force_topk, each probed cell's rows only
+    against the queries that probe it. Results are identical to
+    ``ivf_topk`` at the same (centroids, nprobe) and index cells: the
+    probe cells come from collecting the SAME Spark expression ivf_topk
+    joins (_probe_cells), so no numpy-vs-Spark rounding or tie divergence
+    can creep in."""
     probe_rows = [
         (r[query_id_col], int(r["cell"]))
         for r in _probe_cells(queries, centroids, nprobe, query_vec_col)
         .select(query_id_col, "cell")
         .collect()
     ]
-    probed_cells = sorted({c for _, c in probe_rows})
-    if impl == "arrow":
-        # same Arrow scoring kernel as brute_force_topk, applied to the
-        # PRUNED scan: each probed cell's rows are scored only against
-        # the queries that probe that cell (bit-identical sequential
-        # fold, same lossless per-batch top-k pre-filter; the probe cell
-        # set itself comes from the shared Spark expression above, so no
-        # numpy probe divergence is possible). The query batch was
-        # already collected for the probe — bounded by construction.
-        q_rows = queries.select(
-            F.col(query_id_col), F.col(query_vec_col)
-        ).collect()
-        cell_q = {}
-        for qid, cell in probe_rows:
-            cell_q.setdefault(cell, []).append(qid)
-        index_scan = spark.read.parquet(index_path).filter(
-            F.col("cell").isin(probed_cells)
-        )
-        scored = _arrow_cell_scores(
-            index_scan, queries, q_rows, cell_q, k,
-            id_col, vec_col, query_id_col, query_vec_col,
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("cosine"), F.asc(id_col)
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id_col, id_col, "cosine", "rank")
-        )
-    index = (
+    q_rows = queries.select(
+        F.col(query_id_col), F.col(query_vec_col)
+    ).collect()
+    qidx = {r[query_id_col]: i for i, r in enumerate(q_rows)}
+    cell_qi = {}
+    for qid, cell in probe_rows:
+        cell_qi.setdefault(cell, []).append(qidx[qid])
+    cell_qi = {c: sorted(qs) for c, qs in cell_qi.items()}
+    index_scan = (
         spark.read.parquet(index_path)
-        .filter(
-            F.col("cell").isin(probed_cells)  # literal IN → partition pruning
-        )
-        .withColumn("_vn", _norm_col(F.col(vec_col)))
+        .filter(F.col("cell").isin(sorted(cell_qi)))  # literal IN → pruning
     )
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    probe_schema = StructType(
-        [
-            # inherit the query-id type from the caller's frame — ids are
-            # not necessarily longs
-            StructField(
-                query_id_col, queries.schema[query_id_col].dataType, False
-            ),
-            StructField("cell", IntegerType(), False),
-        ]
+    scored = _arrow_cell_scores(
+        index_scan, queries, q_rows, cell_qi, k,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
-    probes = (
-        spark.createDataFrame(probe_rows, probe_schema)
-        .join(F.broadcast(queries), query_id_col)
-        .withColumn("_qn", _norm_col(F.col(query_vec_col)))
-    )
-    cands = index.join(F.broadcast(probes), "cell")
-    return _rank_topk(
-        cands, k, id_col, vec_col, query_id_col, query_vec_col,
-        vn_col="_vn", qn_col="_qn",
+    return _top_k(scored, k, query_id_col, id_col).select(
+        query_id_col, id_col, "cosine", "rank"
     )
 
 
@@ -876,11 +698,12 @@ def _sq8_approx_arrow(
     query_id_col: str,
     query_vec_col: str,
 ) -> DataFrame:
-    """Arrow/numpy twin of the stage-1 approx scorer — the same
-    interpreted-higher-order-function wall assign_cells hit (VERDICT r4:
-    ~1 ms/row at d=64, found by measurement): the expr fold costs MORE
-    than the brute float cosine it is supposed to beat, so the codes
-    path only wins with a vectorized kernel. Per Arrow batch: one
+    """sq8_topk's stage-1 approx scorer: cosine against the dequantized
+    vectors, rounded to 6 decimals. The Catalyst form of this fold hits
+    the same interpreted-higher-order-function wall assign_cells does
+    (~1 ms/row at d=64, found by measurement): it costs MORE than the
+    brute float cosine it is supposed to beat, so the codes path only
+    wins with a vectorized kernel. Per Arrow batch: one
     codes×queries matmul plus the closed-form dequantized norm
     ``sqrt(d·m² + 2·m·s·Σc + s²·Σc²)`` — no per-row reconstruction. A
     per-batch top-``keep`` prune bounds the emitted rows to
@@ -951,61 +774,31 @@ def sq8_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    impl: str = "expr",
 ) -> DataFrame:
     """Quantized-first top-k with exact rescoring: stage 1 ranks by
     cosine against the DEQUANTIZED vectors (reads only codes — the
-    serving tier never scans full floats) and keeps ``k * overfetch``
-    candidates per query; stage 2 (when ``full_vectors`` is given)
-    joins just those candidates back to the full-precision vectors and
-    re-ranks exactly. At 100 TB the stage-2 join touches k·overfetch
-    rows per query — the full-float table is probed, never scanned.
-
-    ``impl``: ``'expr'`` is the ANSI-replayable reference kernel the
-    contract oracle pins; ``'arrow'`` is the production stage-1 scorer
-    (see _sq8_approx_arrow — the expr fold is interpreted and loses to
-    brute float cosine, the same wall assign_cells hit). Agreement is
-    pytest-pinned; both rank by round(cosine, 6) with id tie-break."""
-    if impl == "arrow":
-        approx = _sq8_approx_arrow(
-            quantized,
-            queries,
-            k * overfetch,
-            id_col,
-            codes_col,
-            query_id_col,
-            query_vec_col,
-        )
-    elif impl == "expr":
-        xhat = dequantize_expr(
-            F.col(codes_col), F.col("q_min"), F.col("q_scale")
-        )
-        joined = quantized.crossJoin(F.broadcast(queries))
-        approx = joined.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                _cosine(xhat, F.col(query_vec_col)), 6
-            ).alias("approx"),
-        )
-    else:
-        raise ValueError(f"unknown sq8 impl {impl!r}")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("approx"), F.asc(id_col)
+    serving tier never scans full floats; scored by _sq8_approx_arrow)
+    and keeps ``k * overfetch`` candidates per query; stage 2 (when
+    ``full_vectors`` is given) joins just those candidates back to the
+    full-precision vectors and re-ranks exactly. At 100 TB the stage-2
+    join touches k·overfetch rows per query — the full-float table is
+    probed, never scanned. Both stages rank by round(cosine, 6) with id
+    tie-break."""
+    approx = _sq8_approx_arrow(
+        quantized,
+        queries,
+        k * overfetch,
+        id_col,
+        codes_col,
+        query_id_col,
+        query_vec_col,
     )
-    cands = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * overfetch)
-        .drop("rank")
-    )
+    cands = _top_k(
+        approx, k * overfetch, query_id_col, id_col, "approx"
+    ).drop("rank")
     if full_vectors is None:
-        w2 = Window.partitionBy(query_id_col).orderBy(
-            F.desc("approx"), F.asc(id_col)
-        )
-        return (
-            cands.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select(query_id_col, id_col, "rank")
+        return _top_k(cands, k, query_id_col, id_col, "approx").select(
+            query_id_col, id_col, "rank"
         )
     exact = (
         cands.join(
@@ -1020,13 +813,8 @@ def sq8_topk(
             ).alias("cosine"),
         )
     )
-    w3 = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w3))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+    return _top_k(exact, k, query_id_col, id_col).select(
+        query_id_col, id_col, "cosine", "rank"
     )
 
 

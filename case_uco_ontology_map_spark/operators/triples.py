@@ -1428,35 +1428,6 @@ def kg_as_of(
     )
 
 
-def kg_as_of_sql(
-    as_of: str,
-    table: str = "t",
-    op_col: str = "op",
-    ts_col: str = "ts",
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-) -> str:
-    """ANSI replay of ``kg_as_of`` (``as_of`` is a SQL literal,
-    e.g. ``"42"`` or ``"TIMESTAMP '2026-01-01'"``)."""
-    return f"""
-WITH f AS (
-  SELECT {subj_col} AS subj, {pred_col} AS pred, {obj_col} AS obj,
-         {ts_col} AS ts, {op_col} AS op
-  FROM {table}
-  WHERE {ts_col} <= {as_of} AND {op_col} IN ('add', 'del')
-), w AS (
-  SELECT subj, pred, obj, MAX(ts) AS ts FROM f GROUP BY 1, 2, 3
-), last AS (
-  SELECT f.subj, f.pred, f.obj, f.ts, MAX(f.op) AS op
-  FROM f JOIN w ON f.subj = w.subj AND f.pred = w.pred
-              AND f.obj = w.obj AND f.ts = w.ts
-  GROUP BY 1, 2, 3, 4
-)
-SELECT subj, pred, obj, ts FROM last WHERE op = 'add'
-"""
-
-
 def kg_completeness(
     triples: DataFrame,
     schema: DataFrame,
@@ -1513,42 +1484,6 @@ def kg_completeness(
     )
 
 
-def kg_completeness_sql(
-    schema_values: str,
-    type_pred: str = "rdf:type",
-    table: str = "t",
-) -> str:
-    """ANSI replay of ``kg_completeness``; ``schema_values`` is a
-    ``(VALUES ...) AS s(cls, prop)`` body or an equivalent CTE name."""
-    return f"""
-WITH types AS (
-  SELECT DISTINCT subj, obj AS cls FROM {table}
-  WHERE pred = '{type_pred}'
-), sch AS (
-  SELECT DISTINCT cls, prop FROM {schema_values}
-), props AS (
-  SELECT DISTINCT subj, pred AS prop FROM {table}
-  WHERE pred <> '{type_pred}'
-), filled AS (
-  SELECT e.cls, e.prop, CAST(count(*) AS BIGINT) AS n_filled
-  FROM (SELECT t.subj, t.cls, s.prop
-        FROM types t JOIN sch s ON t.cls = s.cls) e
-  WHERE EXISTS (SELECT 1 FROM props p
-                WHERE p.subj = e.subj AND p.prop = e.prop)
-  GROUP BY e.cls, e.prop
-), instances AS (
-  SELECT cls, CAST(count(*) AS BIGINT) AS n_instances
-  FROM types GROUP BY cls
-)
-SELECT s.cls, s.prop,
-       COALESCE(f.n_filled, 0) AS n_filled,
-       i.n_instances
-FROM sch s
-JOIN instances i ON s.cls = i.cls
-LEFT JOIN filled f ON s.cls = f.cls AND s.prop = f.prop
-"""
-
-
 def schema_graph(
     triples: DataFrame,
     type_pred: str = "rdf:type",
@@ -1597,31 +1532,6 @@ def schema_graph(
         .groupBy("subj_cls", "pred", "obj_cls")
         .agg(F.count(F.lit(1)).alias("n_edges"))
     )
-
-
-def schema_graph_sql(
-    type_pred: str = "rdf:type",
-    untyped: str = "__untyped__",
-    table: str = "t",
-) -> str:
-    """ANSI replay of ``schema_graph`` (``table`` carries
-    ``obj_is_iri``)."""
-    return f"""
-WITH types AS (
-  SELECT DISTINCT subj AS n, obj AS cls FROM {table}
-  WHERE pred = '{type_pred}'
-), edges AS (
-  SELECT DISTINCT subj, pred, obj FROM {table}
-  WHERE pred <> '{type_pred}' AND obj_is_iri
-)
-SELECT COALESCE(st.cls, '{untyped}') AS subj_cls, e.pred,
-       COALESCE(ot.cls, '{untyped}') AS obj_cls,
-       CAST(count(*) AS BIGINT) AS n_edges
-FROM edges e
-LEFT JOIN types st ON e.subj = st.n
-LEFT JOIN types ot ON e.obj = ot.n
-GROUP BY 1, 2, 3
-"""
 
 
 def characteristic_sets(
@@ -1790,23 +1700,6 @@ def compact_log(
     return state.unionByName(hot)
 
 
-def compact_log_sql(
-    horizon: str,
-    table: str = "t",
-) -> str:
-    """ANSI replay of ``compact_log`` over a ``(subj, pred, obj, op,
-    ts)`` table/CTE; ``horizon`` is a SQL literal."""
-    asof = kg_as_of_sql(horizon, table=table)
-    return f"""
-SELECT subj, pred, obj, 'add' AS op,
-       CAST({horizon} AS BIGINT) AS ts
-FROM ({asof}) state
-UNION ALL
-SELECT subj, pred, obj, op, ts FROM {table}
-WHERE ts > {horizon}
-"""
-
-
 def literal_stats(
     triples: DataFrame,
     int_pattern: str = "^-?[0-9]{1,18}$",
@@ -1840,28 +1733,6 @@ def literal_stats(
         F.max("iv").alias("max_value"),
         F.sum("iv").alias("sum_value"),
     )
-
-
-def literal_stats_sql(
-    int_pattern: str = "^-?[0-9]{1,18}$",
-    table: str = "t",
-) -> str:
-    """ANSI replay of ``literal_stats``."""
-    return f"""
-SELECT pred,
-       CAST(count(iv) AS BIGINT) AS n_int,
-       CAST(count(*) - count(iv) AS BIGINT) AS n_nonint,
-       MIN(iv) AS min_value,
-       MAX(iv) AS max_value,
-       SUM(iv) AS sum_value
-FROM (
-  SELECT pred,
-         CASE WHEN regexp_matches(obj, '{int_pattern}')
-              THEN CAST(obj AS BIGINT) END AS iv
-  FROM {table} WHERE NOT obj_is_iri
-)
-GROUP BY pred
-"""
 
 
 def infer_types_by_neighbors(

@@ -322,82 +322,6 @@ def fused_page_triples(
     return df.mapInArrow(kernel, schema=out_schema)
 
 
-def fused_page_mentions(
-    corpus: DataFrame,
-    ontology_map: Optional[Dict[str, Any]] = None,
-    lang: Optional[str] = None,
-    gazetteer: Optional[Dict[str, str]] = None,
-) -> DataFrame:
-    """(url, warc_ts, html, lang) → (url, record_uuid, surface,
-    entity_class, n_mentions) in ONE mapInArrow crossing: extraction +
-    deterministic record_uuid planning + broadcast-gazetteer scan fused.
-    Replaces the round-1 pages ⨝ manifest-keys join (which re-ran
-    extraction and shuffled on url just to attach record_uuid — the
-    record_uuid is a pure function of the record, so it is computed in
-    place). Narrow; zero shuffles.
-
-    ``ontology_map`` is accepted for signature symmetry with
-    fused_page_triples but unused: record_uuid depends only on the record
-    fingerprint, never on the map."""
-    from typing import Iterator as _Iterator
-
-    import pyarrow as _pa
-
-    from ..operators.mentions import (
-        MENTION_SCHEMA,
-        build_gazetteer,
-        build_prefix_index,
-        scan_mentions,
-    )
-    from ..refmap.identity import (
-        fingerprint_record as _fp,
-        record_uuid_for as _ruuid_for,
-    )
-
-    df = _fused_input(corpus, lang)
-    spark = df.sparkSession
-    gaz = gazetteer or build_gazetteer()
-    bc = spark.sparkContext.broadcast(
-        {
-            "shared": dict(PAGE_SHARED_METADATA),
-            "gaz": gaz,
-            "prefixes": build_prefix_index(gaz),
-        }
-    )
-    out_names = ["url", "record_uuid", "surface", "entity_class", "n_mentions"]
-
-    def kernel(batches: "_Iterator[_pa.RecordBatch]") -> "_Iterator[_pa.RecordBatch]":
-        cfg = bc.value
-        sh = cfg["shared"]
-        gazd, prefixes = cfg["gaz"], cfg["prefixes"]
-        for rb in batches:
-            cols = [[], [], [], [], []]
-            for url, warc_time, html, lg in _batch_page_fields(rb):
-                rec, text = _page_record(url, warc_time, html, lg, sh)
-                # record_uuid is a pure function of the fingerprint — the
-                # full plan (slots, matching, relationship specs) is never
-                # consumed here, so don't compute it
-                ruuid = _ruuid_for(_fp(rec))
-                for (surface, cls), c in sorted(
-                    scan_mentions(text, gazd, prefixes).items()
-                ):
-                    cols[0].append(url); cols[1].append(ruuid)
-                    cols[2].append(surface); cols[3].append(cls)
-                    cols[4].append(c)
-            yield _pa.RecordBatch.from_arrays(
-                [
-                    _pa.array(cols[0], _pa.string()),
-                    _pa.array(cols[1], _pa.string()),
-                    _pa.array(cols[2], _pa.string()),
-                    _pa.array(cols[3], _pa.string()),
-                    _pa.array(cols[4], _pa.int32()),
-                ],
-                names=out_names,
-            )
-
-    return df.mapInArrow(kernel, schema=MENTION_SCHEMA)
-
-
 def observed_triples(triples: DataFrame, name: str = "kg_metrics"):
     """Attach in-flight metrics (ST3/A7 equivalent of the reference's SSE
     progress events): triple count, distinct-ish record volume proxy, bytes.

@@ -55,10 +55,3 @@ def web_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
-
-
-def write_web_corpus(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
-    """Materialize the corpus as parquet (bench/e2e input)."""
-    path = os.path.join(out_dir, "webcorpus.parquet")
-    web_corpus(spark, sf_dir).write.mode("overwrite").parquet(path)
-    return path

@@ -20,7 +20,7 @@ from __future__ import annotations
 import csv
 import io
 import json
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Dict, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -113,11 +113,3 @@ def read_json_records(
     if "record" in raw.columns:
         return raw.select(*shared_cols, "record.*")
     return raw
-
-
-def read_csv_records(
-    spark: SparkSession, path: str, header: bool = True
-) -> DataFrame:
-    """Distributed CSV scan (schema-on-read; no inferSchema in prod —
-    strings in, typed later by the mapping layer like DictReader)."""
-    return spark.read.csv(path, header=header)

@@ -1,9 +1,10 @@
-"""brute_force_topk's Arrow kernel (optimization r6) must reproduce the
-expr path EXACTLY — same (query_id, vec_id, cosine, rank) rows — on
-randomized corpora, float32 and float64 embeddings, zero vectors, empty
-arrays, null rows, ragged dims, k ≥ N, and the no-query edge. The kernel's
-per-dimension sequential fold is bit-identical to the Catalyst aggregate
-by construction; these tests pin the whole surface anyway.
+"""brute_force_topk's Arrow kernel must reproduce its Catalyst plan
+(_brute_force_topk_catalyst) EXACTLY — same (query_id, vec_id, cosine,
+rank) rows — on randomized corpora, float32 and float64 embeddings, zero
+vectors, empty arrays, null rows, ragged dims, k ≥ N, and the no-query
+edge. The kernel's per-dimension sequential fold is bit-identical to the
+Catalyst aggregate by construction; these tests pin the whole surface
+anyway, plus the query-cap fallback onto the Catalyst plan.
 """
 
 import random
@@ -11,6 +12,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from case_uco_ontology_map_spark.operators import similarity
 from case_uco_ontology_map_spark.operators.similarity import brute_force_topk
 
 
@@ -28,8 +30,12 @@ def _parity(spark, emb_rows, q_rows, k, elem="double"):
     qs = spark.createDataFrame(
         q_rows, f"query_id long, query_vec array<{elem}>"
     )
-    fast = _rows(brute_force_topk(emb, qs, k=k, impl="arrow"))
-    ref = _rows(brute_force_topk(emb, qs, k=k, impl="expr"))
+    fast = _rows(brute_force_topk(emb, qs, k=k))
+    ref = _rows(
+        similarity._brute_force_topk_catalyst(
+            emb, qs, k, "vec_id", "embedding", "query_id", "query_vec"
+        )
+    )
     assert fast == ref
     return fast
 
@@ -95,34 +101,27 @@ def test_no_queries(spark):
     assert brute_force_topk(emb, qs, k=3).count() == 0
 
 
-def test_ivf_from_index_impl_parity(spark, tmp_path):
-    import random
+def test_query_cap_falls_back_to_catalyst(spark, monkeypatch):
+    """A query batch past _BRUTE_ARROW_MAX_QUERIES is not collected: the
+    call runs the Catalyst plan (no Python node) and returns the rows the
+    Arrow kernel gives the same batch under the real cap."""
+    import re
 
-    from case_uco_ontology_map_spark.operators.similarity import (
-        centroids_kmeans,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    rng = random.Random(991)
+    rng = random.Random(5)
     d = 8
     emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(200)],
+        [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(60)],
         "vec_id long, embedding array<double>",
     )
     qs = spark.createDataFrame(
         [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(3)],
         "query_id long, query_vec array<double>",
     )
-    cents = centroids_kmeans(emb, k=4, iterations=2)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, cents, path)
-    fast = _rows(
-        ivf_topk_from_index(spark, path, qs, cents, k=5, nprobe=2,
-                            impl="arrow")
-    )
-    ref = _rows(
-        ivf_topk_from_index(spark, path, qs, cents, k=5, nprobe=2,
-                            impl="expr")
-    )
-    assert fast == ref and len(fast) == 3 * 5
+    arrow = _rows(brute_force_topk(emb, qs, k=4))
+    monkeypatch.setattr(similarity, "_BRUTE_ARROW_MAX_QUERIES", 2)
+    fallback = brute_force_topk(emb, qs, k=4)
+    plan = fallback._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(
+        r"MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython", plan
+    ), plan
+    assert _rows(fallback) == arrow and len(arrow) == 3 * 4

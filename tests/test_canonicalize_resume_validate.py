@@ -176,68 +176,6 @@ def test_canonicalize_entities(spark):
     assert out[4] == 4 and out[5] == 5  # singletons keep themselves
 
 
-def test_canonicalize_auto_prefilter_inert_on_diverse_keys(spark):
-    """estimate_prefilter='auto' on well-distributed keys: the candidate/
-    entity ratio stays under the threshold, the prefilter never engages,
-    and the output is BIT-IDENTICAL to the plain exact path (which is why
-    the entity_canonicalize oracle needs no change)."""
-    rows = [
-        (1, "acme corporation"),
-        (2, "acme corporation inc"),
-        (3, "acme corp"),
-        (4, "zebra industries"),
-        (5, "completely unrelated"),
-    ]
-    ents = spark.createDataFrame(rows, "entity_id long, entity_key string")
-    plain = sorted(
-        tuple(r)
-        for r in canonicalize.canonicalize_entities(
-            ents, jaccard_threshold=0.4
-        ).collect()
-    )
-    auto = sorted(
-        tuple(r)
-        for r in canonicalize.canonicalize_entities(
-            ents, jaccard_threshold=0.4, estimate_prefilter="auto"
-        ).collect()
-    )
-    assert auto == plain
-
-
-def test_canonicalize_auto_prefilter_engages_on_flood(spark):
-    """Hot-domain flood: shared structured prefix makes candidates/entities
-    explode past auto_prefilter_ratio; 'auto' engages the 3σ-margin
-    estimate prefilter and the grouping stays EXACT (every variant clique
-    recovered, no cross-doc merges) — the prefilter only drops pairs the
-    exact verify would reject anyway."""
-    n_docs, copies = 40, 8
-    rows = [
-        (
-            d * 100 + c,
-            # two long distinctive hex blocks: cross-doc TRUE Jaccard
-            # ~0.4 (below the 0.7 threshold), within-doc variants ~0.95
-            "https://hot-domain.example.com/section/article/"
-            f"{d * 2654435761 % (1 << 61):016x}/"
-            f"{(d + 7777) * 2654435761 % (1 << 61):016x}-v{c}",
-        )
-        for d in range(n_docs)
-        for c in range(copies)
-    ]
-    ents = spark.createDataFrame(rows, "entity_id long, entity_key string")
-    out = canonicalize.canonicalize_entities(
-        ents, jaccard_threshold=0.7, estimate_prefilter="auto",
-        auto_prefilter_ratio=5.0,
-    )
-    rowsc = out.collect()
-    groups = {}
-    for r in rowsc:
-        groups.setdefault(r["canonical_id"], set()).add(r["entity_id"])
-    assert len(groups) == n_docs
-    for cid, members in groups.items():
-        assert len(members) == copies
-        assert {m // 100 for m in members} == {cid // 100}
-
-
 def test_canonicalize_drop_common_df_defuses_shared_prefix(spark):
     """drop_common_df: the shared structured prefix is detected as
     corpus-common shingles and excluded from the signatures, so the LSH

@@ -1,4 +1,4 @@
-"""Tests: input normalization (S1/S4), streaming ingest, multimodal plumbing."""
+"""Tests: input normalization (S1/S4) and streaming ingest."""
 
 import json
 import os
@@ -211,45 +211,6 @@ def test_threshold_alerts_stateful_stream(spark, tmp_path):
         assert got2["b"].total == 60.0 and got2["b"].n_events == 2
     finally:
         q.stop()
-
-
-def test_multimodal_features_and_resize(spark):
-    from case_uco_ontology_map_spark.operators import multimodal as mm
-
-    rows = [
-        (1, "u1", "image", "image/png", b"fakepngbytes-1", 32, 16, None),
-        (2, "u2", "image", "image/png", b"fakepngbytes-2", 64, 64, None),
-        (3, "u3", "image", "image/png", None, 8, 8, None),  # null payload
-    ]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    feats = {r["media_id"]: r["feature"] for r in mm.extract_image_features(media).collect()}
-    assert len(feats[1]) == 64 and len(feats[2]) == 64
-    assert feats[3] is None
-    assert abs(sum(x * x for x in feats[1]) - 1.0) < 1e-5  # L2-normalized
-    # deterministic: same payload → same feature
-    feats2 = {r["media_id"]: r["feature"] for r in mm.extract_image_features(media).collect()}
-    assert feats[1] == feats2[1]
-
-    resized = {r["media_id"]: r for r in mm.resize_images(media, 8, 8).collect()}
-    assert resized[1]["width"] == 8 and resized[1]["height"] == 8
-    assert len(resized[1]["payload"]) == 8 * 8 * 3
-
-
-def test_video_frame_sampling(spark):
-    from case_uco_ontology_map_spark.operators import multimodal as mm
-
-    rows = [(1, "v1", "video", "video/mp4", b"x" * 1000, None, None, 3500)]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    frames = mm.sample_video_frames(media, every_ms=1000).collect()
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
-    assert all(len(r["frame"]) == 16 for r in frames)
-
-
-def test_real_decoder_stub_raises():
-    from case_uco_ontology_map_spark.operators.multimodal import real_decode_stub
-
-    with pytest.raises(NotImplementedError):
-        real_decode_stub(b"x", 1, 1)
 
 
 def test_streaming_exactly_once_under_injected_crash(spark, sf_dir, tmp_path):

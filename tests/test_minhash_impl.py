@@ -1,18 +1,43 @@
-"""Arrow minhash fold ≡ expr fold — bit-exact parity pins for the r6
-optimization (dedup.minhash_fold_arrow). The fold is pure int64
-arithmetic ((abs(s) % p) * a + b) % p with every intermediate < 2^62, so
-numpy and the JVM must agree EXACTLY; these tests pin that across normal,
-empty, null, excluded-everything, and randomized inputs in both hash
-modes and both signature widths used by the engine."""
+"""The Arrow minhash fold (dedup.minhash_fold_arrow) against a plain-Python
+reference of ``min(((|s| mod p)·a + b) mod p)`` over the collected staged
+shingle arrays, ``p`` for an empty or null set. The fold is pure int64
+arithmetic with every intermediate < 2^62, so numpy and Python integers
+must agree EXACTLY; these tests pin that across normal, empty, null,
+excluded-everything, and randomized inputs in both hash modes and both
+signature widths used by the engine."""
 
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from case_uco_ontology_map_spark.operators.dedup import (
+    _MERSENNE_P,
+    _hash_params,
+)
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _ref_signature(sh, params):
+    if not sh:
+        return [_MERSENNE_P] * len(params)
+    return [
+        min(((abs(s) % _MERSENNE_P) * a + b) % _MERSENNE_P for s in sh)
+        for a, b in params
+    ]
+
+
+def _ref_rows(staged, id_cols, params, exclude=()):
+    """(*id_cols, signature) rows from a frame carrying the ``_sh`` array."""
+    ex = set(exclude)
+    return sorted(
+        tuple(r[c] for c in id_cols)
+        + (_ref_signature([s for s in (r["_sh"] or []) if s not in ex], params),)
+        for r in staged.collect()
+    )
 
 
 @pytest.fixture(scope="module")
@@ -34,18 +59,28 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _doc_shingles(docs, hash_mode="xxhash64"):
+    from case_uco_ontology_map_spark.operators.dedup import (
+        shingles_from_tokens,
+        tokens_lower_col,
+    )
+
+    toks = docs.select("doc_id", tokens_lower_col(F.col("text")).alias("_toks"))
+    return toks.select(
+        "doc_id", shingles_from_tokens(F.col("_toks"), 3, hash_mode).alias("_sh")
+    )
+
+
 @pytest.mark.parametrize("hash_mode", ["xxhash64", "md5_60"])
 @pytest.mark.parametrize("num_hashes", [16, 64])
 def test_minhash_signatures_arrow_matches_expr(docs, hash_mode, num_hashes):
     from case_uco_ontology_map_spark.operators.dedup import minhash_signatures
 
-    a = minhash_signatures(
-        docs, num_hashes=num_hashes, hash_mode=hash_mode, impl="arrow"
+    a = minhash_signatures(docs, num_hashes=num_hashes, hash_mode=hash_mode)
+    ref = _ref_rows(
+        _doc_shingles(docs, hash_mode), ["doc_id"], _hash_params(num_hashes)
     )
-    e = minhash_signatures(
-        docs, num_hashes=num_hashes, hash_mode=hash_mode, impl="expr"
-    )
-    assert _rows(a) == _rows(e)
+    assert _rows(a) == ref
 
 
 def test_minhash_signatures_exclude_parity(docs):
@@ -55,16 +90,14 @@ def test_minhash_signatures_exclude_parity(docs):
     )
 
     ex = common_shingle_hashes(docs, df_fraction=0.05)
-    a = minhash_signatures(docs, exclude=ex, impl="arrow")
-    e = minhash_signatures(docs, exclude=ex, impl="expr")
-    assert _rows(a) == _rows(e)
+    assert ex  # the reference must exercise the exclusion
+    a = minhash_signatures(docs, exclude=ex)
+    ref = _ref_rows(_doc_shingles(docs), ["doc_id"], _hash_params(64), ex)
+    assert _rows(a) == ref
 
 
 def test_entity_minhash_arrow_matches_expr(spark):
-    from case_uco_ontology_map_spark.operators.canonicalize import (
-        common_shingles,
-        entity_minhash,
-    )
+    from case_uco_ontology_map_spark.operators import canonicalize as cz
 
     rng = random.Random(7)
     rows = [
@@ -81,16 +114,22 @@ def test_entity_minhash_arrow_matches_expr(spark):
         for i in range(60)
     ]
     ents = spark.createDataFrame(rows, "entity_id long, entity_key string")
-    for exclude in (None, common_shingles(ents, df_fraction=0.2)):
-        a = entity_minhash(ents, exclude=exclude, impl="arrow")
-        e = entity_minhash(ents, exclude=exclude, impl="expr")
-        assert _rows(a) == _rows(e)
+    staged = ents.select(
+        "entity_id", "entity_key",
+        cz.char_shingles(F.col("entity_key")).alias("_sh"),
+    )
+    params = _hash_params(32, seed=17)
+    for exclude in (None, cz.common_shingles(ents, df_fraction=0.2)):
+        a = cz.entity_minhash(ents, exclude=exclude)
+        ref = _ref_rows(
+            staged, ["entity_id", "entity_key"], params, exclude or ()
+        )
+        assert _rows(a) == ref
 
 
 def test_canonicalize_unchanged_by_default_impl(spark):
-    """canonicalize_entities (which signs via the default impl) must land
-    the exact grouping the expr fold produced — the grouping IS the
-    contract surface."""
+    """canonicalize_entities (which signs via the Arrow fold) must land
+    the expected grouping — the grouping IS the contract surface."""
     from case_uco_ontology_map_spark.operators.canonicalize import (
         canonicalize_entities,
     )

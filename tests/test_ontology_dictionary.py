@@ -1,24 +1,29 @@
 """Ontology dictionary compile regression tests (S3/A6/SET2)."""
 
+import json
 import os
 
 import pytest
 
 from case_uco_ontology_map_spark.refmap.ontology import (
     DEFAULT_TTL_DIR,
-    compile_dictionary,
     load_dictionary,
     ontology_map_for_classes,
+    write_dictionary,
 )
 
 
-def test_compile_matches_committed_dictionary():
+def test_compile_matches_committed_dictionary(tmp_path):
+    """Regenerating through write_dictionary (the writer of the committed
+    artifact) lands the same classes, shapes and facets."""
     if not os.path.isdir(DEFAULT_TTL_DIR):
         pytest.skip(
             f"TTL ontology directory {DEFAULT_TTL_DIR} is absent; the "
             "committed ontology_dictionary.json is the artifact"
         )
-    fresh = compile_dictionary()
+    out = write_dictionary(str(tmp_path / "ontology_dictionary.json"))
+    with open(out, encoding="utf-8") as fh:
+        fresh = json.load(fh)
     committed = load_dictionary()
     assert fresh["classes"].keys() == committed["classes"].keys()
     assert fresh["shapes"].keys() == committed["shapes"].keys()

@@ -414,16 +414,13 @@ def test_ivf_index_partition_pruned_matches_inline(spark, sf_dir, tmp_path):
 
 
 def test_assign_cells_arrow_matches_expr(spark, sf_dir):
-    """The vectorized (numpy-matmul) assignment kernel agrees with the
-    oracle-replayable Catalyst-expression kernel on every real vector —
-    the two may only diverge within BLAS rounding of an exact two-cell
-    tie, which real embeddings don't sit on. Also pins kmeans(sample=...,
-    impl='arrow') + write_ivf_index(impl='arrow') end to end: the index
-    built by the fast path serves the same top-k as the expr index."""
+    """The vectorized (numpy-matmul) index-build assignment kernel agrees
+    with the oracle-replayable Catalyst assign_cells on every real vector
+    — the two may only diverge within BLAS rounding of an exact two-cell
+    tie, which real embeddings don't sit on. Centroids come from
+    kmeans(sample=...)."""
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    cents = similarity.centroids_kmeans(
-        emb, k=8, iterations=2, impl="arrow", sample=256
-    )
+    cents = similarity.centroids_kmeans(emb, k=8, iterations=2, sample=256)
     by_expr = {
         r["vec_id"]: r["cell"]
         for r in similarity.assign_cells(emb, cents).select(
@@ -432,14 +429,16 @@ def test_assign_cells_arrow_matches_expr(spark, sf_dir):
     }
     by_arrow = {
         r["vec_id"]: r["cell"]
-        for r in similarity.assign_cells(emb, cents, impl="arrow").select(
-            "vec_id", "cell"
-        ).collect()
+        for r in similarity._assign_cells_arrow(
+            emb, cents, "embedding"
+        ).select("vec_id", "cell").collect()
     }
     assert by_expr == by_arrow
 
 
 def test_write_ivf_index_arrow_serves_same_topk(spark, sf_dir, tmp_path):
+    """write_ivf_index (Arrow assignment) serves the same top-k as a
+    reference index partitioned by the Catalyst assign_cells."""
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     queries = (
         emb.orderBy("vec_id")
@@ -452,8 +451,10 @@ def test_write_ivf_index_arrow_serves_same_topk(spark, sf_dir, tmp_path):
     cents = similarity.centroids_kmeans(emb, k=8, iterations=2)
     expr_path = str(tmp_path / "ivf-expr")
     arrow_path = str(tmp_path / "ivf-arrow")
-    similarity.write_ivf_index(emb, cents, expr_path, impl="expr")
-    similarity.write_ivf_index(emb, cents, arrow_path)  # arrow default (r5)
+    similarity.assign_cells(emb, cents).repartition(8, "cell").write.partitionBy(
+        "cell"
+    ).parquet(expr_path)
+    similarity.write_ivf_index(emb, cents, arrow_path)
     key = lambda t: (t[0], t[3])
     a = sorted(
         map(
@@ -1172,12 +1173,17 @@ def test_sq8_topk_rescoring_matches_brute_force(spark):
 
 
 def test_sq8_arrow_kernel_matches_expr(spark):
-    """impl='arrow' (production scorer) and impl='expr' (oracle kernel)
-    must produce the identical rescored top-k — same agreement contract
-    as assign_cells' two kernels."""
+    """sq8_topk (Arrow stage-1 scorer) must produce the identical
+    rescored top-k as a Catalyst reference of the same two stages:
+    cosine against the dequantized codes, top k·overfetch, exact rescore
+    against the full vectors, top k."""
     import math
 
+    from pyspark.sql import Window
+
+    from case_uco_ontology_map_spark.operators.dedup import _cosine
     from case_uco_ontology_map_spark.operators.similarity import (
+        dequantize_expr,
         quantize_embeddings,
         sq8_topk,
     )
@@ -1201,10 +1207,33 @@ def test_sq8_arrow_kernel_matches_expr(spark):
     key = lambda rows: sorted(
         (r.query_id, r.vec_id, r.rank, r.cosine) for r in rows
     )
-    expr = sq8_topk(q, queries, k=5, overfetch=4, full_vectors=emb)
-    arrow = sq8_topk(
-        q, queries, k=5, overfetch=4, full_vectors=emb, impl="arrow"
+
+    def top(df, n, score):
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc(score), F.asc("vec_id")
+        )
+        return df.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= n
+        )
+
+    xhat = dequantize_expr(F.col("codes"), F.col("q_min"), F.col("q_scale"))
+    approx = q.crossJoin(F.broadcast(queries)).select(
+        "query_id", "vec_id",
+        F.round(_cosine(xhat, F.col("query_vec")), 6).alias("approx"),
     )
+    cands = top(approx, 5 * 4, "approx").drop("rank")
+    exact = (
+        cands.join(emb, "vec_id")
+        .join(F.broadcast(queries), "query_id")
+        .select(
+            "query_id", "vec_id",
+            F.round(_cosine(F.col("embedding"), F.col("query_vec")), 6).alias(
+                "cosine"
+            ),
+        )
+    )
+    expr = top(exact, 5, "cosine")
+    arrow = sq8_topk(q, queries, k=5, overfetch=4, full_vectors=emb)
     assert key(arrow.collect()) == key(expr.collect())
 
 

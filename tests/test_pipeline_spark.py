@@ -200,17 +200,31 @@ def test_fused_mentions_one_scan_no_shuffle(spark, sf_dir):
     assert plan.count("Scan parquet") <= 1, plan
 
 
+def _staged_mentions(corpus):
+    """The mention stream the fused kernel must reproduce, built from the
+    staged operators: detect_mentions over the extracted pages, each
+    page's record_uuid taken from the staged extract→records→emit
+    triples."""
+    from case_uco_ontology_map_spark.operators.mentions import detect_mentions
+
+    pages = extracted_pages(corpus)
+    uuids = (
+        page_triples(page_records(pages))
+        .where(F.col("url").isNotNull())
+        .select("url", "record_uuid")
+        .distinct()
+    )
+    text = pages.select("url", F.col("extracted_text").alias("text")).join(
+        uuids, "url"
+    )
+    return detect_mentions(text, record_uuid_col="record_uuid")
+
+
 def test_fused_mentions_match_operators(spark, sf_dir):
     """Fused mention-triple emission must equal detect_mentions →
     mention_triples run over the same records (shared pure helpers)."""
-    from case_uco_ontology_map_spark.operators.mentions import (
-        detect_mentions,
-        mention_triples,
-    )
-    from case_uco_ontology_map_spark.plans.pipeline import (
-        fused_page_mentions,
-        fused_page_triples,
-    )
+    from case_uco_ontology_map_spark.operators.mentions import mention_triples
+    from case_uco_ontology_map_spark.plans.pipeline import fused_page_triples
 
     corpus = web_corpus(spark, sf_dir).limit(50).cache()
     fused = fused_page_triples(corpus, mentions=True)
@@ -220,31 +234,17 @@ def test_fused_mentions_match_operators(spark, sf_dir):
         t[:6] for t in fused_set - page_only
     }
 
-    found = fused_page_mentions(corpus)
+    found = _staged_mentions(corpus)
     staged_mentions = {tuple(r) for r in mention_triples(found).collect()}
     assert fused_mention_part == staged_mentions
     assert len(staged_mentions) > 0
-
-    # fused_page_mentions itself equals detect_mentions over extracted pages
-    pages = extracted_pages(corpus).select(
-        "url", F.col("extracted_text").alias("text")
-    )
-    det = {
-        (r["url"], r["surface"], r["entity_class"], r["n_mentions"])
-        for r in detect_mentions(pages).collect()
-    }
-    fm = {
-        (r["url"], r["surface"], r["entity_class"], r["n_mentions"])
-        for r in found.collect()
-    }
-    assert fm == det
     corpus.unpersist()
 
 
 def test_surface_markers_lossless_single_scan(spark, sf_dir):
     """Single-scan with_mentions (round-3): the per-surface audit markers
     emitted by the fused kernel must reconstruct the 5-col mention stream
-    EXACTLY (mentions_from_triples ≡ fused_page_mentions), markers must be
+    EXACTLY (mentions_from_triples ≡ the staged detect_mentions), markers must be
     manifest-invisible (fingerprint NULL) and strippable, and the derived
     stream's plan must contain exactly ONE Python kernel node."""
     import re
@@ -254,10 +254,7 @@ def test_surface_markers_lossless_single_scan(spark, sf_dir):
         mentions_from_triples,
         strip_mention_markers,
     )
-    from case_uco_ontology_map_spark.plans.pipeline import (
-        fused_page_mentions,
-        fused_page_triples,
-    )
+    from case_uco_ontology_map_spark.plans.pipeline import fused_page_triples
 
     corpus = web_corpus(spark, sf_dir).limit(60).cache()
     with_markers = fused_page_triples(
@@ -266,7 +263,7 @@ def test_surface_markers_lossless_single_scan(spark, sf_dir):
     derived = {
         tuple(r) for r in mentions_from_triples(with_markers).collect()
     }
-    direct = {tuple(r) for r in fused_page_mentions(corpus).collect()}
+    direct = {tuple(r) for r in _staged_mentions(corpus).collect()}
     assert derived == direct and derived
 
     rows = with_markers.collect()
@@ -307,10 +304,7 @@ def test_run_pipeline_mentions_from_sink_no_kernel(spark, sf_dir, tmp_path):
     """Materialized with_mentions: out["mentions"] reads the WRITTEN triple
     sink (pred-filtered pruned scan + link scoring) — no extraction kernel
     in its plan — and equals the kernel-derived stream."""
-    from case_uco_ontology_map_spark.plans.pipeline import (
-        fused_page_mentions,
-        run_pipeline,
-    )
+    from case_uco_ontology_map_spark.plans.pipeline import run_pipeline
 
     out = run_pipeline(
         spark, sf_dir, out_dir=str(tmp_path / "kg"), with_mentions=True
@@ -323,6 +317,6 @@ def test_run_pipeline_mentions_from_sink_no_kernel(spark, sf_dir, tmp_path):
         for r in out["mentions"].collect()
     }
     direct = {
-        tuple(r) for r in fused_page_mentions(web_corpus(spark, sf_dir)).collect()
+        tuple(r) for r in _staged_mentions(web_corpus(spark, sf_dir)).collect()
     }
     assert got == direct and got
