@@ -3333,8 +3333,8 @@ FROM events GROUP BY event_type ORDER BY event_type
 def q_event_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST5 batch twin: tumbling 1-hour window aggregation per event_type.
     The SAME `F.window` expression (streaming/ingest.windowed_stats) runs in
-    batch and streaming — this oracles the window-assignment + agg math that
-    crawl_window_stats exercises on a stream. Map-side partials on the agg
+    batch and streaming — this oracles the window-assignment + agg math a
+    watermarked stream runs unchanged. Map-side partials on the agg
     shuffle; the distinct-user count adds the usual second (expand)
     phase."""
     from pyspark.sql import functions as F
@@ -4499,10 +4499,7 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent hash of the same key (the global-shuffle order a
     training run streams) — pure functions of the key, so every epoch /
     retry / cluster size regenerates identical shards. md5_60 so DuckDB
-    replays both hashes bit-exactly. The write layout
-    (write_training_shards: repartition-on-shard before partitionBy, one
-    sorted file per shard) is pinned by pytest — filesystem ops have no
-    SQL surface."""
+    replays both hashes bit-exactly."""
     from case_uco_ontology_map_spark.operators.sampling import (
         shard_assignment,
     )
@@ -7569,8 +7566,8 @@ def q_property_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Property-graph projection (operators/triples.
     property_graph_nodes): the structural emission as one row per node
     — sorted type labels + sorted pred=value literal props (IRI edges
-    excluded; they feed graphstats directly via
-    property_graph_edges) — the GraphX/Neo4j consumer bridge. DuckDB
+    excluded; they feed graphstats directly) — the GraphX/Neo4j
+    consumer bridge. DuckDB
     replays the FILTERed list aggregates + sorts."""
     from case_uco_ontology_map_spark.operators.triples import (
         property_graph_nodes,

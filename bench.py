@@ -172,8 +172,10 @@ def bench_queries(spark, sf_dir: str):
             exact_dedup(docs).filter(F.col("is_canonical")).select("doc_id")
         )
         canon_docs = docs.join(F.broadcast(canon_ids), "doc_id")
-        sigs = minhash_signatures(canon_docs)
-        return minhash_estimate_pairs(sigs, threshold=0.5).count()
+        sigs = minhash_signatures(canon_docs).cache()
+        n = minhash_estimate_pairs(sigs, threshold=0.5).count()
+        sigs.unpersist()
+        return n
 
     def q_mentions():
         from case_uco_ontology_map_spark.operators.mentions import detect_mentions
@@ -1524,8 +1526,9 @@ def bench_queries(spark, sf_dir: str):
         Setup (untimed, once): export the corpus via documents_to_warc +
         write_warc into CPUS*2 archives. Guard: every doc comes back.
         Uses the FUSED single-crossing reader (read_warc_documents) —
-        the two-stage read_warc→warc_to_documents plan ships payload
-        bytes through Arrow twice and measured slope 1.81 at tier 2."""
+        a two-stage plan (read_warc, then an envelope-strip pass) ships
+        payload bytes through Arrow twice and measured slope 1.81 at
+        tier 2."""
         from case_uco_ontology_map_spark.sources.warc import (
             documents_to_warc,
             read_warc_documents,

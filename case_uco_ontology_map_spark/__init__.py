@@ -13,9 +13,9 @@ Layout:
                reference's deterministic path holds by construction.
   functions/   Spark Column expressions + pandas UDFs.
   operators/   record fan-out, planning, dedup, similarity, text analysis.
-  sources/     synthetic corpus generator, table layer (parquet + manifest).
+  sources/     synthetic corpus generator, payload and WARC readers.
   plans/       end-to-end pipeline (documents → triples/entities/lineage).
-  streaming/   checkpoint/resume semantics, streaming ingest.
+  streaming/   checkpoint/resume semantics, time-window aggregations.
 """
 
 __version__ = "0.1.0"

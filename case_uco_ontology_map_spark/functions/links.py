@@ -161,24 +161,6 @@ def sitemap_entries(
     )
 
 
-def link_graph(
-    df: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
-    """Distinct (src, dst) edges with anchor multiplicity — the frame
-    graphstats.pagerank / label_propagation consume directly. One
-    groupBy shuffle on the edge key; anchor strings reduce map-side."""
-    return (
-        extract_links(df, url_col, html_col)
-        .groupBy("src", "dst")
-        .agg(
-            F.count(F.lit(1)).alias("n_anchors"),
-            F.min("anchor").alias("first_anchor"),
-        )
-    )
-
-
 def host_graph(
     edges: DataFrame,
     src: str = "src",
@@ -360,7 +342,7 @@ def link_delta(
     ``cdx_delta``'s page-level change detection (link rot measurement,
     freshness-weighted ranking, and incremental PageRank all start from
     this frame). Both inputs dedup to DISTINCT edge sets first (anchor
-    multiplicity is ``link_graph``'s job, not the diff's).
+    multiplicity is not the diff's concern).
 
     Scale shape: one shuffle per side onto the shared (src, dst) key,
     then a single co-partitioned full-outer sort-merge join — no

@@ -476,8 +476,8 @@ def canonicalize_entities(
     if verify == "estimate":
         # the estimate path references sigs from THREE joins (band
         # candidates + both aliased sides of the agree-count) — without a
-        # cache the shingle→fold chain re-executes per reference;
-        # mirrors dedup.minhash_estimate_pairs' cache. Unpersisted after
+        # cache the shingle→fold chain re-executes per reference (the
+        # same three reads as dedup.minhash_estimate_pairs). Unpersisted after
         # the CC edge set is checkpointed (blocking=False — safe because
         # connected_components materializes every round eagerly).
         cached_sigs = sigs = sigs.cache()

@@ -28,7 +28,7 @@ them to hash-partitioned exchanges on well-distributed keys.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Optional
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, Window
@@ -116,53 +116,14 @@ def exact_dedup(
     )
 
 
-def common_shingle_hashes(
-    df: DataFrame,
-    text_col: str = "text",
-    df_fraction: float = 0.05,
-    shingle_n: int = 3,
-    hash_mode: str = "xxhash64",
-    sample_fraction: Optional[float] = None,
-) -> List[int]:
-    """Corpus-common token-shingle hashes: shingles present in more than
-    ``df_fraction`` of documents. The web-corpus boilerplate defuse for
-    near-dup detection — navigation chrome, cookie banners, and footer
-    text repeat across most pages of a site, dominate every minhash, and
-    flood LSH buckets with cross-page collisions exactly like the
-    hot-domain entity-key prefix (see canonicalize.common_shingles, the
-    entity twin of this function, for the measured fixed-cap recall
-    failure that motivates DF filtering). Pass the result to
-    ``minhash_signatures(exclude=...)``; exact/estimate verification
-    semantics are the caller's choice as before.
-
-    One aggregation: explode distinct per-doc shingles → groupBy(hash) →
-    count, map-side partial combined. At 10^12 docs use
-    ``sample_fraction`` — genuinely common shingles concentrate, so a
-    uniform sample estimates them tightly at 1/fraction the cost. Returns
-    a broadcast-size Python list (≤ shingles-per-doc / df_fraction
-    entries by construction)."""
-    return high_df_hashes(
-        df,
-        lambda b: b.select(
-            tokens_lower_col(F.col(text_col)).alias("_toks")
-        ).select(
-            shingles_from_tokens(F.col("_toks"), shingle_n, hash_mode).alias(
-                "_sh"
-            )
-        ),
-        df_fraction,
-        sample_fraction,
-    )
-
-
 def high_df_hashes(
     base: DataFrame,
     stage,
     df_fraction: float,
     sample_fraction: Optional[float] = None,
 ) -> List[int]:
-    """Shared DF-cutoff scaffold behind ``common_shingle_hashes`` and
-    ``canonicalize.common_shingles``: optional uniform sample →
+    """DF-cutoff scaffold behind ``canonicalize.common_shingles``:
+    optional uniform sample →
     ``stage(df)`` producing an ``_sh`` shingle-hash array column →
     explode + groupBy counts, filtered against the corpus row count.
     The count rides the SAME query as a broadcast cross-joined aggregate
@@ -243,17 +204,11 @@ def minhash_signatures(
     num_hashes: int = 64,
     shingle_n: int = 3,
     hash_mode: str = "xxhash64",
-    exclude: Optional[Sequence[int]] = None,
 ) -> DataFrame:
     """k minhashes per doc: sig_i = min over shingles of ((a_i*s + b_i) mod p).
     Shingles hash in the JVM; the fold is one Arrow-batched numpy pass
     (minhash_fold_arrow). No shuffle. Empty shingle sets get p (sentinel)
     so they never collide with real signatures.
-
-    ``exclude``: shingle hashes removed before signing (see
-    common_shingle_hashes — the boilerplate defuse). A doc whose every
-    shingle is excluded degrades to the sentinel signature (never
-    collides).
 
     The tokens are materialized in their OWN projection before the
     shingle lambda references them: CollapseProject folds an inlined
@@ -261,16 +216,11 @@ def minhash_signatures(
     elimination does not reach inside higher-order functions (see
     shingles_from_tokens). Same fix as simhash's `_votes` staging below."""
     params = _hash_params(num_hashes)
-    sh = shingles_from_tokens(F.col("_toks"), shingle_n, hash_mode)
-    if exclude:
-        sh = F.array_except(
-            sh, F.array(*[F.lit(int(x)).cast("long") for x in exclude])
-        )
     staged = df.select(
         F.col(id_col), tokens_lower_col(F.col(text_col)).alias("_toks")
     ).select(
         F.col(id_col),
-        sh.alias("_sh"),
+        shingles_from_tokens(F.col("_toks"), shingle_n, hash_mode).alias("_sh"),
     )
     return minhash_fold_arrow(staged, params).select(
         F.col(id_col), F.col("minhash")
@@ -515,37 +465,23 @@ def minhash_dedup_pairs(
     bands: int = 16,
     threshold: float = 0.7,
     shingle_n: int = 3,
-    estimate: bool = False,
     hash_mode: str = "xxhash64",
-    exclude: Optional[Sequence[int]] = None,
     observation: Optional[Observation] = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded candidates →
-    Jaccard verification on candidates only. Returns (a_id, b_id, jaccard)
-    pairs with jaccard ≥ threshold. ``exclude``/``observation`` thread to
-    minhash_signatures (boilerplate DF filter) and the band join (drop
-    accounting).
-
-    estimate=False verifies with EXACT shingle-set Jaccard (re-joins the
-    docs). estimate=True verifies with the minhash estimate (fraction of
-    agreeing signature positions) — the 100 TB path: the verification join
-    touches only the k-int signatures already in hand, never the documents,
-    cutting the verify-join payload ~10× at ±1/√k estimator error.
-    (An in-bucket estimate — signatures riding the collect_list rows — was
-    measured 3× SLOWER than this join: the deeply nested HOF over
-    array<struct<id,array<bigint>>> drops out of whole-stage codegen.)"""
+    EXACT shingle-set Jaccard verification on candidates only (re-joins
+    the docs). Returns (a_id, b_id, jaccard) pairs with jaccard ≥
+    threshold. ``observation`` threads to the band join (drop
+    accounting). ``minhash_estimate_pairs`` is the signature-only
+    variant that never re-joins the documents."""
     sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, hash_mode, exclude=exclude
+        df, text_col, id_col, num_hashes, shingle_n, hash_mode
     )
-    if not estimate:
-        cands = lsh_candidate_pairs(
-            sigs, id_col, bands, hash_mode=hash_mode, observation=observation
-        )
-        return ngram_jaccard_pairs(
-            df, cands, text_col, id_col, shingle_n, threshold, hash_mode
-        )
-    return minhash_estimate_pairs(
-        sigs, id_col, bands, threshold, hash_mode, observation=observation
+    cands = lsh_candidate_pairs(
+        sigs, id_col, bands, hash_mode=hash_mode, observation=observation
+    )
+    return ngram_jaccard_pairs(
+        df, cands, text_col, id_col, shingle_n, threshold, hash_mode
     )
 
 
@@ -555,7 +491,6 @@ def minhash_estimate_pairs(
     bands: int = 16,
     threshold: float = 0.7,
     hash_mode: str = "xxhash64",
-    cache: bool = True,
     observation: Optional[Observation] = None,
 ) -> DataFrame:
     """Signature-only near-dup pairs: banded LSH candidates verified by the
@@ -564,14 +499,16 @@ def minhash_estimate_pairs(
     Takes precomputed signatures so callers can stage the 100 TB way:
     compute signatures narrowly over the raw corpus, then every later
     shuffle/join moves only the k-int signature (~0.5 KB/doc), never the
-    document text. The estimate never re-joins the documents.
+    document text. The estimate never re-joins the documents: the verify
+    join touches only the k-int signatures already in hand, cutting the
+    verify-join payload ~10× at ±1/√k estimator error. (An in-bucket
+    estimate — signatures riding the collect_list rows — was measured 3×
+    SLOWER than this join: the deeply nested HOF over
+    array<struct<id,array<bigint>>> drops out of whole-stage codegen.)
 
-    ``cache=True`` persists the signatures (used by the band join AND both
-    verify sides); the cache lives until the session drops it — a
-    long-lived session that calls this repeatedly should pass an already-
-    persisted ``sigs`` and ``cache=False``, then unpersist itself."""
-    if cache:
-        sigs = sigs.cache()
+    ``sigs`` is read three times (the band join and both verify sides);
+    the caller owns its blocks — persist it before the action and
+    unpersist after (the ownership rule of ``serving.build_postings``)."""
     cands = lsh_candidate_pairs(
         sigs, id_col, bands, hash_mode=hash_mode, observation=observation
     )
@@ -879,31 +816,6 @@ def hash_index(
     )
 
 
-def write_hash_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 64,
-) -> None:
-    """Persist the corpus hash index partitioned by a hash-prefix bucket
-    column — the membership table an incremental crawl dedups against
-    WITHOUT touching document text. Same sink rule as every other writer
-    here: repartition on the bucket key BEFORE partitionBy so each
-    partition directory is one task's output (no small-files explosion).
-
-    At 10^12 docs this table is Iceberg, bucket-clustered on
-    content_hash, so a delta join shuffles only the delta; the
-    bucket-column parquet layout stands in for that here (the same
-    SnapshotTable convention the triple/entity sinks use)."""
-    idx = hash_index(df, text_col, id_col).withColumn(
-        "bucket", F.pmod(F.xxhash64("content_hash"), F.lit(buckets))
-    )
-    idx.repartition(buckets, "bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
-
-
 def incremental_exact_dedup(
     batch: DataFrame,
     index: DataFrame,
@@ -922,10 +834,9 @@ def incremental_exact_dedup(
 
     Scale shape: the batch-internal collapse is one window over the
     uniform sha256 key; the corpus probe is a left join whose RIGHT side
-    is the (hash, canonical) index — clustered storage (see
-    write_hash_index) keeps the corpus side shuffle-free at 10^12 while
-    only the delta shuffles into its bucketing. Corpus text is never
-    read."""
+    is the (hash, canonical) index (``hash_index``) — clustered storage
+    keeps the corpus side shuffle-free at 10^12 while only the delta
+    shuffles into its bucketing. Corpus text is never read."""
     h = F.sha2(F.col(text_col), 256).alias("content_hash")
     w = Window.partitionBy("content_hash")
     b = (

@@ -17,6 +17,7 @@ iterations over N-row frames.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -62,6 +63,57 @@ FULL OUTER JOIN
       FROM {table} GROUP BY 1) i
 ON o.node = i.node
 """
+
+
+@contextmanager
+def _ranking_graph(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    weight_col: Optional[str] = None,
+    seeds: Optional[DataFrame] = None,
+):
+    """The graph preparation behind ``pagerank`` and ``trustrank``.
+    Yields ``(e, with_deg)``: the non-null edges as ``(_s, _d[, _w])``
+    repartitioned on ``_s`` (weighted: only positive, non-null weights),
+    and every node appearing as ``src`` or ``dst`` with its out-degree
+    ``_deg`` (weighted: the summed weight; null for dangling nodes),
+    plus the boolean ``_seed`` flag when ``seeds`` (a distinct ``node``
+    frame, broadcast) is given. Both frames are persisted and released
+    on every exit from the block, a raise included."""
+    cols = [F.col(src).alias("_s"), F.col(dst).alias("_d")]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("double").alias("_w"))
+    e = edges.select(*cols).where(
+        F.col(src).isNotNull() & F.col(dst).isNotNull()
+    )
+    if weight_col is not None:
+        e = e.where(F.col("_w").isNotNull() & (F.col("_w") > 0))
+    spark = edges.sparkSession
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    e = e.repartition(shuffle, "_s").persist()
+    nodes = (
+        e.select(F.col("_s").alias("node"))
+        .unionByName(e.select(F.col("_d").alias("node")))
+        .distinct()
+    )
+    if seeds is not None:
+        nodes = nodes.join(
+            F.broadcast(seeds.withColumn("_seed", F.lit(True))),
+            on="node",
+            how="left",
+        ).select("node", F.coalesce("_seed", F.lit(False)).alias("_seed"))
+    out_deg = e.groupBy(F.col("_s").alias("node")).agg(
+        (F.sum("_w") if weight_col is not None else F.count("*")).alias(
+            "_deg"
+        )
+    )
+    with_deg = nodes.join(out_deg, on="node", how="left").persist()
+    try:
+        yield e, with_deg
+    finally:
+        e.unpersist()
+        with_deg.unpersist()
 
 
 def _power_iteration(
@@ -149,66 +201,43 @@ def pagerank(
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
     weighted = weight_col is not None
-    cols = [F.col(src).alias("_s"), F.col(dst).alias("_d")]
-    if weighted:
-        cols.append(F.col(weight_col).cast("double").alias("_w"))
-    e = edges.select(*cols).where(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
-    if weighted:
-        e = e.where(F.col("_w").isNotNull() & (F.col("_w") > 0))
-    spark = edges.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = e.repartition(shuffle, "_s").persist()
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()  # one action up front; N is needed as a scalar
-    if n_nodes == 0:
-        e.unpersist()
-        nodes.unpersist()
-        return nodes.withColumn("rank", F.lit(0.0))
-    out_deg = e.groupBy(F.col("_s").alias("node")).agg(
-        (F.sum("_w") if weighted else F.count("*")).alias("_deg")
-    )
-    with_deg = nodes.join(out_deg, on="node", how="left").persist()
-    if init_ranks is not None:
-        prior = init_ranks.select(
-            F.col("node").alias("node"), F.col("rank").alias("_ir")
+    with _ranking_graph(edges, src, dst, weight_col) as (e, with_deg):
+        n_nodes = with_deg.count()  # one action up front; N is a scalar
+        if n_nodes == 0:
+            return with_deg.select("node", F.lit(0.0).alias("rank"))
+        if init_ranks is not None:
+            prior = init_ranks.select(
+                F.col("node").alias("node"), F.col("rank").alias("_ir")
+            )
+            w = with_deg.join(prior, on="node", how="left").select(
+                "node",
+                "_deg",
+                F.coalesce("_ir", F.lit(1.0 / n_nodes)).alias("_w"),
+            )
+            total = w.agg(F.sum("_w").alias("_tw"))
+            ranks = w.crossJoin(F.broadcast(total)).select(
+                "node", "_deg", (F.col("_w") / F.col("_tw")).alias("rank")
+            )
+        else:
+            ranks = with_deg.select(
+                "node", "_deg", F.lit(1.0 / n_nodes).alias("rank")
+            )
+        share = (
+            (F.col("rank") * F.col("_w") / F.col("_deg"))
+            if weighted
+            else (F.col("rank") / F.col("_deg"))
         )
-        w = with_deg.join(prior, on="node", how="left").select(
-            "node", "_deg", F.coalesce("_ir", F.lit(1.0 / n_nodes)).alias("_w")
+        ranks = _power_iteration(
+            e,
+            with_deg,
+            ranks,
+            "rank",
+            share,
+            lambda recv, dm: F.lit((1.0 - damping) / n_nodes)
+            + F.lit(damping) * (recv + dm / F.lit(float(n_nodes))),
+            iterations,
         )
-        total = w.agg(F.sum("_w").alias("_tw"))
-        ranks = w.crossJoin(F.broadcast(total)).select(
-            "node", "_deg", (F.col("_w") / F.col("_tw")).alias("rank")
-        )
-    else:
-        ranks = with_deg.select(
-            "node", "_deg", F.lit(1.0 / n_nodes).alias("rank")
-        )
-    share = (
-        (F.col("rank") * F.col("_w") / F.col("_deg"))
-        if weighted
-        else (F.col("rank") / F.col("_deg"))
-    )
-    ranks = _power_iteration(
-        e,
-        with_deg,
-        ranks,
-        "rank",
-        share,
-        lambda recv, dm: F.lit((1.0 - damping) / n_nodes)
-        + F.lit(damping) * (recv + dm / F.lit(float(n_nodes))),
-        iterations,
-    )
-    e.unpersist()
-    nodes.unpersist()
-    with_deg.unpersist()
-    return ranks.select("node", "rank")
+        return ranks.select("node", "rank")
 
 
 def pagerank_sql(
@@ -1222,48 +1251,27 @@ def trustrank(
     silently drain all mass)."""
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).where(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
-    spark = edges.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = e.repartition(shuffle, "_s").persist()
     s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .join(F.broadcast(s.withColumn("_seed", F.lit(True))),
-              on="node", how="left")
-        .select("node", F.coalesce("_seed", F.lit(False)).alias("_seed"))
-        .persist()
-    )
-    n_seeds = nodes.where(F.col("_seed")).count()
-    if n_seeds == 0:
-        e.unpersist()
-        nodes.unpersist()
-        raise ValueError("trustrank: no seed node appears in the graph")
-    teleport = F.when(
-        F.col("_seed"), F.lit(1.0 / n_seeds)
-    ).otherwise(F.lit(0.0))
-    out_deg = e.groupBy(F.col("_s").alias("node")).agg(
-        F.count("*").alias("_deg")
-    )
-    with_deg = nodes.join(out_deg, on="node", how="left").persist()
-    trust = _power_iteration(
-        e,
-        with_deg,
-        with_deg.select("node", "_seed", "_deg", teleport.alias("trust")),
-        "trust",
-        F.col("trust") / F.col("_deg"),
-        lambda recv, dm: F.lit(1.0 - damping) * teleport
-        + F.lit(damping) * (recv + dm * teleport),
-        iterations,
-    )
-    e.unpersist()
-    nodes.unpersist()
-    with_deg.unpersist()
-    return trust.select("node", "trust")
+    with _ranking_graph(edges, src, dst, seeds=s) as (e, with_deg):
+        n_seeds = with_deg.where(F.col("_seed")).count()
+        if n_seeds == 0:
+            raise ValueError("trustrank: no seed node appears in the graph")
+        teleport = F.when(
+            F.col("_seed"), F.lit(1.0 / n_seeds)
+        ).otherwise(F.lit(0.0))
+        trust = _power_iteration(
+            e,
+            with_deg,
+            with_deg.select(
+                "node", "_seed", "_deg", teleport.alias("trust")
+            ),
+            "trust",
+            F.col("trust") / F.col("_deg"),
+            lambda recv, dm: F.lit(1.0 - damping) * teleport
+            + F.lit(damping) * (recv + dm * teleport),
+            iterations,
+        )
+        return trust.select("node", "trust")
 
 
 def trustrank_sql(
@@ -1563,26 +1571,6 @@ reach(node, landmark, dist) AS (
 SELECT node, landmark, CAST(MIN(dist) AS INTEGER) AS dist
 FROM reach GROUP BY node, landmark
 """
-
-
-def harmonic_centrality(
-    distances: DataFrame,
-    n_landmarks: Optional[int] = None,
-) -> DataFrame:
-    """Harmonic-centrality estimate from a ``landmark_distances`` frame:
-    ``H(v) = Σ_landmarks 1/dist(l, v)`` (dist 0 contributes nothing, per
-    the standard convention), normalized by the landmark count when
-    given (the Boldi/Vigna estimator: sampled landmarks stand in for
-    all nodes). One map-side-combined groupBy over the pair frame."""
-    inv = F.when(F.col("dist") > 0, 1.0 / F.col("dist")).otherwise(F.lit(0.0))
-    agg = distances.groupBy("node").agg(F.sum(inv).alias("harmonic"))
-    if n_landmarks:
-        agg = agg.select(
-            "node", (F.col("harmonic") / F.lit(float(n_landmarks))).alias(
-                "harmonic"
-            )
-        )
-    return agg
 
 
 def strongly_connected_components(

@@ -19,9 +19,9 @@ Design:
                     deterministic mention embedding is a hashed
                     bag-of-character-trigrams projection (no external
                     model; pinned + reproducible).
-  mention_triples   mentions → CASE/UCO triples: per (record, class) an
-                    ObservableObject node typed by the linked class plus an
-                    ObservableRelationship("references") from the page
+  mention_triple_rows  one mention → CASE/UCO triples: per (record, class)
+                    an ObservableObject node typed by the linked class plus
+                    an ObservableRelationship("references") from the page
                     object — identity minted with the same uuid5 chain
                     (kb:<slug>-uuid5(NS_SLOT, record_uuid:mention:<slug>)).
 """
@@ -366,8 +366,9 @@ def mention_triple_rows(
     """One mention → its 7 triples (subj, pred, obj, obj_is_iri,
     obj_datatype, record_uuid): a typed entity node plus an
     ObservableRelationship('references') from the page's primary URL node.
-    Pure function shared by mention_triples and the fused pipeline kernel
-    so both paths mint byte-identical triples."""
+    Pure function: the fused pipeline kernel and its staged test
+    reference both mint through it, so they emit byte-identical
+    triples."""
     slug = slugify(cls)
     ent_uuid = slot_uuid_for(record_uuid, f"mention:{slug}")
     ent_id = f"kb:{slug}-{ent_uuid}"
@@ -384,31 +385,3 @@ def mention_triple_rows(
         (rel_id, "uco-core:kindOfRelationship", "references", False, None, record_uuid),
         (rel_id, "drafting:mentionCount", str(int(n_mentions)), False, "xsd:integer", record_uuid),
     ]
-
-
-def mention_triples(mentions: DataFrame) -> DataFrame:
-    """Linked mentions → triples: a typed entity node per (record, class)
-    and an ObservableRelationship from the page record's primary node.
-    Same uuid5 identity chain as the planner; narrow mapInPandas stage."""
-    out_schema = (
-        "subj string, pred string, obj string, obj_is_iri boolean, "
-        "obj_datatype string, record_uuid string"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for r in pdf.itertuples(index=False):
-                if r.record_uuid is None:
-                    continue
-                rows.extend(
-                    mention_triple_rows(
-                        r.record_uuid, r.surface, r.entity_class, r.n_mentions
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "record_uuid"],
-            )
-
-    return mentions.mapInPandas(kernel, schema=out_schema)

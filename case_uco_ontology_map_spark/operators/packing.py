@@ -84,15 +84,6 @@ def pack_sequences(
     )
 
 
-def pack_stats(packed: DataFrame, token_col: str = "n_tokens") -> DataFrame:
-    """Packing-efficiency census: per (bucket, pack_id) token fill — the
-    padding-waste signal (mean fill / max_tokens is the utilization)."""
-    return packed.groupBy("bucket", "pack_id").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(token_col).cast("long").alias("pack_tokens"),
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     max_tokens: int,

@@ -229,43 +229,6 @@ def nquads_lines(
     )
 
 
-def write_ntriples(
-    triples: DataFrame,
-    path: str,
-    shards: Optional[int] = None,
-    compression: Optional[str] = "gzip",
-    prefixes: Optional[Dict[str, str]] = None,
-) -> str:
-    """Materialize the graph as sharded N-Triples text files — the LOD-
-    dump export format (one independent line per triple, so shards
-    concatenate into one valid dump). ``shards`` controls output file
-    count via one round-robin repartition (size for ~100 MB-1 GB
-    compressed per shard at 100 TB); default gzip since N-Triples text
-    compresses ~10×. Serialization itself is the zero-shuffle
-    ``ntriples_lines`` projection."""
-    lines = ntriples_lines(triples, prefixes=prefixes)
-    if shards is not None:
-        if shards < 1:
-            raise ValueError("shards must be >= 1")
-        lines = lines.repartition(shards)
-    writer = lines.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.text(path)
-    return path
-
-
-def turtle_header(prefixes: Optional[Dict[str, str]] = None) -> str:
-    """The ``@prefix`` preamble matching ``turtle_lines`` — sorted, one
-    declaration per line, trailing newline. Driver-side (it is
-    axiom-sized); prepend to the concatenated blocks for a complete
-    Turtle document."""
-    pfx = dict(prefixes or NT_PREFIXES)
-    return "".join(
-        f"@prefix {k}: <{v}> .\n" for k, v in sorted(pfx.items())
-    )
-
-
 def turtle_lines(
     triples: DataFrame,
     prefixes: Optional[Dict[str, str]] = None,
@@ -297,8 +260,8 @@ def turtle_lines(
     out-degree), statistics-free, nothing leaves the JVM. Unlike
     N-Triples the block depends on ALL of a subject's rows, so the one
     subject-keyed shuffle is the format's own price; shards remain
-    cat-able (each block is self-contained under the shared
-    ``turtle_header``)."""
+    cat-able (each block is self-contained under the shared ``@prefix``
+    preamble of the declared prefixes)."""
     pfx = dict(prefixes or NT_PREFIXES)
     pairs = []
     for k, v in sorted(pfx.items()):
@@ -439,7 +402,7 @@ def read_turtle(
     (blank nodes, collections, multi-line strings, ``@base``, inline
     ``@prefix``) is out of scope — this is the dump-reader for our own
     exports and canonical dumps, not a full Turtle parser. Prefix
-    declarations live in :func:`turtle_header`; CURIEs pass through
+    declarations are not read; CURIEs pass through
     verbatim (the writer never expands them), so a parsed frame
     compares equal to the exported one with no prefix table at all.
 
@@ -553,7 +516,7 @@ def read_ntriples(
     """N-Triples lines → triple frame ``(subj, pred, obj, obj_is_iri,
     obj_datatype)`` — the inverse of ``ntriples_lines``, closing the
     export/import round trip (LOD dumps, other engines' exports, and our
-    own ``write_ntriples`` shards become a triple source). Blank and
+    own ``ntriples_lines`` output become a triple source). Blank and
     ``#`` comment lines are dropped; anything else that fails the line
     grammar raises at action time (a malformed interchange dump should
     never silently lose rows — count ``malformed`` yourself via

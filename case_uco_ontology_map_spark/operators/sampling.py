@@ -198,30 +198,3 @@ def shard_assignment(
     ).withColumn(
         "shard_order", _gate(key, salt + "\x1forder", hash_mode)
     )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    shards: int,
-    salt: str = "shard",
-    hash_mode: str = "xxhash64",
-) -> None:
-    """Materialize ``shard_assignment`` as one parquet directory per
-    shard (``shard=N/``), each dir ONE file sorted by ``shard_order`` —
-    the layout a dataloader streams: pick your shard, read in file
-    order, done; no shuffling at read time.
-
-    Sink shape (the repo-wide sink rule): ``repartition(shards, shard)``
-    BEFORE ``partitionBy`` so each output dir is written by exactly one
-    task — no small-file explosion, and ``sortWithinPartitions`` makes
-    the file order the shard order."""
-    out = shard_assignment(df, key_col, shards, salt, hash_mode)
-    (
-        out.repartition(shards, F.col("shard"))
-        .sortWithinPartitions("shard", "shard_order", key_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )

@@ -410,30 +410,6 @@ def write_ivf_index(
     return path
 
 
-def append_to_ivf_index(
-    new_vectors: DataFrame,
-    centroids: List[List[float]],
-    path: str,
-    vec_col: str = "embedding",
-    files_per_cell: int = 1,
-) -> str:
-    """Incremental IVF maintenance: assign ONLY the delta batch to the
-    existing centroids and append its rows into the cell-partitioned
-    index — no retrain, no rewrite of the standing corpus (the daily
-    ingest path at 10^12 scale; retrain is a separate scheduled rebuild
-    when cell-occupancy drift warrants it). Same repartition-before-
-    partitionBy sink rule and assignment kernel as the initial write;
-    dynamic partition overwrite is NOT used — append adds files inside
-    each cell directory, so probes see old + new vectors atomically per
-    file listing."""
-    assigned = _assign_cells_arrow(new_vectors, centroids, vec_col)
-    n_parts = max(len(centroids) * files_per_cell, 1)
-    assigned.repartition(n_parts, "cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(path)
-    return path
-
-
 def _arrow_cell_scores(
     index_scan: DataFrame,
     queries: DataFrame,
@@ -677,15 +653,6 @@ def quantize_embeddings(
         df.withColumn("q_min", qmin)
         .withColumn("q_scale", scale)
         .withColumn(codes_col, codes)
-    )
-
-
-def dequantize_expr(
-    codes: Column, q_min: Column, q_scale: Column
-) -> Column:
-    """Reconstructed double vector: ``min + code * scale`` per dim."""
-    return F.transform(
-        codes, lambda c: q_min + c.cast("double") * q_scale
     )
 
 

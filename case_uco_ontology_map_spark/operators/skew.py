@@ -1,5 +1,5 @@
-"""Explicit skew handling: salted repartition / salted aggregation / salted
-join (north_rule: "salted repartitioning to defuse hot-domain skew").
+"""Explicit skew handling: salted repartition / salted aggregation
+(north_rule: "salted repartitioning to defuse hot-domain skew").
 
 Web corpora are Zipfian in host: one domain can be 10%+ of all pages, so
 any groupBy(host) or join on host melts one reducer. The standard answers,
@@ -10,9 +10,8 @@ as reusable transforms:
   salted_aggregate   two-phase agg: groupBy(key, salt) partial → groupBy(key)
                      final. Turns one hot reducer into S reducers + a tiny
                      second shuffle of S·|keys| rows.
-  salted_broadcast_join  replicate the SMALL side S times (explode over
-                     salt values) and join on (key, salt) — co-locates a
-                     skewed big side without one giant partition.
+  key_skew_report    the measurement half: top-k hottest keys with exact
+                     counts and table share, run before choosing S.
 
 AQE's skewJoin splitter is the backstop (enabled in every session this repo
 creates); these transforms are the explicit, plan-visible version for the
@@ -21,9 +20,9 @@ operators where we KNOW the key is Zipfian (host, entity surface).
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -67,61 +66,6 @@ def salted_aggregate(
     salted = salt_column(df, unique_col, salts)
     partial = salted.groupBy(*key_cols, "salt").agg(*partial_aggs)
     return partial.groupBy(*key_cols).agg(*final_aggs)
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    unique_col: str,
-    salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a skew-keyed big side against a small dimension: salt the big
-    side rows, explode the small side across all salts, equi-join on
-    (key, salt). The small side grows ×S (still broadcastable); the big
-    side's hot key spreads across S partitions."""
-    big_salted = salt_column(big, unique_col, salts)
-    small_exploded = small.withColumn(
-        "salt", F.explode(F.array(*[F.lit(i) for i in range(salts)]))
-    )
-    return big_salted.join(
-        F.broadcast(small_exploded), on=[key, "salt"], how=how
-    ).drop("salt")
-
-
-def host_distribution(
-    df: DataFrame,
-    host_col: str = "host",
-    unique_col: Optional[str] = None,
-    top: int = 20,
-) -> DataFrame:
-    """Diagnostic: per-host page counts + share — the skew report a 100 TB
-    operator checks before choosing S. Itself salted (the point).
-
-    ``unique_col`` is the per-row-unique column the salt derives from; it
-    must NOT be the hot key itself (salt = f(key) sends every hot-key row
-    to the same salted reducer — zero skew relief). Defaults to the first
-    column that isn't ``host_col``; raises if asked to salt by the key."""
-    if unique_col is None:
-        candidates = [c for c in df.columns if c != host_col]
-        if not candidates:
-            raise ValueError("no non-key column available to derive the salt")
-        unique_col = candidates[0]
-    if unique_col == host_col:
-        raise ValueError(
-            f"salting by the aggregation key {host_col!r} itself defeats "
-            "skew relief — pass a per-row-unique column"
-        )
-    total = df.count()
-    counts = salted_aggregate(
-        df, [host_col], {"pages": ("count", "*")}, unique_col=unique_col
-    )
-    return (
-        counts.withColumn("share", F.round(F.col("pages") / F.lit(total), 6))
-        .orderBy(F.desc("pages"))
-        .limit(top)
-    )
 
 
 def key_skew_report(

@@ -1,7 +1,7 @@
-"""Exact-substring span deduplication — remove duplicated token spans from
-training text (Lee et al., "Deduplicating Training Data Makes Language
-Models Better", ACL'22: any ≥W-token sequence occurring ≥2 times in the
-corpus is cut). The reference engine has no counterpart; this is part of
+"""Exact-substring span deduplication — find the duplicated token spans a
+curation pass cuts from training text (Lee et al., "Deduplicating
+Training Data Makes Language Models Better", ACL'22: any ≥W-token
+sequence occurring ≥2 times in the corpus is cut). The reference engine has no counterpart; this is part of
 the large-scale training-data operator family, alongside the doc-level
 MinHash/SimHash near-dup passes in operators/dedup.py.
 
@@ -111,38 +111,3 @@ def duplicated_spans(
         .select(F.col(id_col), "span_start", "span_end")
     )
     return spans
-
-
-def remove_duplicated_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cut the spans out of each doc's text, keeping the surviving tokens
-    whitespace-joined (tokenization is lossy on runs of whitespace — the
-    standard trade in token-level exact-substring dedup). Docs without
-    spans pass through with the same normalization applied (so output text
-    is uniformly token-joined, not a mix of raw and rebuilt)."""
-    from .textstats import tokens_col
-
-    sp = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_sps")
-    )
-    joined = df.join(sp, id_col, "left")
-    toks = tokens_col(F.col(text_col))
-    sps = F.coalesce(
-        F.col("_sps"),
-        F.array().cast("array<struct<span_start:long,span_end:long>>"),
-    )
-    kept = F.filter(
-        toks,
-        lambda t, i: ~F.exists(
-            sps,
-            lambda s: (i >= s["span_start"]) & (i < s["span_end"]),
-        ),
-    )
-    return joined.select(
-        *[c for c in df.columns if c != text_col],
-        F.concat_ws(" ", kept).alias(text_col),
-    )

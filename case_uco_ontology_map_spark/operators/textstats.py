@@ -716,8 +716,8 @@ def domain_quality_prior(
 
     Scale shape: per-doc counts fold in-row (whole-stage codegen), then
     ONE map-side-combined groupBy on domain — the output is 10^5–10^7
-    rows at web scale, broadcastable back over the corpus by
-    ``apply_domain_prior``."""
+    rows at web scale, small enough to broadcast back over the corpus
+    as a semi-join on the passing domains."""
     from case_uco_ontology_map_spark.functions.urls import (
         host_registered_domain,
         url_host,
@@ -761,33 +761,6 @@ def domain_quality_prior(
                 )
             ).alias("prior_pass"),
         )
-    )
-
-
-def apply_domain_prior(
-    docs: DataFrame,
-    priors: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
-    """Keep only docs whose registered domain passes the prior gate.
-    The prior frame is the small side by definition (domains ≪ pages)
-    and rides a BROADCAST semi-join — no page ever shuffles."""
-    from case_uco_ontology_map_spark.functions.urls import (
-        host_registered_domain,
-        url_host,
-    )
-
-    passing = priors.where(F.col("prior_pass")).select("domain")
-    keyed = docs.withColumn(
-        "_domain", host_registered_domain(url_host(F.col(url_col)))
-    )
-    return (
-        keyed.join(
-            F.broadcast(passing),
-            on=keyed["_domain"] == passing["domain"],
-            how="left_semi",
-        )
-        .drop("_domain")
     )
 
 

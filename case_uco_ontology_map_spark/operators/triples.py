@@ -1323,7 +1323,7 @@ def property_graph_nodes(
     ROW per node with its labels and scalar properties rather than a
     triple soup: ``types`` is the sorted array of ``rdf:type`` objects,
     ``props`` the sorted array of ``pred=value`` strings for LITERAL
-    objects (IRI objects are edges — see ``property_graph_edges``).
+    objects (IRI objects are the edges).
     Sorted arrays (not maps) keep the projection deterministic and
     hash-comparable across engines; multi-valued predicates simply
     contribute multiple entries.
@@ -1360,26 +1360,6 @@ SELECT subj AS id,
          [])) AS props
 FROM {table} GROUP BY subj
 """
-
-
-def property_graph_edges(
-    triples: DataFrame,
-    type_pred: str = "rdf:type",
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-    obj_is_iri_col: str = "obj_is_iri",
-) -> DataFrame:
-    """RDF → property-graph edge table ``(src, rel, dst)``: IRI-object,
-    non-type triples. A pure zero-shuffle filter projection — feeds
-    ``graphstats.pagerank``/``label_propagation``/... directly."""
-    return triples.filter(
-        F.col(obj_is_iri_col) & (F.col(pred_col) != type_pred)
-    ).select(
-        F.col(subj_col).alias("src"),
-        F.col(pred_col).alias("rel"),
-        F.col(obj_col).alias("dst"),
-    )
 
 
 def kg_as_of(

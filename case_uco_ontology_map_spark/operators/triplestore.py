@@ -45,7 +45,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .barrier import materialize, release
 from .sampling import hash_bucket
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype"]
@@ -169,87 +168,3 @@ def scan_pattern(
         )
     return out
 
-
-def compact_triple_store(
-    spark: SparkSession,
-    path: str,
-    max_files_per_leaf: int = 1,
-) -> dict:
-    """Nightly maintenance for the append path: every ``mode='append'``
-    day adds one file per touched leaf, and small-file creep is the
-    classic way a parquet store degrades (each file costs a task +
-    footer read at scan time). This pass rewrites ONLY the leaves that
-    exceed ``max_files_per_leaf``, using dynamic partition overwrite so
-    untouched leaves keep their files byte-identical — at 100 TB you
-    compact the handful of hot partitions a crawl day touched, never
-    the whole store.
-
-    Leaf discovery is driver-side ``os.walk`` — the store has
-    |predicates| × |buckets| leaves (vocabulary-bounded × a small
-    constant), NOT data-scale many, so the listing is cheap by
-    construction. Returns ``{"compacted_leaves": n, "files_before": a,
-    "files_after": b}``.
-
-    The rewrite reads just the affected leaves (partition-pruned scan
-    via an isin filter on the leaf keys), coalesces to one file per
-    leaf via the house repartition-before-partitionBy rule, and writes
-    with ``partitionOverwriteMode=dynamic`` so ONLY partitions present
-    in the rewrite replace their contents."""
-    import os
-
-    before: dict = {}
-    for root, _dirs, files in os.walk(path):
-        n = sum(1 for f in files if f.endswith(".parquet"))
-        if not n:
-            continue
-        rel = os.path.relpath(root, path)
-        parts = dict(
-            p.split("=", 1) for p in rel.split(os.sep) if "=" in p
-        )
-        if "pred" in parts and "sbkt" in parts:
-            # partition dir names are URL-escaped by the writer
-            from urllib.parse import unquote
-
-            key = (unquote(parts["pred"]), int(parts["sbkt"]))
-            before[key] = before.get(key, 0) + n
-    todo = [k for k, n in before.items() if n > max_files_per_leaf]
-    files_before = sum(before.values())
-    if not todo:
-        return {
-            "compacted_leaves": 0,
-            "files_before": files_before,
-            "files_after": files_before,
-        }
-    store = spark.read.parquet(path)
-    key = F.concat_ws("\x1f", F.col("pred"), F.col("sbkt").cast("string"))
-    keys = [f"{p}\x1f{b}" for p, b in todo]
-    # materialize BEFORE writing: Spark refuses to overwrite a path its
-    # plan still reads, and the rewrite must not observe its own output
-    affected, _ = materialize(store.filter(key.isin(keys)))
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            affected.repartition(F.col("pred"), F.col("sbkt"))
-            .write.mode("overwrite")
-            .partitionBy("pred", "sbkt")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        release(affected)
-    files_after = sum(
-        1
-        for root, _dirs, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    return {
-        "compacted_leaves": len(todo),
-        "files_before": files_before,
-        "files_after": files_after,
-    }

@@ -1,1 +1,1 @@
-"""Sources: synthetic web corpus (input_hint shape) and table layer."""
+"""Sources: synthetic web corpus (input_hint shape), payload and WARC readers."""

@@ -8,10 +8,8 @@ Reference semantics (S1/S4, SURVEY.md §2.1):
   * record fan-out flattens shared metadata into each record
     (/root/reference/agents/uuid_planner.py:30-66 — refmap.extract_records)
 
-Spark re-expression: payload *files* at scale go through spark.read.json /
-spark.read.csv (distributed, schema-on-read, pushdown-friendly); small
-in-memory payloads replay the exact reference sniffing via refmap and land
-in a createDataFrame. Both paths produce the same records-DataFrame shape
+Spark re-expression: in-memory payloads replay the exact reference
+sniffing via refmap and land in a createDataFrame of the records shape
 consumed by operators.triples.emit_triples.
 """
 
@@ -94,22 +92,3 @@ def payload_to_records_df(
     rows = [{k: v for k, v in r.items() if k not in shared} for r in records]
     return spark.createDataFrame(rows), shared
 
-
-def read_json_records(
-    spark: SparkSession, path: str, records_field: str = "records"
-) -> DataFrame:
-    """Distributed path for large JSON payload files: one payload object per
-    line/file → explode the records array with shared metadata columns
-    broadcast onto each row (S2 fan-out as select+explode — pure JVM)."""
-    from pyspark.sql import functions as F
-
-    raw = spark.read.json(path, multiLine=True)
-    shared_cols = [c for c in raw.columns if c not in (records_field, "record")]
-    if records_field in raw.columns:
-        exploded = raw.select(
-            *shared_cols, F.explode(records_field).alias("record")
-        )
-        return exploded.select(*shared_cols, "record.*")
-    if "record" in raw.columns:
-        return raw.select(*shared_cols, "record.*")
-    return raw

@@ -22,10 +22,11 @@ ONE TASK PER FILE:
     (same strict-raise philosophy as the N-Triples importer,
     operators/render.py) unless ``strict=False`` skips them.
 
-``warc_to_documents`` then strips the HTTP envelope from response
-records and emits the ``(url, html)`` frame the existing byte-exact
-extraction pipeline (refmap/extract.py, plans/pipeline.py) consumes —
-WARC in, triples out, with zero changes to the downstream operators.
+``read_warc_documents`` fuses that scan with the HTTP-envelope strip of
+response records and emits the ``(url, html)`` frame the existing
+byte-exact extraction pipeline (refmap/extract.py, plans/pipeline.py)
+consumes — WARC in, triples out, with zero changes to the downstream
+operators.
 """
 
 from __future__ import annotations
@@ -82,21 +83,6 @@ def warc_record_bytes(
     if url is not None:
         headers.insert(3, b"WARC-Target-URI: " + url.encode())
     return b"\r\n".join(headers) + b"\r\n\r\n" + payload + b"\r\n\r\n"
-
-
-def http_response_bytes(
-    body: bytes,
-    status: int = 200,
-    content_type: str = "text/html; charset=utf-8",
-) -> bytes:
-    """An HTTP/1.1 response envelope around ``body`` — what a crawl's
-    ``response`` record payload looks like on the wire."""
-    head = (
-        f"HTTP/1.1 {status} OK\r\n"
-        f"Content-Type: {content_type}\r\n"
-        f"Content-Length: {len(body)}\r\n\r\n"
-    ).encode()
-    return head + body
 
 
 def _parse_warc_bytes(
@@ -364,71 +350,6 @@ def write_warc(warc_df: DataFrame, out_dir: str) -> int:
     )
 
 
-def documents_to_wet(
-    docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    ts_col: Optional[str] = None,
-) -> DataFrame:
-    """WET export — the extracted-text sidecar format crawls ship next
-    to their WARCs (Common Crawl's ``.warc.wet.gz``): one ``conversion``
-    record per document, payload = the bare UTF-8 text, no HTTP
-    envelope. Same record-frame schema as ``documents_to_warc`` so
-    ``write_warc`` emits it unchanged; pure JVM projection."""
-    date = (
-        F.col(ts_col).cast("string")
-        if ts_col
-        else F.lit("2026-01-01T00:00:00Z")
-    )
-    return docs.select(
-        F.lit("conversion").alias("warc_type"),
-        F.concat(F.lit("urn:md5:"), F.md5(F.col(url_col))).alias(
-            "record_id"
-        ),
-        F.col(url_col).alias("url"),
-        date.alias("warc_date"),
-        F.lit("text/plain").alias("content_type"),
-        F.col(text_col).cast("binary").alias("payload"),
-    )
-
-
-def wet_to_documents(warc_df: DataFrame) -> DataFrame:
-    """``conversion`` records → ``(url, fetched_at, text)``. Unlike the
-    WARC response path there is no HTTP envelope to strip, so the
-    payload decodes to text ENTIRELY JVM-side (``decode``) — reading a
-    WET sidecar skips the second Python crossing the response path
-    needs; non-conversion records are filtered before any work."""
-    return warc_df.where(
-        (F.col("warc_type") == "conversion") & F.col("url").isNotNull()
-    ).select(
-        "url",
-        F.col("warc_date").alias("fetched_at"),
-        F.decode(F.col("payload"), "UTF-8").alias("text"),
-    )
-
-
-def read_warc_stream(
-    spark: SparkSession, path: str, strict: bool = True
-) -> DataFrame:
-    """Streaming twin of ``read_warc`` for continuous crawl ingestion:
-    newly-landed archive files under ``path`` parse incrementally (the
-    file-source checkpoint tracks which archives were consumed, so a
-    restart never re-parses or skips a file). Same per-file-task shape
-    and record schema; compose with ``warc_to_documents`` and the
-    existing ``foreachBatch`` triple sink (streaming/ingest.py) for
-    crawl-to-KG as a continuous job."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_parse_files_factory(strict), _WARC_SCHEMA)
-
-
 def _parse_files_factory(strict: bool):
     def parse(batches) -> Iterator["object"]:
         import io
@@ -497,10 +418,11 @@ def read_warc_documents(
     """Fused crawl→documents scan: parse + response filter + HTTP strip
     + text decode in ONE Python crossing, yielding bounded chunks.
 
-    ``read_warc(...)`` then ``warc_to_documents(...)`` ships every
-    payload through Arrow twice (Python→JVM→Python) — measured as the
-    dominant cost of the ingest stage at the 640k-doc tier (the parse
-    kernel itself is flat ~24 µs/record): the tier-2 slope read 1.81
+    A two-stage plan (``read_warc``, then a second ``mapInPandas`` that
+    strips the envelope) ships every payload through Arrow twice
+    (Python→JVM→Python) — measured as the dominant cost of the ingest
+    stage at the 640k-doc tier (the parse kernel itself is flat
+    ~24 µs/record): the tier-2 slope read 1.81
     with the two-crossing plan and the working set doubled through the
     JVM as binary rows. This fused reader never materializes payload
     bytes outside the task, transfers only the final text columns, and
@@ -651,42 +573,6 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 8) -> DataFrame:
         )
     )
     return out
-
-
-def warc_to_documents(warc_df: DataFrame) -> DataFrame:
-    """``response`` records → the ``(url, html)`` frame the extraction
-    pipeline consumes: HTTP envelope stripped, body decoded UTF-8 with
-    replacement (the same decode rule as refmap/extract.py).
-
-    The WARC-Type filter runs BEFORE the Python crossing, so request /
-    metadata / warcinfo records never pay the Arrow transfer.
-    """
-    responses = warc_df.where(
-        (F.col("warc_type") == "response") & F.col("url").isNotNull()
-    ).select("url", "warc_date", "payload")
-
-    def strip(batches) -> Iterator["object"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for url, date, payload in zip(
-                pdf["url"], pdf["warc_date"], pdf["payload"]
-            ):
-                status, ctype, body = split_http_payload(bytes(payload))
-                out.append((
-                    url,
-                    date,
-                    status,
-                    ctype,
-                    body.decode("utf-8", errors="replace"),
-                ))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in _DOC_SCHEMA.fields]
-                )
-
-    return responses.mapInPandas(strip, schema=_DOC_SCHEMA)
 
 
 def _json_escape(col: "F.Column") -> "F.Column":

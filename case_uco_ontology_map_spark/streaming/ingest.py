@@ -1,137 +1,16 @@
-"""Structured Streaming ingest: a stream of pages → triples, same kernel.
+"""Time-window and session aggregations over event tables.
 
-The reference streams per-node state snapshots over SSE (ST3,
-/root/reference/services.py:165-245); the batch model + exact resume is its
-real incremental semantics. At web scale the natural streaming surface is
-"new crawl partitions arrive continuously": readStream on the corpus
-directory → the SAME fused triple kernel (mapInPandas works unchanged on
-streaming DataFrames because it is stateless per-row) → foreachBatch sink
-appending triples + manifest, giving exactly-once via the checkpoint dir.
-
-Windowed crawl statistics (watermark + window aggregation) cover the
-time-based operator surface Spark offers and the reference lacks (ST5).
+The same ``F.window`` / ``F.session_window`` expressions run unchanged in
+batch and Structured Streaming (pass ``watermark`` on a stream to bound
+state); the contract rows run them in batch (ST5).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-CORPUS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
-
-
-def read_corpus_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    """File-source stream over corpus parquet partitions (new files = new
-    crawl batches). Bounded per-trigger file count keeps micro-batches
-    sized for the cluster."""
-    return (
-        spark.readStream.schema(CORPUS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def stream_triples(corpus_stream: DataFrame, lang: Optional[str] = None) -> DataFrame:
-    """Streaming triples: the batch kernel applied unchanged — stateless
-    mapInPandas is streaming-safe. No watermark needed (no state)."""
-    from ..plans.pipeline import fused_page_triples
-
-    return fused_page_triples(corpus_stream, lang=lang)
-
-
-def start_triple_sink(
-    triples_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    query_name: str = "kg-triples",
-):
-    """foreachBatch sink: write triples parquet + the resume manifest per
-    micro-batch, EXACTLY-ONCE.
-
-    The streaming checkpoint makes foreachBatch at-least-once: a batch
-    whose sink ran but whose offset commit was lost is REPLAYED with the
-    same epoch_id after restart. Idempotence therefore lives in the sink:
-    each epoch writes to its own ``epoch=<id>`` subdirectory with
-    mode("overwrite") — a replayed epoch overwrites its own partial output
-    instead of appending duplicates. Readers glob the parent directory;
-    basePath keeps partition discovery uniform."""
-
-    sink = epoch_sink(out_dir)
-    return (
-        triples_stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
-    )
-
-
-def epoch_sink(out_dir: str):
-    """The idempotent per-epoch writer used by start_triple_sink — exposed
-    so tests can replay an epoch directly and assert no duplication."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn(
-                "bucket", F.pmod(F.xxhash64("record_uuid"), F.lit(64))
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(out_dir, "triples", f"epoch={epoch_id}"))
-        )
-        (
-            batch_df.select("fingerprint", "record_uuid")
-            .dropDuplicates(["fingerprint"])
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "manifest", f"epoch={epoch_id}"))
-        )
-
-    return sink
-
-
-def crawl_window_stats(
-    corpus_stream: DataFrame,
-    window: str = "1 hour",
-    slide: Optional[str] = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Windowed crawl statistics with late-data handling: docs/bytes per
-    (window, lang). Watermark bounds state; append mode emits closed
-    windows only."""
-    w = (
-        F.window("warc_ts", window, slide)
-        if slide
-        else F.window("warc_ts", window)
-    )
-    return (
-        corpus_stream.withWatermark("warc_ts", watermark)
-        .groupBy(w.alias("win"), "lang")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(F.length("text")).alias("chars"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "lang",
-            "docs",
-            "chars",
-        )
-    )
 
 
 def windowed_stats(
@@ -143,8 +22,8 @@ def windowed_stats(
     slide: Optional[str] = None,
     watermark: Optional[str] = None,
 ) -> DataFrame:
-    """Generic tumbling/sliding time-window aggregation — the batch twin of
-    crawl_window_stats for any event table. The same `F.window` expression
+    """Generic tumbling/sliding time-window aggregation for any event
+    table. The same `F.window` expression
     runs unchanged in batch and streaming (pass `watermark` on a stream to
     bound state); a tumbling window is ONE shuffle on (window, *keys) with
     map-side partial aggregation, so at 100 TB the cost is the agg shuffle

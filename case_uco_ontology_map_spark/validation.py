@@ -1,4 +1,4 @@
-"""SHACL-lite validation + provenance checking over the triples table.
+"""SHACL-lite validation over the triples table.
 
 The reference validates in two layers (SURVEY.md §2.9):
   L1: programmatic property-placement check + external SHACL conformance
@@ -11,8 +11,7 @@ Spark re-expression: each rule is one DataFrame predicate/aggregate over
 the triples table, driven by the broadcast ontology dictionary. All checks
 return violation DataFrames — empty == clean (validator.py:88 is_clean).
 Shuffle story: placement/datatype checks are narrow; maxCount is one
-groupBy(subj, pred); provenance is a hash-equi left-anti join on
-(record_uuid, value).
+groupBy(subj, pred).
 """
 
 from __future__ import annotations
@@ -334,40 +333,6 @@ def check_no_nulls(triples: DataFrame) -> DataFrame:
     """P1 no-null contract: no null/empty objects (config.py:345-349)."""
     return triples.filter(F.col("obj").isNull() | (F.col("obj") == "")).select(
         "subj", "pred"
-    )
-
-
-def check_provenance(
-    triples: DataFrame, records: DataFrame, record_cols, shared: Optional[Dict] = None
-) -> DataFrame:
-    """L2 hallucination ≙ provenance: every literal object must equal some
-    source field value of its record (hallucination_checker semantics made
-    exact). Anti-join triples ⋈ exploded record values on
-    (record_uuid, value). Derived fields the pipeline itself computes are
-    part of the record, so a clean pipeline yields zero rows."""
-    from .operators.triples import plan_manifest
-
-    shared_vals = [str(v) for v in (shared or {}).values()]
-    vals = plan_manifest(
-        records, record_cols=list(record_cols), shared=shared,
-        passthrough_cols=tuple(record_cols),
-    )
-    exploded = vals.select(
-        "record_uuid",
-        F.explode(
-            F.array(*[F.col(c).cast("string") for c in record_cols])
-        ).alias("value"),
-    )
-    lits = triples.filter(~F.col("obj_is_iri")).select(
-        "subj", "pred", "obj", "record_uuid"
-    )
-    if shared_vals:
-        lits = lits.filter(~F.col("obj").isin(*shared_vals))
-    return lits.join(
-        exploded,
-        (lits["record_uuid"] == exploded["record_uuid"])
-        & (lits["obj"] == exploded["value"]),
-        "left_anti",
     )
 
 

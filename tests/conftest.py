@@ -33,55 +33,42 @@ def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
 
 
-# Golden MFT payload — loaded verbatim from the reference's data fixture
-# (/root/reference/test.json:1-35); the FIXTURES.md §3b golden fingerprints/
-# IRIs were replayed from exactly these record values.
-_MFT_FIXTURE_PATH = "/root/reference/test.json"
-
-
-def _load_json(path, fallback):
-    try:
-        with open(path) as fh:
-            return json.load(fh)
-    except OSError:
-        return fallback
-
-
-MFT_PAYLOAD = _load_json(
-    _MFT_FIXTURE_PATH,
-    {
-        "artifact_type": "MFT Records",
-        "description": "Master File Table records containing filesystem "
-        "metadata and file system structure information",
-        "source": "NTFS filesystem analysis",
-        "records": [
-            {
-                "EntryNumber": 42,
-                "SequenceNumber": 3,
-                "ParentEntryNumber": 5,
-                "FullPath": "\\Windows\\Prefetch\\MALICIOUS.EXE-12345678.pf",
-                "InUse": True,
-                "SI_Created": "2025-09-17T10:30:00Z",
-                "SI_Modified": "2025-09-17T10:35:15Z",
-                "SI_Accessed": "2025-09-17T10:35:15Z",
-                "FN_Created": "2025-09-17T10:30:00Z",
-                "FN_Modified": "2025-09-17T10:35:15Z",
-            },
-            {
-                "EntryNumber": 314,
-                "SequenceNumber": 1,
-                "ParentEntryNumber": 200,
-                "FullPath": "\\Users\\Alice\\Documents\\report.docx",
-                "InUse": True,
-                "SI_Created": "2024-10-05T09:12:00Z",
-                "SI_Modified": "2025-01-20T16:33:11Z",
-                "SI_Accessed": "2025-01-22T07:02:45Z",
-                "FN_Created": "2024-10-05T09:12:00Z",
-                "FN_Modified": "2025-01-20T16:33:11Z",
-            },
-        ],
-    },
-)
+# Golden MFT payload — a verbatim copy of the reference's data fixture
+# (its test.json); the FIXTURES.md §3b golden fingerprints/IRIs were
+# replayed from exactly these record values. Inline, so the goldens never
+# depend on files outside the repo.
+MFT_PAYLOAD = {
+    "artifact_type": "MFT Records",
+    "description": "Master File Table records containing filesystem "
+    "metadata and file system structure information",
+    "source": "NTFS filesystem analysis",
+    "records": [
+        {
+            "EntryNumber": 42,
+            "SequenceNumber": 3,
+            "ParentEntryNumber": 5,
+            "FullPath": "\\Windows\\Prefetch\\MALICIOUS.EXE-12345678.pf",
+            "InUse": True,
+            "SI_Created": "2025-09-17T10:30:00Z",
+            "SI_Modified": "2025-09-17T10:35:15Z",
+            "SI_Accessed": "2025-09-17T10:35:15Z",
+            "FN_Created": "2025-09-17T10:30:00Z",
+            "FN_Modified": "2025-09-17T10:35:15Z",
+        },
+        {
+            "EntryNumber": 314,
+            "SequenceNumber": 1,
+            "ParentEntryNumber": 200,
+            "FullPath": "\\Users\\Alice\\Documents\\report.docx",
+            "InUse": True,
+            "SI_Created": "2024-10-05T09:12:00Z",
+            "SI_Modified": "2025-01-20T16:33:11Z",
+            "SI_Accessed": "2025-01-22T07:02:45Z",
+            "FN_Created": "2024-10-05T09:12:00Z",
+            "FN_Modified": "2025-01-20T16:33:11Z",
+        },
+    ],
+}
 
 MFT_ONTOLOGY_MAP = {
     "artifacts": ["MFT Record"],

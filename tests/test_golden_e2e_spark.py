@@ -309,13 +309,12 @@ def test_turtle_lines_blocks(spark):
     """Canonical Turtle: one block per subject, predicates sorted by
     CURIE (rdf:type rendered as `a`), objects sorted + comma-grouped,
     declared prefixes stay CURIEs, unknown prefixes wrap in <>, ECHAR
-    escapes + datatype tags; header is sorted @prefix lines. DuckDB
-    twin rebuilds the identical blocks."""
+    escapes + datatype tags. DuckDB twin rebuilds the identical
+    blocks."""
     import duckdb
     import pandas as pd
 
     from case_uco_ontology_map_spark.operators.render import (
-        turtle_header,
         turtle_lines,
         turtle_lines_sql,
     )
@@ -352,11 +351,6 @@ def test_turtle_lines_blocks(spark):
         "WITH t AS (SELECT * FROM t_src) " + turtle_lines_sql()
     ).fetchall())
     assert got == want
-    hdr = turtle_header({"kb": "http://example.org/kb/", "a": "http://a/"})
-    assert hdr == (
-        "@prefix a: <http://a/> .\n"
-        "@prefix kb: <http://example.org/kb/> .\n"
-    )
 
 
 def test_read_turtle_roundtrip_and_strictness(spark):
@@ -400,31 +394,3 @@ def test_read_turtle_roundtrip_and_strictness(spark):
         bdf = spark.createDataFrame([(bad,)], "block string")
         with pytest.raises(Exception, match="malformed Turtle"):
             read_turtle(bdf).collect()
-
-
-def test_write_ntriples_roundtrip(spark, tmp_path):
-    """Sharded N-Triples sink: gzip text shards concatenate into the same
-    line set ntriples_lines produces."""
-    from case_uco_ontology_map_spark.operators.render import (
-        ntriples_lines,
-        write_ntriples,
-    )
-
-    rows = [
-        ("kb:a", "rdf:type", "uco-observable:URL", True, None),
-        ("kb:a", "uco-observable:fullValue", "v1", False, None),
-        ("kb:b", "uco-observable:sizeInBytes", "9", False, "xsd:integer"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "subj string, pred string, obj string, obj_is_iri boolean, "
-        "obj_datatype string",
-    )
-    out = str(tmp_path / "dump")
-    write_ntriples(df, out, shards=2)
-    back = {r.value for r in spark.read.text(out).collect()}
-    want = {r.line for r in ntriples_lines(df).collect()}
-    assert back == want and len(back) == 3
-    import glob
-
-    assert len(glob.glob(out + "/part-*.txt.gz")) == 2

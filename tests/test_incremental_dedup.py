@@ -1,13 +1,8 @@
-"""Incremental exact dedup against a persisted corpus hash index."""
-
-import os
-
-from pyspark.sql import functions as F
+"""Incremental exact dedup against a corpus hash index."""
 
 from case_uco_ontology_map_spark.operators.dedup import (
     hash_index,
     incremental_exact_dedup,
-    write_hash_index,
 )
 
 CORPUS = [
@@ -36,27 +31,3 @@ def test_incremental_exact_dedup(spark):
         12: (11, False, False),
         13: (2, True, False),
     }
-
-
-def test_hash_index_roundtrip(spark, tmp_path):
-    corpus = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    path = os.path.join(str(tmp_path), "hash_index")
-    write_hash_index(corpus, path, buckets=8)
-    idx = spark.read.parquet(path)
-    assert set(idx.columns) == {"content_hash", "canonical_id", "bucket"}
-    # dup hash collapsed to min id; bucket derivation is stable
-    rows = idx.collect()
-    assert len(rows) == 2
-    by_canon = {r.canonical_id for r in rows}
-    assert by_canon == {1, 2}
-    for r in rows:
-        got = spark.sql(
-            f"SELECT pmod(xxhash64('{r.content_hash}'), 8)"
-        ).first()[0]
-        assert got == r.bucket
-    # the persisted index drives the same dedup verdicts
-    batch = spark.createDataFrame(BATCH, "doc_id long, text string")
-    out = incremental_exact_dedup(
-        batch, idx.drop("bucket")
-    )
-    assert out.filter(F.col("in_corpus")).count() == 2

@@ -1,10 +1,4 @@
-"""Tests: input normalization (S1/S4) and streaming ingest."""
-
-import json
-import os
-
-import pytest
-from pyspark.sql import functions as F
+"""Tests: input normalization (S1/S4) and time-window aggregations."""
 
 from case_uco_ontology_map_spark.sources import ingest
 
@@ -30,85 +24,6 @@ def test_payload_to_records_df_csv(spark):
     )
     assert df.count() == 2
     assert shared["artifact_type"] == "File Listing"
-
-
-def test_read_json_records_distributed(spark, tmp_path, mft_payload):
-    p = tmp_path / "payload.json"
-    p.write_text(json.dumps(mft_payload))
-    df = ingest.read_json_records(spark, str(p))
-    assert df.count() == 2
-    assert "artifact_type" in df.columns and "EntryNumber" in df.columns
-    # shared metadata broadcast onto each exploded record row
-    assert (
-        df.select("artifact_type").distinct().collect()[0][0]
-        == mft_payload["artifact_type"]
-    )
-
-
-def test_streaming_triples_e2e(spark, sf_dir, tmp_path):
-    """File-source stream → fused kernel → foreachBatch sink: triples +
-    manifest land exactly once; results equal the batch run."""
-    from case_uco_ontology_map_spark.plans.pipeline import fused_page_triples
-    from case_uco_ontology_map_spark.sources.corpus import web_corpus
-    from case_uco_ontology_map_spark.streaming import ingest as si
-
-    corpus_dir = str(tmp_path / "corpus")
-    web_corpus(spark, sf_dir).limit(40).repartition(4).write.parquet(corpus_dir)
-
-    stream = si.read_corpus_stream(spark, corpus_dir, max_files_per_trigger=2)
-    triples_stream = si.stream_triples(stream)
-    out_dir = str(tmp_path / "out")
-    q = si.start_triple_sink(
-        triples_stream, out_dir, str(tmp_path / "ckpt")
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.read.parquet(os.path.join(out_dir, "triples"))
-    batch = fused_page_triples(spark.read.parquet(corpus_dir))
-    got_set = {
-        tuple(r)
-        for r in got.select("subj", "pred", "obj", "record_uuid").collect()
-    }
-    exp_set = {
-        tuple(r)
-        for r in batch.select("subj", "pred", "obj", "record_uuid").collect()
-    }
-    assert got_set == exp_set
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    assert manifest.select("fingerprint").distinct().count() == 40
-
-    # exactly-once under replay: re-running an already-committed epoch
-    # (what the engine does after a partial failure) must not duplicate —
-    # each epoch overwrites its own subdirectory, so two replays leave
-    # exactly one copy of the batch in epoch 0
-    sink = si.epoch_sink(out_dir)
-    sink(batch, 0)
-    sink(batch, 0)
-    again = spark.read.parquet(os.path.join(out_dir, "triples"))
-    assert again.filter("epoch = 0").count() == batch.count()
-
-
-def test_crawl_window_stats(spark, sf_dir, tmp_path):
-    from case_uco_ontology_map_spark.sources.corpus import web_corpus
-    from case_uco_ontology_map_spark.streaming import ingest as si
-
-    corpus_dir = str(tmp_path / "c2")
-    web_corpus(spark, sf_dir).limit(100).write.parquet(corpus_dir)
-    stream = si.read_corpus_stream(spark, corpus_dir)
-    stats = si.crawl_window_stats(stream, window="1 hour", watermark="2 hours")
-    q = (
-        stats.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("crawl_stats")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # append mode emits only watermark-closed windows; the aggregation
-    # itself is exercised — schema and runability are the contract here
-    out = spark.sql("SELECT * FROM crawl_stats")
-    assert out.columns == ["window_start", "window_end", "lang", "docs", "chars"]
 
 
 def test_sessionize_gap_boundary(spark):
@@ -161,121 +76,3 @@ def test_windowed_stats_sliding(spark):
         datetime(2024, 1, 1, 0, 30, 0),
     ]
     assert all(r.n_events == 1 for r in out)
-
-
-def test_threshold_alerts_stateful_stream(spark, tmp_path):
-    """applyInPandasWithState custom operator: per-key running sum crosses
-    a threshold EXACTLY ONCE, accumulating across micro-batches — the
-    cross-batch emit-once semantic no built-in streaming agg expresses."""
-    import os
-    import time
-
-    from pyspark.sql import types as T
-
-    from case_uco_ontology_map_spark.streaming.stateful import threshold_alerts
-
-    schema = T.StructType(
-        [T.StructField("k", T.StringType()), T.StructField("value", T.DoubleType())]
-    )
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    # batch 1: a crosses immediately; b accumulates below threshold
-    write_batch("b1", [("a", 60.0), ("b", 30.0), ("c", 1.0)])
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    alerts = threshold_alerts(stream, ("k",), "value", threshold=50.0)
-    q = (
-        alerts.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("alerts")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got1 = {r.k: r for r in spark.sql("SELECT * FROM alerts").collect()}
-        assert set(got1) == {"a"}
-        assert got1["a"].total == 60.0 and got1["a"].n_events == 1
-
-        # batch 2: b crosses on CUMULATIVE state (30+30); a must not refire
-        write_batch("b2", [("b", 30.0), ("a", 100.0)])
-        q.processAllAvailable()
-        got2 = {r.k: r for r in spark.sql("SELECT * FROM alerts").collect()}
-        assert set(got2) == {"a", "b"}
-        assert got2["b"].total == 60.0 and got2["b"].n_events == 2
-    finally:
-        q.stop()
-
-
-def test_streaming_exactly_once_under_injected_crash(spark, sf_dir, tmp_path):
-    """Round-5 failure injection (verdict r4 item #8): kill the query in
-    the DANGEROUS window — after an epoch's sink write is durable but
-    before the streaming checkpoint commits its offsets — restart from
-    the same checkpoint, and prove the final triple set is identical to a
-    clean batch run (no duplicated epoch, no missing epoch).
-
-    Mechanism: foreachBatch is at-least-once; on restart Spark REPLAYS
-    the uncommitted epoch with the same epoch_id, and epoch_sink's
-    per-epoch overwrite makes the replay idempotent. The crashing wrapper
-    runs the real sink first, so the partial output is on disk exactly as
-    a hard crash would leave it."""
-    import pyspark.errors
-
-    from case_uco_ontology_map_spark.plans.pipeline import fused_page_triples
-    from case_uco_ontology_map_spark.sources.corpus import web_corpus
-    from case_uco_ontology_map_spark.streaming import ingest as si
-
-    corpus_dir = str(tmp_path / "corpus-fi")
-    web_corpus(spark, sf_dir).limit(24).repartition(3).write.parquet(
-        corpus_dir
-    )
-    out_dir = str(tmp_path / "out-fi")
-    ckpt = str(tmp_path / "ckpt-fi")
-    inner = si.epoch_sink(out_dir)
-    crashed = {"done": False}
-
-    def crashing_sink(batch_df, epoch_id):
-        inner(batch_df, epoch_id)  # write IS durable...
-        if epoch_id >= 1 and not crashed["done"]:
-            crashed["done"] = True
-            # ...but the offset commit never happens
-            raise RuntimeError("injected crash between write and commit")
-
-    stream = si.read_corpus_stream(spark, corpus_dir, max_files_per_trigger=1)
-    q = (
-        si.stream_triples(stream)
-        .writeStream.outputMode("append")
-        .foreachBatch(crashing_sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    with pytest.raises(pyspark.errors.exceptions.captured.StreamingQueryException):
-        q.awaitTermination()
-    assert crashed["done"], "crash was never injected"
-    # epoch 1's output is on disk, its offset is NOT committed
-    assert os.path.exists(os.path.join(out_dir, "triples", "epoch=1"))
-
-    # restart from the same checkpoint with the NORMAL sink: Spark
-    # replays epoch 1 (same epoch_id), the overwrite dedups it, and the
-    # remaining file lands as epoch 2
-    stream2 = si.read_corpus_stream(spark, corpus_dir, max_files_per_trigger=1)
-    q2 = si.start_triple_sink(si.stream_triples(stream2), out_dir, ckpt)
-    q2.processAllAvailable()
-    q2.stop()
-
-    got = spark.read.parquet(os.path.join(out_dir, "triples"))
-    batch = fused_page_triples(spark.read.parquet(corpus_dir))
-    key_cols = ("subj", "pred", "obj", "record_uuid")
-    got_rows = [tuple(r) for r in got.select(*key_cols).collect()]
-    exp_rows = [tuple(r) for r in batch.select(*key_cols).collect()]
-    # multiset equality: sorted lists catch duplicates a set compare hides
-    assert sorted(got_rows) == sorted(exp_rows)
-    # every record fingerprint exactly once across all epoch manifests
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    assert manifest.count() == manifest.select("fingerprint").distinct().count() == 24

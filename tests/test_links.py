@@ -1,11 +1,7 @@
-"""Hyperlink extraction: resolution subset, regex extraction over
-string AND binary html, and the edge-list aggregation — expectations
-hand-written (no generated SQL)."""
+"""Hyperlink extraction: resolution subset and regex extraction over
+string AND binary html — expectations hand-written (no generated SQL)."""
 
-from case_uco_ontology_map_spark.functions.links import (
-    extract_links,
-    link_graph,
-)
+from case_uco_ontology_map_spark.functions.links import extract_links
 
 _PAGE = (
     '<html><body><p>intro</p>'
@@ -55,23 +51,6 @@ def test_binary_html_and_passthrough_columns(spark):
     rows = extract_links(df).collect()
     assert len(rows) == 4
     assert all(r.extra == 7 and r.src == "http://h.org/p" for r in rows)
-
-
-def test_link_graph_multiplicity(spark):
-    html = (
-        '<a href="/a">one</a><a href="/a">two</a><a href="/b">three</a>'
-    )
-    df = spark.createDataFrame(
-        [("http://h.org/p", html)], "url string, html string"
-    )
-    got = {
-        (r.src, r.dst): (r.n_anchors, r.first_anchor)
-        for r in link_graph(df).collect()
-    }
-    assert got == {
-        ("http://h.org/p", "http://h.org/a"): (2, "one"),
-        ("http://h.org/p", "http://h.org/b"): (1, "three"),
-    }
 
 
 def test_unmatched_shapes_ignored(spark):

@@ -110,8 +110,14 @@ def test_mention_triples(spark):
         [("u1", "ruuid-1", "the file was a file")],
         "url string, record_uuid string, text string",
     )
-    found = M.detect_mentions(docs, record_uuid_col="record_uuid")
-    triples = M.mention_triples(found).collect()
+    found = M.detect_mentions(docs, record_uuid_col="record_uuid").collect()
+    triples = [
+        dict(zip(("subj", "pred", "obj", "obj_is_iri", "obj_datatype"), t))
+        for r in found
+        for t in M.mention_triple_rows(
+            r["record_uuid"], r["surface"], r["entity_class"], r["n_mentions"]
+        )
+    ]
     preds = {r["pred"] for r in triples}
     assert preds == {
         "rdf:type",

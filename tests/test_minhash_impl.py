@@ -83,19 +83,6 @@ def test_minhash_signatures_arrow_matches_expr(docs, hash_mode, num_hashes):
     assert _rows(a) == ref
 
 
-def test_minhash_signatures_exclude_parity(docs):
-    from case_uco_ontology_map_spark.operators.dedup import (
-        common_shingle_hashes,
-        minhash_signatures,
-    )
-
-    ex = common_shingle_hashes(docs, df_fraction=0.05)
-    assert ex  # the reference must exercise the exclusion
-    a = minhash_signatures(docs, exclude=ex)
-    ref = _ref_rows(_doc_shingles(docs), ["doc_id"], _hash_params(64), ex)
-    assert _rows(a) == ref
-
-
 def test_entity_minhash_arrow_matches_expr(spark):
     from case_uco_ontology_map_spark.operators import canonicalize as cz
 

@@ -221,9 +221,12 @@ def _staged_mentions(corpus):
 
 
 def test_fused_mentions_match_operators(spark, sf_dir):
-    """Fused mention-triple emission must equal detect_mentions →
-    mention_triples run over the same records (shared pure helpers)."""
-    from case_uco_ontology_map_spark.operators.mentions import mention_triples
+    """Fused mention-triple emission must equal the staged reference:
+    detect_mentions over the same records, each mention minted through
+    the shared pure helper mention_triple_rows."""
+    from case_uco_ontology_map_spark.operators.mentions import (
+        mention_triple_rows,
+    )
     from case_uco_ontology_map_spark.plans.pipeline import fused_page_triples
 
     corpus = web_corpus(spark, sf_dir).limit(50).cache()
@@ -234,8 +237,14 @@ def test_fused_mentions_match_operators(spark, sf_dir):
         t[:6] for t in fused_set - page_only
     }
 
-    found = _staged_mentions(corpus)
-    staged_mentions = {tuple(r) for r in mention_triples(found).collect()}
+    staged_mentions = {
+        t
+        for r in _staged_mentions(corpus).collect()
+        if r["record_uuid"] is not None
+        for t in mention_triple_rows(
+            r["record_uuid"], r["surface"], r["entity_class"], r["n_mentions"]
+        )
+    }
     assert fused_mention_part == staged_mentions
     assert len(staged_mentions) > 0
     corpus.unpersist()

@@ -1,6 +1,5 @@
-"""Tests: skew salting, stateful streaming dedup, provenance check."""
+"""Tests: skew salting and the key-skew report."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from case_uco_ontology_map_spark.operators import skew
@@ -27,122 +26,12 @@ def test_salted_aggregate_equals_plain(spark):
     assert got["host0.com"][0] == 4334
 
 
-def test_salted_broadcast_join_equals_plain(spark):
-    big = spark.createDataFrame(
-        [("k1", i) for i in range(500)] + [("k2", i) for i in range(10)],
-        "key string, rid long",
-    )
-    small = spark.createDataFrame(
-        [("k1", "dim1"), ("k2", "dim2"), ("k3", "dim3")], "key string, label string"
-    )
-    salted = skew.salted_broadcast_join(big, small, "key", unique_col="rid")
-    plain = big.join(small, "key")
-    assert salted.count() == plain.count() == 510
-    got = {(r["key"], r["rid"], r["label"]) for r in salted.collect()}
-    exp = {(r["key"], r["rid"], r["label"]) for r in plain.collect()}
-    assert got == exp
-
-
 def test_salt_is_deterministic(spark):
     df = spark.createDataFrame([(i,) for i in range(100)], "rid long")
     a = {r["rid"]: r["salt"] for r in skew.salt_column(df, "rid").collect()}
     b = {r["rid"]: r["salt"] for r in skew.salt_column(df, "rid").collect()}
     assert a == b
     assert len(set(a.values())) > 1  # actually spreads
-
-
-def test_host_distribution_salt_key_guard(spark):
-    df = spark.createDataFrame(
-        [("h0.com", i) for i in range(40)] + [("h1.com", i) for i in range(10)],
-        "host string, rid long",
-    )
-    out = {r["host"]: r["pages"] for r in skew.host_distribution(df, "host").collect()}
-    assert out == {"h0.com": 40, "h1.com": 10}
-    # salting by the hot key itself must be rejected
-    with pytest.raises(ValueError, match="defeats"):
-        skew.host_distribution(df, "host", unique_col="host")
-    with pytest.raises(ValueError, match="no non-key"):
-        skew.host_distribution(df.select("host"), "host")
-
-
-def test_stream_dedup_stateful(spark, tmp_path):
-    """applyInPandasWithState dedup: duplicates across micro-batches are
-    dropped; each fingerprint emitted exactly once."""
-    import pandas as pd
-
-    from case_uco_ontology_map_spark.streaming.stateful import stream_dedup_manifest
-
-    src = str(tmp_path / "stream_src")
-    # two files → two micro-batches (maxFilesPerTrigger=1); fp overlap
-    spark.createDataFrame(
-        [(f"fp{i}", f"ru{i}") for i in range(10)],
-        "fingerprint string, record_uuid string",
-    ).coalesce(1).write.parquet(src)
-    spark.createDataFrame(
-        [(f"fp{i}", f"ru{i}") for i in range(5, 15)],
-        "fingerprint string, record_uuid string",
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("fingerprint string, record_uuid string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    deduped = stream_dedup_manifest(stream, buckets=4)
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT fingerprint FROM dedup_out").collect()
-    fps = [r["fingerprint"] for r in out]
-    assert sorted(fps) == sorted({f"fp{i}" for i in range(15)})
-    assert len(fps) == len(set(fps))  # exactly once
-
-
-def test_provenance_check(spark, sf_dir):
-    """L2 provenance: the clean pipeline has zero unexplained literals; an
-    injected fabricated literal is caught."""
-    from case_uco_ontology_map_spark import validation
-    from case_uco_ontology_map_spark.plans.pipeline import (
-        PAGE_SHARED_METADATA,
-        extracted_pages,
-        fused_page_triples,
-        page_records,
-    )
-    from case_uco_ontology_map_spark.sources.corpus import web_corpus
-
-    corpus = web_corpus(spark, sf_dir).limit(30).cache()
-    triples = fused_page_triples(corpus)
-    records = page_records(extracted_pages(corpus)).drop("extracted_text")
-    record_cols = records.columns
-    bad = validation.check_provenance(
-        triples, records, record_cols, shared=PAGE_SHARED_METADATA
-    )
-    assert bad.count() == 0
-
-    # inject a hallucinated literal on a real record
-    some = triples.limit(1).collect()[0]
-    fabricated = spark.createDataFrame(
-        [
-            (
-                some["subj"], "uco-observable:ipAddress", "10.1.2.3",
-                False, None, some["record_uuid"], some["fingerprint"], some["url"],
-            )
-        ],
-        triples.schema,
-    )
-    bad2 = validation.check_provenance(
-        triples.unionByName(fabricated), records, record_cols,
-        shared=PAGE_SHARED_METADATA,
-    )
-    rows = bad2.collect()
-    assert len(rows) == 1 and rows[0]["obj"] == "10.1.2.3"
-    corpus.unpersist()
 
 
 class TestKeySkewReport:

@@ -1,14 +1,11 @@
 """Exact-substring span dedup: planted duplicates, span merging, min_docs
-semantics, text removal, and a DuckDB replay cross-check."""
+semantics, and a DuckDB replay cross-check."""
 
 import duckdb
 import pandas as pd
 import pytest
 
-from case_uco_ontology_map_spark.operators.spandedup import (
-    duplicated_spans,
-    remove_duplicated_spans,
-)
+from case_uco_ontology_map_spark.operators.spandedup import duplicated_spans
 
 # doc 1 and 2 share an 8-token run; doc 3 repeats its own 4-token phrase;
 # doc 4 is clean; doc 5 is shorter than the window
@@ -54,19 +51,6 @@ def test_min_docs_excludes_self_repetition(docs):
     assert not [s for s in out if s[0] == 3]
     # the cross-doc shared run still shows up at width 4
     assert [s for s in out if s[0] == 1]
-
-
-def test_remove_spans(docs, spark):
-    spans = duplicated_spans(docs, width=8, hash_mode="md5_60")
-    cleaned = {
-        r.doc_id: r.text
-        for r in remove_duplicated_spans(docs, spans).collect()
-    }
-    assert cleaned[1] == "alpha start tail x"
-    assert cleaned[2] == "beta end y z"
-    # no-span docs pass through token-joined
-    assert cleaned[4] == DOCS[3][1]
-    assert cleaned[5] == "tiny doc"
 
 
 def test_matches_duckdb_replay(docs):

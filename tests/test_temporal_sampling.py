@@ -297,10 +297,7 @@ def test_pack_sequences_greedy_rule(spark):
     """Greedy next-fit semantics in one bucket: overflow opens a new pack;
     an oversized doc sits alone; positions restart per pack — and the
     assignment is partition-invariant."""
-    from case_uco_ontology_map_spark.operators.packing import (
-        pack_sequences,
-        pack_stats,
-    )
+    from case_uco_ontology_map_spark.operators.packing import pack_sequences
 
     rows = [(i, t) for i, t in enumerate([40, 40, 40, 150, 60, 10])]
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
@@ -314,13 +311,6 @@ def test_pack_sequences_greedy_rule(spark):
     assert got == {
         0: (0, 1), 1: (0, 2), 2: (1, 1), 3: (2, 1), 4: (3, 1), 5: (3, 2)
     }
-
-    stats = {
-        (r.bucket, r.pack_id): (r.n_docs, r.pack_tokens)
-        for r in pack_stats(out).collect()
-    }
-    assert stats[(0, 0)] == (2, 80)
-    assert stats[(0, 2)] == (1, 150)
 
     # partitioning must not change pack membership
     out2 = {
@@ -549,45 +539,6 @@ class TestTrainingShards:
             sizes[s] = sizes.get(s, 0) + 1
         assert set(sizes) == set(range(8))
         assert max(sizes.values()) < 2 * min(sizes.values())
-
-    def test_write_layout_and_order(self, spark, tmp_path):
-        import os
-
-        from case_uco_ontology_map_spark.operators.sampling import (
-            shard_assignment,
-            write_training_shards,
-        )
-
-        df = spark.range(500).select(F.col("id").cast("string").alias("k"))
-        out = str(tmp_path / "shards")
-        write_training_shards(df, out, "k", 4)
-        dirs = sorted(
-            d for d in os.listdir(out) if d.startswith("shard=")
-        )
-        assert dirs == [f"shard={i}" for i in range(4)]
-        total = 0
-        for d in dirs:
-            files = [
-                f
-                for f in os.listdir(os.path.join(out, d))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, f"{d} must hold exactly one file"
-            got = spark.read.parquet(os.path.join(out, d)).collect()
-            total += len(got)
-            # file order IS the shard order (read back without sorting)
-            orders = [r.shard_order for r in got]
-            assert orders == sorted(orders)
-        assert total == 500
-        # round-trip: the written assignment matches the formula
-        back = spark.read.parquet(out)
-        want = {
-            (r.k, r.shard)
-            for r in shard_assignment(df, "k", 4).select(
-                "k", "shard"
-            ).collect()
-        }
-        assert {(r.k, int(r.shard)) for r in back.collect()} == want
 
     def test_guard(self, spark):
         from case_uco_ontology_map_spark.operators.sampling import (

@@ -131,59 +131,6 @@ class TestTripleStore:
         assert sorted(r.obj for r in hits) == ["kb:new", "kb:o6"]
         shutil.rmtree(path, ignore_errors=True)
 
-    def test_compact_rewrites_only_hot_leaves(self, spark, tmp_path):
-        """Two appends create multi-file leaves; compaction rewrites
-        ONLY those (dynamic partition overwrite), restores one file per
-        leaf, keeps the data identical, and is a no-op when re-run."""
-        import pathlib
-
-        from case_uco_ontology_map_spark.operators.triplestore import (
-            compact_triple_store,
-        )
-
-        df = spark.createDataFrame(ROWS, SCHEMA)
-        path = str(tmp_path / "store-compact")
-        write_triple_store(df, path, subj_buckets=4)
-        delta = spark.createDataFrame(
-            [
-                ("kb:s1", "ex:ref", "kb:new", True, None),
-                ("kb:s2", "rdf:type", "ex:T", True, None),
-            ],
-            SCHEMA,
-        )
-        write_triple_store(delta, path, subj_buckets=4, mode="append")
-        write_triple_store(delta, path, subj_buckets=4, mode="append")
-        before = sorted(
-            map(
-                tuple,
-                read_triple_store(spark, path).drop("sbkt").collect(),
-            )
-        )
-        res = compact_triple_store(spark, path)
-        assert res["compacted_leaves"] == 2
-        assert res["files_after"] < res["files_before"]
-        after = sorted(
-            map(
-                tuple,
-                read_triple_store(spark, path).drop("sbkt").collect(),
-            )
-        )
-        assert before == after
-        leaves = [
-            p
-            for p in pathlib.Path(path).glob("pred=*/sbkt=*")
-            if p.is_dir()
-        ]
-        assert leaves and all(
-            len(list(p.glob("*.parquet"))) == 1 for p in leaves
-        )
-        assert compact_triple_store(spark, path) == {
-            "compacted_leaves": 0,
-            "files_before": res["files_after"],
-            "files_after": res["files_after"],
-        }
-        shutil.rmtree(path, ignore_errors=True)
-
     def test_one_file_per_leaf(self, spark, store, tmp_path):
         import pathlib
 

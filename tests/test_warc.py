@@ -12,12 +12,46 @@ from case_uco_ontology_map_spark.refmap.extract import (
     render_html,
 )
 from case_uco_ontology_map_spark.sources.warc import (
-    http_response_bytes,
     read_warc,
+    read_warc_documents,
     split_http_payload,
     warc_record_bytes,
-    warc_to_documents,
 )
+
+
+def http_response_bytes(
+    body: bytes,
+    status: int = 200,
+    content_type: str = "text/html; charset=utf-8",
+) -> bytes:
+    """An HTTP/1.1 response envelope around ``body`` — what a crawl's
+    ``response`` record payload looks like on the wire."""
+    head = (
+        f"HTTP/1.1 {status} OK\r\n"
+        f"Content-Type: {content_type}\r\n"
+        f"Content-Length: {len(body)}\r\n\r\n"
+    ).encode()
+    return head + body
+
+
+def _warc_documents_reference(spark, path):
+    """Driver-side reference for ``read_warc_documents``: ``read_warc``'s
+    response records that carry a url, HTTP envelope stripped, body
+    decoded UTF-8 with replacement (the decode rule of refmap/extract.py),
+    as sorted ``(url, fetched_at, status, content_type, html)`` tuples."""
+    out = []
+    for r in read_warc(spark, path).collect():
+        if r.warc_type != "response" or r.url is None:
+            continue
+        status, ctype, body = split_http_payload(bytes(r.payload))
+        out.append((
+            r.url,
+            r.warc_date,
+            status,
+            ctype,
+            body.decode("utf-8", errors="replace"),
+        ))
+    return sorted(out)
 
 
 def _archive_bytes():
@@ -115,7 +149,7 @@ def test_warc_to_documents_and_extract_parity(spark, tmp_path):
     recs, html = _archive_bytes()
     p = tmp_path / "x.warc"
     p.write_bytes(b"".join(recs))
-    docs = warc_to_documents(read_warc(spark, str(p))).collect()
+    docs = read_warc_documents(spark, str(p)).collect()
     # responses only — warcinfo/request never reach the document frame
     assert {r.url for r in docs} == {
         "http://example.test/a", "http://example.test/b"
@@ -153,8 +187,8 @@ def test_write_warc_roundtrip(spark, tmp_path):
 
 
 def test_documents_to_warc_end_to_end(spark, tmp_path, sf_dir):
-    """web corpus → JVM-side response records → write_warc → read_warc →
-    warc_to_documents recovers every url with the exact html body."""
+    """web corpus → JVM-side response records → write_warc →
+    read_warc_documents recovers every url with the exact html body."""
     from case_uco_ontology_map_spark.sources.corpus import web_corpus
     from case_uco_ontology_map_spark.sources.warc import (
         documents_to_warc,
@@ -171,9 +205,9 @@ def test_documents_to_warc_end_to_end(spark, tmp_path, sf_dir):
     rec_frame = documents_to_warc(docs)
     out = tmp_path / "export"
     write_warc(rec_frame, str(out))
-    back = warc_to_documents(read_warc(spark, str(out / "*.warc.gz")))
+    back = read_warc_documents(spark, str(out / "*.warc.gz"))
     # the corpus html column is binary (byte-exact extraction contract);
-    # warc_to_documents lands it as the same UTF-8 decode
+    # read_warc_documents lands it as the same UTF-8 decode
     want = {
         (r.url, bytes(r.html).decode("utf-8")) for r in docs.collect()
     }
@@ -228,90 +262,12 @@ def test_cdx_index(spark, tmp_path):
     assert bare.urlkey == "org,example)/"
 
 
-def test_read_warc_stream_incremental(spark, tmp_path):
-    """Continuous crawl ingestion: a second archive landing after the
-    first pass is picked up incrementally by the file-source checkpoint,
-    and the record union equals the batch read."""
-    from case_uco_ontology_map_spark.sources.warc import read_warc_stream
-
-    recs, _ = _archive_bytes()
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "seg-0.warc").write_bytes(b"".join(recs[:2]))
-
-    stream = read_warc_stream(spark, str(src))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("warc_stream")
-        .option(
-            "checkpointLocation", str(tmp_path / "ckpt")
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = spark.sql(
-            "select record_id from warc_stream"
-        ).collect()
-        assert {r.record_id for r in first} == {"rec-0", "rec-1"}
-
-        (src / "seg-1.warc").write_bytes(b"".join(recs[2:]))
-        q.processAllAvailable()
-        key = ["record_id", "warc_type", "url", "payload"]
-        got = sorted(map(tuple, spark.sql(
-            "select record_id, warc_type, url, payload from warc_stream"
-        ).collect()))
-    finally:
-        q.stop()
-    want = sorted(
-        map(tuple, read_warc(spark, str(src)).select(*key).collect())
-    )
-    assert got == want and len(got) == 4
-
-
 def test_split_http_payload_edge_cases():
     # no envelope: body passes through
     assert split_http_payload(b"raw") == (None, None, b"raw")
     # unparseable status line: body still recovered
     s, c, b = split_http_payload(b"HTTP/1.1\r\nContent-Type: t/x\r\n\r\nB")
     assert (s, c, b) == (None, "t/x", b"B")
-
-
-def test_wet_roundtrip_and_mixed_archive(spark, tmp_path):
-    from case_uco_ontology_map_spark.sources.warc import (
-        documents_to_wet,
-        wet_to_documents,
-        write_warc,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            ("http://e.test/a", "2026-02-01T00:00:00Z", "hello wet ä ✓"),
-            ("http://e.test/b", "2026-02-02T00:00:00Z", "second doc"),
-        ],
-        "url string, fetched string, text string",
-    )
-    wet = documents_to_wet(docs, ts_col="fetched")
-    out = tmp_path / "wet"
-    write_warc(wet.repartition(1), str(out))
-    back = read_warc(spark, str(out / "*.warc.gz"))
-    # conversion records carry the bare text, no HTTP envelope
-    got = sorted(
-        (r.url, r.fetched_at, r.text)
-        for r in wet_to_documents(back).collect()
-    )
-    assert got == [
-        ("http://e.test/a", "2026-02-01T00:00:00Z", "hello wet ä ✓"),
-        ("http://e.test/b", "2026-02-02T00:00:00Z", "second doc"),
-    ]
-    # a mixed archive: response records are invisible to the WET reader
-    recs, _ = _archive_bytes()
-    p = tmp_path / "mixed.warc"
-    p.write_bytes(b"".join(recs))
-    mixed = read_warc(spark, str(p))
-    assert wet_to_documents(mixed).count() == 0
-    # and the WET frame round-trips through the same record schema
-    assert set(wet.columns) <= set(back.columns)
 
 
 def test_cdx_delta_statuses(spark):
@@ -338,31 +294,23 @@ def test_cdx_delta_statuses(spark):
 
 
 def test_read_warc_documents_fused_equals_two_stage(spark, tmp_path):
-    """The fused single-crossing reader must equal
-    warc_to_documents(read_warc(...)) row-for-row — including the chunk
-    boundary path (chunk_records=2)."""
-    from case_uco_ontology_map_spark.sources.warc import (
-        read_warc_documents,
-    )
-
+    """The fused single-crossing reader must equal the record-level
+    reference over read_warc row-for-row — including the chunk boundary
+    path (chunk_records=2)."""
     recs, _ = _archive_bytes()
     # two files, one gzipped per-member, one plain
     (tmp_path / "a.warc").write_bytes(b"".join(recs))
     (tmp_path / "b.warc.gz").write_bytes(
         b"".join(gzip.compress(r, mtime=0) for r in recs)
     )
-    two_stage = warc_to_documents(
-        read_warc(spark, str(tmp_path / "*.warc*"))
-    )
     fused = read_warc_documents(
         spark, str(tmp_path / "*.warc*"), chunk_records=2
     )
-    key = lambda df: sorted(
+    rows = sorted(
         (r.url, r.fetched_at, r.status, r.content_type, r.html)
-        for r in df.collect()
+        for r in fused.collect()
     )
-    rows = key(fused)
-    assert rows == key(two_stage)
+    assert rows == _warc_documents_reference(spark, str(tmp_path / "*.warc*"))
     assert len(rows) == 4  # 2 responses per file; others filtered
 
 
