@@ -4,11 +4,20 @@ exact-fingerprint-only dedup, /root/reference/agents/uuid_planner.py:229-241).
 
 Pipeline:
   entity keys → minhash over char-3-gram shingles (JVM xxhash64) →
-  banded LSH self-join (candidate edges) →
-  connected components via alternating large-star/small-star DataFrame
-  iterations (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", SOCC'14 — converges in O(log n) rounds) →
-  canonical id = min member id per component (stable across runs).
+  banded LSH self-join (candidate edges) → exact-Jaccard verify →
+  connected components → canonical id = min member id per component
+  (stable across runs).
+
+Connected components has two paths, picked by the verified edge count
+observed on the edge set's own checkpoint job:
+  * up to ``_DRIVER_EDGES`` (2^20) edges, one Arrow collect and a
+    vectorized numpy union-find on the driver (16 MB of int64 ids; the
+    per-round Spark jobs of the contraction cost far more than the
+    labelling itself at that size);
+  * above it, alternating large-star/small-star DataFrame rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SOCC'14 — converges in O(log n) rounds).
+Both return the same min-id labels.
 
 Skew handling (explicit, per north_rule):
   * LSH buckets are hash values → uniformly distributed; degenerate hot
@@ -17,12 +26,12 @@ Skew handling (explicit, per north_rule):
     silent: pass ``observation=dedup.drop_observation()`` (threaded through
     candidate_edges/canonicalize_entities) and the same job that builds the
     candidate pairs reports (dropped_buckets, dropped_members).
-  * The CC min-computation is a groupBy-min (map-side partial combine, so a
-    hot node's degree never concentrates in one task) re-joined to the
-    symmetric edge list — AQE skew-join splits an oversized join partition
-    at runtime, and large-star itself is the skew *reducer*: after one
-    round every high-degree node's neighbors point at the component min,
-    collapsing hub fan-out.
+  * The CC round min-computation is a groupBy-min (map-side partial
+    combine, so a hot node's degree never concentrates in one task)
+    re-joined to the symmetric edge list — AQE skew-join splits an
+    oversized join partition at runtime, and large-star itself is the
+    skew *reducer*: after one round every high-degree node's neighbors
+    point at the component min, collapsing hub fan-out.
   * checkpointing every round truncates the lineage (iterative joins
     otherwise stack exponentially deep plans).
 """
@@ -35,6 +44,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .barrier import materialize, release
 
@@ -294,17 +304,80 @@ def _fingerprint_metrics():
     ]
 
 
+#: Edge sets up to this many rows are labelled on the driver. 2^20 edges
+#: of int64 ids are 16 MB of Arrow, and ``_label_on_driver`` labels them
+#: in 0.14-0.89 s (star, chain, random and shuffled chain graphs on a
+#: 4-core host), while each alternating star round costs ~8 Spark jobs
+#: whose scheduling, not their data, dominates at that size.
+_DRIVER_EDGES = 1 << 20
+
+
+def _min_roots(k: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Union-find over ``k`` dense node ranks and the edges ``a[i]–b[i]``:
+    returns each node's root, the smallest rank of its component. Every
+    pass hooks the larger root of each cross-tree edge under the smallest
+    root it meets (``np.minimum.at``), then pointer-jumps every node to
+    its root; roots only ever decrease, so the forest stays acyclic, and
+    each pass at least halves the trees still joined by an edge."""
+    parent = np.arange(k)
+    while True:
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            return parent
+        a, b, ra, rb = a[cross], b[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _label_on_driver(table):
+    """Arrow ``(src, dst)`` edges → Arrow ``(id, component)``, component =
+    min id of the component. Ids are dense-ranked by Arrow's sort order,
+    which is Spark's for longs and (UTF-8 byte order) strings, so the
+    smallest rank is the smallest id. A null id ranks last and keeps one
+    ``(null, null)`` row; an edge with a null end adds its other node but
+    no connectivity — as in the rounds, where ``greatest``/``least`` turn
+    it into a self-loop."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = pa.chunked_array(
+        table["src"].chunks + table["dst"].chunks, table.schema.field("src").type
+    )
+    rank = pc.rank(ids, tiebreaker="dense").to_numpy().astype(np.int64) - 1
+    k = int(rank.max()) + 1 if rank.size else 0
+    first = np.empty(k, np.int64)
+    first[rank] = np.arange(rank.size)
+    uniq = ids.take(first)
+    a, b = rank[: table.num_rows], rank[table.num_rows :]
+    if ids.null_count:
+        keep = (a != k - 1) & (b != k - 1)
+        a, b = a[keep], b[keep]
+    return pa.table({"id": uniq, "component": uniq.take(_min_roots(k, a, b))})
+
+
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
 ) -> DataFrame:
     """(src, dst) edges → (id, component) with component = min reachable id.
 
-    True alternating large-star / small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SOCC'14): each round
-    halves the longest root-path, so convergence is O(log d) rounds in the
-    component diameter d — a 10^6-long chain converges in ~20 rounds where
-    plain min-label propagation would need 10^6. Each round is two
+    The edge set is checkpointed once, and that job also counts it. Up to
+    ``_DRIVER_EDGES`` edges (2^20: 16 MB of int64 ids, labelled in well
+    under a second) are collected in one ``toArrow`` and labelled on the
+    driver by ``_label_on_driver``; the result is a local relation and
+    the checkpoint is released, so this path leaves no persisted blocks.
+
+    Only above the bound do the rounds run: true alternating large-star /
+    small-star contraction (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SOCC'14): each round halves the longest
+    root-path, so convergence is O(log d) rounds in the component
+    diameter d — a 10^6-long chain converges in ~20 rounds where plain
+    min-label propagation would need 10^6. Each round is two
     groupBy-min aggregates, two AQE-managed joins back, and two output
     distincts (the mins⋈edges joins broadcast when the node-min side is
     small, skew-split when a partition oversizes — see _large_star); a
@@ -322,15 +395,25 @@ def connected_components(
     # pairs from it: both derivations need a full pass, and without this
     # the (possibly expensive) upstream chain — in canonicalize_entities
     # that is the whole signature → LSH → verify pipeline — executed
-    # TWICE (measured ~5 s per extra pass at bench scale)
-    edges, _ = materialize(edges)
+    # TWICE (measured ~5 s per extra pass at bench scale). The same job
+    # counts the edges, which picks the path.
+    edges, (n_edges,) = materialize(edges, F.count(F.lit(1)))
+    ids = edges.select(F.col("src").alias("id")).union(
+        edges.select(F.col("dst").alias("id"))
+    )
+    if n_edges <= _DRIVER_EDGES:
+        # the union's id field: the rounds' output types and nullability
+        field = ids.schema["id"]
+        t = field.dataType
+        table = edges.select(F.col("src").cast(t), F.col("dst").cast(t)).toArrow()
+        release(edges)
+        return edges.sparkSession.createDataFrame(
+            _label_on_driver(table),
+            StructType([field, StructField("component", t, field.nullable)]),
+        )
     # canonical undirected pair set, self-loops dropped (they only add
     # nodes, handled below); node universe preserved from the raw input
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    nodes = ids.distinct()
     pairs = (
         edges.select(
             F.greatest("src", "dst").alias("a"), F.least("src", "dst").alias("b")

@@ -21,7 +21,7 @@ hashing):
    skew splitting on a pathological corpus);
 4. overlapping/adjacent duplicated windows merge into maximal spans with
    ONE per-doc window pass (the same gap-merge recurrence as
-   streaming/ingest.event_sessionization) — per-doc partitions bound the
+   streaming/ingest.sessionize) — per-doc partitions bound the
    sort.
 
 The gram stream is recomputed for step 3 rather than cached: it is one

@@ -387,13 +387,15 @@ def sameas_smush(
     the rewrite consumed).
 
     Composition, not new machinery: the equivalence classes come from
-    ``canonicalize.connected_components`` (alternating-star contraction,
-    O(log diameter) rounds — a 10^6-long sameAs chain converges in ~20)
-    and the rewrite is ``rewrite_canonical`` (broadcast alias map,
-    literals guarded by ``obj_is_iri_col``). Scale shape: the sameAs
-    subset is tiny relative to the triple table (dup fraction ×
-    entities), so CC runs on the small frame and the rewrite broadcasts;
-    the only full-table shuffle is the final distinct.
+    ``canonicalize.connected_components`` (up to 2^20 sameAs links, one
+    Arrow collect and a union-find on the driver; above that,
+    alternating-star contraction in O(log diameter) rounds, with
+    ``max_iterations`` bounding them) and the rewrite is
+    ``rewrite_canonical`` (broadcast alias map, literals guarded by
+    ``obj_is_iri_col``). Scale shape: the sameAs subset is tiny relative
+    to the triple table (dup fraction × entities), so CC usually labels
+    it on the driver and the rewrite broadcasts; the only full-table
+    shuffle is the final distinct.
     """
     from .canonicalize import connected_components
 

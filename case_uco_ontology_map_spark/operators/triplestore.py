@@ -112,9 +112,8 @@ def write_triple_store(
     path: str,
     subj_buckets: int = 8,
     hash_mode: str = "md5_60",
-    mode: str = "overwrite",
 ) -> str:
-    """Write the vertically-partitioned store. House sink rule:
+    """Write (overwrite) the vertically-partitioned store. House sink rule:
     repartition on the partition columns BEFORE ``partitionBy`` so each
     (pred, sbkt) leaf is written by exactly one task — without it every
     task writes a sliver of every leaf and the store is
@@ -129,7 +128,7 @@ def write_triple_store(
     )
     (
         staged.repartition(F.col("pred"), F.col("sbkt"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("pred", "sbkt")
         .parquet(path)
     )

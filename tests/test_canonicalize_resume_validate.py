@@ -2,6 +2,8 @@
 SHACL-lite validation."""
 
 import os
+import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,13 +36,21 @@ def test_connected_components_large_chain(spark):
     assert comps == {0}
 
 
+def _cc_rounds(edges, **kw):
+    """connected_components forced onto the star rounds (no edge set is
+    small enough for the driver labelling)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(canonicalize, "_DRIVER_EDGES", -1)
+        return canonicalize.connected_components(edges, **kw)
+
+
 def test_connected_components_log_rounds(spark):
     # a 200-chain must converge well within 10 alternating rounds —
     # this is the O(log diameter) guarantee the docstring claims
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "src long, dst long"
     )
-    out = canonicalize.connected_components(edges, max_iterations=10)
+    out = _cc_rounds(edges, max_iterations=10)
     rows = out.collect()
     assert len(rows) == 201
     assert {r["component"] for r in rows} == {0}
@@ -53,7 +63,7 @@ def test_connected_components_raises_on_exhaustion(spark):
         [(i, i + 1) for i in range(100)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        canonicalize.connected_components(edges, max_iterations=1)
+        _cc_rounds(edges, max_iterations=1)
 
 
 def test_connected_components_self_loops_and_dups(spark):
@@ -64,6 +74,86 @@ def test_connected_components_self_loops_and_dups(spark):
     )
     out = {r["id"]: r["component"] for r in canonicalize.connected_components(edges).collect()}
     assert out == {1: 1, 2: 1, 5: 5, 7: 7}
+
+
+def _shuffled_chain(n, seed):
+    rng = random.Random(seed)
+    ids = rng.sample(range(10_000, 20_000), n)
+    edges = [
+        (a, b) if rng.random() < 0.5 else (b, a) for a, b in zip(ids, ids[1:])
+    ]
+    rng.shuffle(edges)
+    return edges
+
+
+def _random_graph(n, m, seed):
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+# name → (edges, schema): inputs the driver labelling must label exactly
+# as the star rounds do
+_CC_PARITY_INPUTS = {
+    "chain": ([(i, i + 1) for i in range(300)], "src long, dst long"),
+    "shuffled_chain": (_shuffled_chain(300, 7), "src long, dst long"),
+    "star": (
+        [(50, i) for i in range(100) if i != 50] + [(200, 201)],
+        "src long, dst long",
+    ),
+    "random": (_random_graph(300, 220, 3), "src long, dst long"),
+    "loops_dups_reversed": (
+        [(5, 5), (1, 2), (2, 1), (1, 2), (7, 7), (3, 1), (-4, 3), (3, -4)],
+        "src long, dst long",
+    ),
+    # UTF-8 byte order, not UTF-16 order: U+FF21 sorts below U+1F600, and
+    # 'z' below 'é'
+    "non_ascii_iris": (
+        [
+            ("urn:x:\uff21", "urn:x:\U0001F600"),
+            ("urn:x:é", "urn:x:z"),
+            ("urn:x:Ω", "urn:x:é"),
+            ("urn:x:A", "urn:x:a"),
+            ("urn:x:ß", "urn:x:ß"),
+        ],
+        "src string, dst string",
+    ),
+    "empty": ([], "src long, dst long"),
+    "one_null": ([(1, 2), (3, None), (2, 4)], "src long, dst long"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CC_PARITY_INPUTS))
+def test_connected_components_driver_equals_rounds(spark, name):
+    """Labelling on the driver returns the rows and schema the star rounds
+    return: same min-id components, same node set (self-loop-only and
+    null ids included), same column types."""
+    data, schema = _CC_PARITY_INPUTS[name]
+    edges = spark.createDataFrame(data, schema)
+    driver = canonicalize.connected_components(edges)
+    rounds = _cc_rounds(edges)
+    assert driver.schema == rounds.schema
+    assert Counter(map(tuple, driver.collect())) == Counter(
+        map(tuple, rounds.collect())
+    )
+
+
+def test_connected_components_small_graph_job_count(spark):
+    """A driver-sized edge set costs two Spark jobs: the counted edge
+    checkpoint and one Arrow collect — no per-round jobs."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (5, 6)], "src long, dst long"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_small_graph", "connected_components, 6 nodes")
+    try:
+        out = canonicalize.connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("cc_small_graph")
+    assert len(jobs) <= 2, len(jobs)
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 4)
+    ]
 
 
 def _chain(spark, n):
@@ -83,6 +173,33 @@ def _seeds(spark):
     return spark.createDataFrame([(0,)], "node long")
 
 
+def _key(group):
+    # distinct hex keys per group, so only same-group entities pair up
+    return f"{group * 2654435761 % (1 << 32):08x} holdings"
+
+
+def _entities(spark, n):
+    # n entities in two-member groups of identical keys
+    return spark.createDataFrame(
+        [(i, _key(i // 2)) for i in range(n)],
+        "entity_id long, entity_key string",
+    )
+
+
+def _fold(spark, n):
+    # prior: the two-member groups, canonical id = the smaller member;
+    # delta: one new member for each of the first n // 4 groups
+    prior = spark.createDataFrame(
+        [(i, _key(i // 2), i - i % 2) for i in range(n)],
+        "entity_id long, entity_key string, canonical_id long",
+    )
+    new = spark.createDataFrame(
+        [(n + g, _key(g)) for g in range(n // 4)],
+        "entity_id long, entity_key string",
+    )
+    return canonicalize.canonicalize_incremental(prior, new)
+
+
 def _graphstats(name):
     from case_uco_ontology_map_spark.operators import graphstats
 
@@ -93,9 +210,14 @@ def _graphstats(name):
 # the fixed-round operators, chain lengths for the fixpoint ones
 _ITERATIVE_OPERATORS = {
     "connected_components": (
-        lambda spark, n: canonicalize.connected_components(_chain(spark, n)),
+        lambda spark, n: _cc_rounds(_chain(spark, n)),
         6, 40,
     ),
+    "canonicalize_entities": (
+        lambda spark, n: canonicalize.canonicalize_entities(_entities(spark, n)),
+        8, 40,
+    ),
+    "canonicalize_incremental": (_fold, 8, 40),
     "pagerank": (
         lambda spark, n: _graphstats("pagerank")(_small_graph(spark), n),
         2, 6,
@@ -138,8 +260,9 @@ _ITERATIVE_OPERATORS = {
 def test_iterative_operators_reclaim_round_blocks(spark, name):
     """An iterative operator must not leak one materialized copy per
     round into the block manager: after a call and a collect, only the
-    blocks the RETURNED frame still reads may remain (at most two: CC's
-    node set and final round, HITS's two half-steps), so a short and a
+    blocks the RETURNED frame still reads may remain (at most two: the
+    CC rounds' node set and final round, HITS's two half-steps, the
+    fold's verified edge set), so a short and a
     long run leave the same number of persisted RDDs behind. Nor may it
     release a block the result still reads: the result collects again
     after a JVM garbage collection."""

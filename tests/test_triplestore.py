@@ -111,26 +111,6 @@ class TestTripleStore:
         )
         assert any("ex:name" in p for p in pfs)
 
-    def test_append_day_merges_into_layout(self, spark, tmp_path):
-        """The nightly path: append a delta day with mode='append' —
-        read-back equals the union, and the delta's rows land in the
-        SAME (pred, sbkt) leaves (a point lookup still prunes to one
-        bucket and sees both days)."""
-        df = spark.createDataFrame(ROWS, SCHEMA)
-        delta = spark.createDataFrame(
-            [("kb:s13", "ex:ref", "kb:new", True, None)], SCHEMA
-        )
-        path = str(tmp_path / "store-incr")
-        write_triple_store(df, path, subj_buckets=4)
-        write_triple_store(delta, path, subj_buckets=4, mode="append")
-        back = read_triple_store(spark, path)
-        assert back.count() == len(ROWS) + 1
-        hits = scan_pattern(
-            back, pred="ex:ref", subj="kb:s13", subj_buckets=4
-        ).collect()
-        assert sorted(r.obj for r in hits) == ["kb:new", "kb:o6"]
-        shutil.rmtree(path, ignore_errors=True)
-
     def test_one_file_per_leaf(self, spark, store, tmp_path):
         import pathlib
 
